@@ -142,12 +142,12 @@ final class WriteGen(seed: Long, salt: Long, var parts: Int, newPartitionShare: 
 /** `cql_read`'s timed ops: a fixed cycle of 20 with 12 slice reads, 6 group
   * reads and 2 prepared writes. Slices and groups keep a 2:1 ratio in every
   * window of a few reads, so a run's short read sample always has the same
-  * make-up.
+  * make-up. The salt picks another sequence of keys over the same table.
   */
-final class ReadPlan(seed: Long, parts: Int) extends Iterator[Op] {
+final class ReadPlan(seed: Long, parts: Int, salt: Long = 0x52) extends Iterator[Op] {
   import Op._
   private val cycle = "SSGWSSGSSGSSGWSSGSSG"
-  private val rng = new SplittableRandom(Keys.mix(seed, 0x52))
+  private val rng = new SplittableRandom(Keys.mix(seed, salt))
   private val writes = new WriteGen(seed, 0x57, parts, newPartitionShare = 0.0)
   private var n = 0L
 
