@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.{Functions => F, Uda}
 import graft.operators._
+import graft.operators.Similarity.{AnnIndex, Quantizer}
 import graft.sources.{Archives, Docx, Epub}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -277,10 +278,6 @@ object Queries {
     * fifth doc (exercising the dangling-mass term). The Verify replica
     * (_fixture_pagerank) re-derives the same graph from doc_ids alone.
     */
-  /** Exposed for the ProfilePagerank dev tool only. */
-  private[graft] def plantedLinkPagesForProfiling(s: SparkSession, d: String): DataFrame =
-    plantedLinkPages(s, d)
-
   private def plantedLinkPages(s: SparkSession, d: String): DataFrame = {
     val did = col("doc_id")
     Tables.spread(t(s, d, "documents")).select(
@@ -2271,11 +2268,10 @@ object Queries {
         prep(s)
         val emb = t(s, d, "embeddings")
         val dir = tmpDir("graft-ivf-filt")
-        Similarity.ivfTrain(s, emb, nlist = 16, iters = 1,
+        AnnIndex.train(s, emb, nlist = 16, iters = 1,
           keep = Seq("label")).save(dir.toString)
-        val idx = Similarity.ivfLoad(s, dir.toString)
-        Similarity.ivfSearchWhere(idx, emb.filter(col("vec_id") < 8), 10,
-            col("label") === 1, nprobe = 16)
+        AnnIndex.load(s, dir.toString).search(emb.filter(col("vec_id") < 8), 10,
+            nprobe = 16, predicate = Some(col("label") === 1))
           .select("query_id", "neighbor_id", "sim", "rnk")
           .orderBy("query_id", "rnk")
       }),
@@ -2378,9 +2374,8 @@ object Queries {
         prep(s)
         val emb = t(s, d, "embeddings")
         val dir = tmpDir("graft-knnj")
-        Similarity.ivfTrain(s, emb, nlist = 16, iters = 1).save(dir.toString)
-        val idx = Similarity.ivfLoad(s, dir.toString)
-        Similarity.ivfKnnJoin(idx, emb, k = 5, nprobe = 4, salt = 2)
+        AnnIndex.train(s, emb, nlist = 16, iters = 1).save(dir.toString)
+        AnnIndex.load(s, dir.toString).knnJoin(emb, k = 5, nprobe = 4, salt = 2)
           .select("query_id", "neighbor_id", "sim", "rnk")
           .orderBy("query_id", "rnk")
       }),
@@ -2402,9 +2397,8 @@ object Queries {
         prep(s)
         val emb = t(s, d, "embeddings")
         val dir = tmpDir("graft-ivf")
-        Similarity.ivfTrain(s, emb, nlist = 16, iters = 1).save(dir.toString)
-        val idx = Similarity.ivfLoad(s, dir.toString)
-        Similarity.ivfSearch(idx, emb.filter(col("vec_id") < 8), 10)
+        AnnIndex.train(s, emb, nlist = 16, iters = 1).save(dir.toString)
+        AnnIndex.load(s, dir.toString).search(emb.filter(col("vec_id") < 8), 10)
           .select("query_id", "neighbor_id", "sim", "rnk")
           .orderBy("query_id", "rnk")
       }),
@@ -2430,16 +2424,16 @@ object Queries {
         prep(s)
         val emb = t(s, d, "embeddings")
         val dir = tmpDir("graft-ivf-ex")
-        Similarity.ivfTrain(s, emb, nlist = 16, iters = 1).save(dir.toString)
-        val idx = Similarity.ivfLoad(s, dir.toString)
-        Similarity.ivfSearch(idx, emb.filter(col("vec_id") < 8), 10, nprobe = 16)
+        AnnIndex.train(s, emb, nlist = 16, iters = 1).save(dir.toString)
+        AnnIndex.load(s, dir.toString)
+          .search(emb.filter(col("vec_id") < 8), 10, nprobe = 16)
           .select("query_id", "neighbor_id", "sim", "rnk")
           .orderBy("query_id", "rnk")
       }),
 
     QueryDef("q_ann_ivf_append",
       // the INCREMENTAL-ingest IVF path: train+save on the first 400
-      // vectors, ivfAppend the rest against the saved centroids (no
+      // vectors, append the rest against the saved centroids (no
       // retrain — the steady-state crawl shape), then probe every list of
       // the appended index. Exhaustive probing is exact, so the result
       // must equal brute force over the UNION corpus bit-for-bit — which
@@ -2459,11 +2453,11 @@ object Queries {
         prep(s)
         val emb = t(s, d, "embeddings")
         val dir = tmpDir("graft-ivf-app")
-        Similarity.ivfTrain(s, emb.filter(col("vec_id") < 400), nlist = 16, iters = 1)
+        AnnIndex.train(s, emb.filter(col("vec_id") < 400), nlist = 16, iters = 1)
           .save(dir.toString)
-        Similarity.ivfAppend(s, dir.toString, emb.filter(col("vec_id") >= 400))
-        Similarity.ivfSearch(Similarity.ivfLoad(s, dir.toString),
-            emb.filter(col("vec_id") < 8), 10, nprobe = 16)
+        AnnIndex.append(s, dir.toString, emb.filter(col("vec_id") >= 400))
+        AnnIndex.load(s, dir.toString)
+          .search(emb.filter(col("vec_id") < 8), 10, nprobe = 16)
           .select("query_id", "neighbor_id", "sim", "rnk")
           .orderBy("query_id", "rnk")
       }),
@@ -2509,12 +2503,12 @@ object Queries {
         prep(s)
         val emb = t(s, d, "embeddings")
         val dir = tmpDir("graft-ivfpq")
-        Similarity.ivfPqTrain(s, emb, nlist = 16, m = 8, ksub = 16).save(dir.toString)
-        val idx = Similarity.ivfPqLoad(s, dir.toString)
+        AnnIndex.train(s, emb, Quantizer.PQ, nlist = 16, m = 8, ksub = 16)
+          .save(dir.toString)
         // exact re-rank tail (Jégou 2011 §VI): candidates come off the
         // pruned code table, only rerank×k true vectors are touched
-        Similarity.ivfPqSearchRerank(idx, emb.filter(col("vec_id") < 8), emb, 10,
-            nprobe = 4, rerank = 4)
+        AnnIndex.load(s, dir.toString).search(emb.filter(col("vec_id") < 8), 10,
+            nprobe = 4, corpus = Some(emb), rerank = 4)
           .select("query_id", "neighbor_id", "sim", "rnk")
           .orderBy("query_id", "rnk")
       }),
@@ -2532,11 +2526,10 @@ object Queries {
       (s, d) => {
         prep(s)
         val emb = t(s, d, "embeddings")
-        val cb = Similarity.pqTrain(emb, m = 8, ksub = 16)
         // exact re-rank tail: the code-table scan proposes 4×k candidates,
         // only those fetch true embeddings (Faiss IndexRefineFlat shape)
-        Similarity.pqSearchRerank(Similarity.pqEncode(emb, cb),
-            emb.filter(col("vec_id") < 8), emb, cb, 10)
+        AnnIndex.train(s, emb, Quantizer.PQ, m = 8, ksub = 16)
+          .search(emb.filter(col("vec_id") < 8), 10, corpus = Some(emb))
           .select("query_id", "neighbor_id", "sim", "rnk")
           .orderBy("query_id", "rnk")
       }),
@@ -2555,15 +2548,14 @@ object Queries {
         prep(s)
         val emb = t(s, d, "embeddings")
         val dir = tmpDir("graft-ivf-drift")
-        Similarity.ivfTrain(s, emb, nlist = 16, iters = 1).save(dir.toString)
-        val idx = Similarity.ivfLoad(s, dir.toString)
-        Similarity.ivfDriftStats(idx, emb.filter(col("vec_id") % 2 === 1))
+        AnnIndex.train(s, emb, nlist = 16, iters = 1).save(dir.toString)
+        AnnIndex.load(s, dir.toString).driftStats(emb.filter(col("vec_id") % 2 === 1))
           .orderBy("cid")
       }),
 
     QueryDef("q_ann_ivf_sq8_drift",
       // drift monitor for the COMPOSED index a steady-state crawl
-      // actually appends to (ivfSq8Append): index trains on the even-id
+      // actually appends to (AnnIndex.append): index trains on the even-id
       // half only, the odd half plays the ingest epoch — so both signals
       // move: per-list mean cosine to the assigned centroid AND
       // clamp_frac, the mean fraction of components outside the saved
@@ -2578,11 +2570,10 @@ object Queries {
         prep(s)
         val emb = t(s, d, "embeddings")
         val dir = tmpDir("graft-ivfsq8-drift")
-        Similarity.ivfSq8Train(s, emb.filter(col("vec_id") % 2 === 0),
+        AnnIndex.train(s, emb.filter(col("vec_id") % 2 === 0), Quantizer.SQ8,
             nlist = 16, iters = 1)
           .save(dir.toString)
-        val idx = Similarity.ivfSq8Load(s, dir.toString)
-        Similarity.ivfSq8DriftStats(idx, emb.filter(col("vec_id") % 2 === 1))
+        AnnIndex.load(s, dir.toString).driftStats(emb.filter(col("vec_id") % 2 === 1))
           .orderBy("cid")
       }),
 
@@ -2590,7 +2581,7 @@ object Queries {
       // the STREAMING face of the drift monitor, inside the oracle gate:
       // the odd-id ingest epoch splits into three deterministic
       // micro-batches (vec_id mod 6 ∈ {1, 3, 5}); each contributes one
-      // bounded ivfSq8DriftSums frame (exact counts + associative
+      // bounded driftSums frame (exact counts + associative
       // DECIMAL sums) and driftStatsFinalize divides ONCE over their
       // union. The oracle is the SAME fixture as q_ann_ivf_sq8_drift —
       // accumulated stream stats must be BIT-EQUAL to the one-shot batch
@@ -2603,12 +2594,12 @@ object Queries {
         prep(s)
         val emb = t(s, d, "embeddings")
         val dir = tmpDir("graft-drift-stream")
-        Similarity.ivfSq8Train(s, emb.filter(col("vec_id") % 2 === 0),
+        AnnIndex.train(s, emb.filter(col("vec_id") % 2 === 0), Quantizer.SQ8,
             nlist = 16, iters = 1)
           .save(dir.toString)
-        val idx = Similarity.ivfSq8Load(s, dir.toString)
+        val idx = AnnIndex.load(s, dir.toString)
         val sums = Seq(1, 3, 5).map(m =>
-            Similarity.ivfSq8DriftSums(idx, emb.filter(col("vec_id") % 6 === m)))
+            idx.driftSums(emb.filter(col("vec_id") % 6 === m)))
           .reduce(_ unionByName _)
         Similarity.driftStatsFinalize(sums).orderBy("cid")
       }),
@@ -2627,11 +2618,10 @@ object Queries {
         prep(s)
         val emb = t(s, d, "embeddings")
         val dir = tmpDir("graft-ivfpq-drift")
-        Similarity.ivfPqTrain(s, emb.filter(col("vec_id") % 2 === 0),
+        AnnIndex.train(s, emb.filter(col("vec_id") % 2 === 0), Quantizer.PQ,
             nlist = 16, m = 8, ksub = 16)
           .save(dir.toString)
-        val idx = Similarity.ivfPqLoad(s, dir.toString)
-        Similarity.ivfPqDriftStats(idx, emb.filter(col("vec_id") % 2 === 1))
+        AnnIndex.load(s, dir.toString).driftStats(emb.filter(col("vec_id") % 2 === 1))
           .orderBy("cid")
       }),
 
@@ -2648,11 +2638,10 @@ object Queries {
         prep(s)
         val emb = t(s, d, "embeddings")
         val dir = tmpDir("graft-ivfopq-drift")
-        Similarity.ivfOpqTrain(s, emb.filter(col("vec_id") % 2 === 0),
+        AnnIndex.train(s, emb.filter(col("vec_id") % 2 === 0), Quantizer.OPQ,
             nlist = 16, m = 8, ksub = 16)
           .save(dir.toString)
-        val idx = Similarity.ivfOpqLoad(s, dir.toString)
-        Similarity.ivfOpqDriftStats(idx, emb.filter(col("vec_id") % 2 === 1))
+        AnnIndex.load(s, dir.toString).driftStats(emb.filter(col("vec_id") % 2 === 1))
           .orderBy("cid")
       }),
 
@@ -2670,16 +2659,15 @@ object Queries {
       (s, d) => {
         prep(s)
         val emb = t(s, d, "embeddings")
-        val p = Similarity.sq8Train(emb)
-        Similarity.sq8SearchRerank(Similarity.sq8EncodeCorpus(emb, p),
-            emb.filter(col("vec_id") < 8), emb, p, 10)
+        AnnIndex.train(s, emb, Quantizer.SQ8)
+          .search(emb.filter(col("vec_id") < 8), 10, corpus = Some(emb))
           .select("query_id", "neighbor_id", "sim", "rnk")
           .orderBy("query_id", "rnk")
       }),
 
     QueryDef("q_ann_sq8_append",
       // the SQ8 steady-state path: save the bounds + a base code table,
-      // sq8Append the rest of the corpus (encode under SAVED bounds,
+      // append the rest of the corpus (encode under SAVED bounds,
       // append-only — no retrain, no rewrite), search through the LOADED
       // index. Bounds train on the full corpus here, so the appended
       // index must answer bit-identically to the from-scratch replica —
@@ -2690,14 +2678,12 @@ object Queries {
       (s, d) => {
         prep(s)
         val emb = t(s, d, "embeddings")
-        val p = Similarity.sq8Train(emb)
+        val full = AnnIndex.train(s, emb, Quantizer.SQ8)
         val dir = tmpDir("graft-sq8-app")
-        Similarity.sq8Save(s, p,
-          Similarity.sq8EncodeCorpus(emb.filter(col("vec_id") % 3 === 0), p),
-          dir.toString)
-        Similarity.sq8Append(s, dir.toString, emb.filter(col("vec_id") % 3 =!= 0))
-        val (p2, codes) = Similarity.sq8Load(s, dir.toString)
-        Similarity.sq8SearchRerank(codes, emb.filter(col("vec_id") < 8), emb, p2, 10)
+        full.copy(codes = full.codes.filter(col("vec_id") % 3 === 0)).save(dir.toString)
+        AnnIndex.append(s, dir.toString, emb.filter(col("vec_id") % 3 =!= 0))
+        AnnIndex.load(s, dir.toString)
+          .search(emb.filter(col("vec_id") < 8), 10, corpus = Some(emb))
           .select("query_id", "neighbor_id", "sim", "rnk")
           .orderBy("query_id", "rnk")
       }),
@@ -2708,7 +2694,7 @@ object Queries {
       // itself 4× smaller than the floats at much higher fidelity than
       // PQ — the production shape the flat q_ann_sq8 scan lacks at
       // 100 TB. Save→append→load exercises the steady-state artifact:
-      // a third of the corpus lands via ivfSq8Append (assigned to SAVED
+      // a third of the corpus lands via AnnIndex.append (assigned to SAVED
       // centroids, encoded under SAVED bounds) and must answer
       // bit-identically to a from-scratch build — the same plain-Scala
       // replica oracle either way, which is the point. Probe-pruned code
@@ -2721,14 +2707,11 @@ object Queries {
         prep(s)
         val emb = t(s, d, "embeddings")
         val dir = tmpDir("graft-ivfsq8")
-        val full = Similarity.ivfSq8Train(s, emb, nlist = 16, iters = 1)
-        Similarity.IvfSq8Index(full.centroids,
-            full.codes.filter(col("vec_id") % 3 === 0), full.p)
-          .save(dir.toString)
-        Similarity.ivfSq8Append(s, dir.toString, emb.filter(col("vec_id") % 3 =!= 0))
-        val idx = Similarity.ivfSq8Load(s, dir.toString)
-        Similarity.ivfSq8SearchRerank(idx, emb.filter(col("vec_id") < 8), emb, 10,
-            nprobe = 4, rerank = 4)
+        val full = AnnIndex.train(s, emb, Quantizer.SQ8, nlist = 16, iters = 1)
+        full.copy(codes = full.codes.filter(col("vec_id") % 3 === 0)).save(dir.toString)
+        AnnIndex.append(s, dir.toString, emb.filter(col("vec_id") % 3 =!= 0))
+        AnnIndex.load(s, dir.toString).search(emb.filter(col("vec_id") < 8), 10,
+            nprobe = 4, corpus = Some(emb), rerank = 4)
           .select("query_id", "neighbor_id", "sim", "rnk")
           .orderBy("query_id", "rnk")
       }),
@@ -2816,11 +2799,10 @@ object Queries {
         prep(s)
         val emb = t(s, d, "embeddings")
         val dir = tmpDir("graft-ivfopq")
-        Similarity.ivfOpqTrain(s, emb, nlist = 16, m = 8, ksub = 16)
+        AnnIndex.train(s, emb, Quantizer.OPQ, nlist = 16, m = 8, ksub = 16)
           .save(dir.toString)
-        val idx = Similarity.ivfOpqLoad(s, dir.toString)
-        Similarity.ivfOpqSearchRerank(idx, emb.filter(col("vec_id") < 8),
-            emb, 10, nprobe = 4, rerank = 4)
+        AnnIndex.load(s, dir.toString).search(emb.filter(col("vec_id") < 8), 10,
+            nprobe = 4, corpus = Some(emb), rerank = 4)
           .select("query_id", "neighbor_id", "sim", "rnk")
           .orderBy("query_id", "rnk")
       }),
@@ -2838,17 +2820,12 @@ object Queries {
       (s, d) => {
         prep(s)
         val emb = t(s, d, "embeddings")
-        val full = Similarity.ivfOpqTrain(s, emb, nlist = 16, m = 8, ksub = 16)
+        val full = AnnIndex.train(s, emb, Quantizer.OPQ, nlist = 16, m = 8, ksub = 16)
         val dir = tmpDir("graft-ivfopq-app")
-        Similarity.IvfOpqIndex(full.model,
-          Similarity.IvfPqIndex(full.inner.centroids,
-            full.inner.codes.filter(col("vec_id") % 3 === 0),
-            full.inner.cb)).save(dir.toString)
-        Similarity.ivfOpqAppend(s, dir.toString,
-          emb.filter(col("vec_id") % 3 =!= 0))
-        val idx = Similarity.ivfOpqLoad(s, dir.toString)
-        Similarity.ivfOpqSearchRerank(idx, emb.filter(col("vec_id") < 8),
-            emb, 10, nprobe = 4, rerank = 4)
+        full.copy(codes = full.codes.filter(col("vec_id") % 3 === 0)).save(dir.toString)
+        AnnIndex.append(s, dir.toString, emb.filter(col("vec_id") % 3 =!= 0))
+        AnnIndex.load(s, dir.toString).search(emb.filter(col("vec_id") < 8), 10,
+            nprobe = 4, corpus = Some(emb), rerank = 4)
           .select("query_id", "neighbor_id", "sim", "rnk")
           .orderBy("query_id", "rnk")
       }),
@@ -2856,12 +2833,12 @@ object Queries {
     QueryDef("q_ann_opq",
       // OPQ — rotation-optimized PQ (Faiss OPQMatrix / Ge et al.
       // CVPR'13): an orthogonal rotation trained by Lloyd/Procrustes
-      // alternation over the bounded pqTrain sample re-axes the space
+      // alternation over the bounded PQ training sample re-axes the space
       // before the subspace split, then encode/search ride the exact PQ
       // plan shapes with the rotation fused into each scan as the
       // codegen'd pca_project kernel (zero mean). Save→load exercises
-      // the one-directory artifact (6-dp rotation + codebooks): the
-      // search runs through a LOADED model and must answer identically.
+      // the one-directory artifact (6-dp rotation + codebooks + codes):
+      // the search runs through a LOADED index and must answer identically.
       // Oracle = Verify's independent replica (own Jacobi/SVD from the
       // pinned spec, own Lloyd, own rotation arithmetic).
       Some("""SELECT query_id, neighbor_id, sim, rnk
@@ -2871,13 +2848,10 @@ object Queries {
         prep(s)
         val emb = t(s, d, "embeddings")
         val dir = tmpDir("graft-opq")
-        Similarity.opqSave(s,
-          Similarity.opqTrain(emb, m = 8, ksub = 16, iters = 3, opqIters = 3),
-          dir.toString)
-        val model = Similarity.opqLoad(s, dir.toString)
-        val codes = Similarity.opqEncodeCorpus(emb, model)
-        Similarity.opqSearchRerank(codes, emb.filter(col("vec_id") < 8),
-            emb, model, 10)
+        AnnIndex.train(s, emb, Quantizer.OPQ, m = 8, ksub = 16, opqIters = 3)
+          .save(dir.toString)
+        AnnIndex.load(s, dir.toString)
+          .search(emb.filter(col("vec_id") < 8), 10, corpus = Some(emb))
           .select("query_id", "neighbor_id", "sim", "rnk")
           .orderBy("query_id", "rnk")
       }),
@@ -2909,35 +2883,29 @@ object Queries {
             .select(lit(method).as("method"), col("matched"), col("total"),
               round(col("matched") / col("total"), 6).as("recall"))
         val lsh = Similarity.lshTopK(emb, queries, 10)
-        val ivfDir = tmpDir("graft-ivf-rec")
-        Similarity.ivfTrain(s, emb, nlist = 16, iters = 1).save(ivfDir.toString)
-        val ivf = Similarity.ivfSearch(Similarity.ivfLoad(s, ivfDir.toString), queries, 10)
-        val ivfpqDir = tmpDir("graft-ivfpq-rec")
-        Similarity.ivfPqTrain(s, emb, nlist = 16, m = 8, ksub = 16).save(ivfpqDir.toString)
-        val ivfpq = Similarity.ivfPqSearchRerank(
-          Similarity.ivfPqLoad(s, ivfpqDir.toString), queries, emb, 10,
-          nprobe = 4, rerank = 4)
-        val cb = Similarity.pqTrain(emb, m = 8, ksub = 16)
-        val pq = Similarity.pqSearchRerank(Similarity.pqEncode(emb, cb),
-          queries, emb, cb, 10)
-        val sp = Similarity.sq8Train(emb)
-        val sq8 = Similarity.sq8SearchRerank(
-          Similarity.sq8EncodeCorpus(emb, sp), queries, emb, sp, 10)
-        val ivfSq8Dir = tmpDir("graft-ivfsq8-rec")
-        Similarity.ivfSq8Train(s, emb, nlist = 16, iters = 1).save(ivfSq8Dir.toString)
-        val ivfSq8 = Similarity.ivfSq8SearchRerank(
-          Similarity.ivfSq8Load(s, ivfSq8Dir.toString), queries, emb, 10,
-          nprobe = 4, rerank = 4)
+        // one saved index per method, searched through its LOADED form
+        def saved(name: String, kind: Similarity.QuantizerKind, nlist: Int) = {
+          val dir = tmpDir(s"graft-$name-rec").toString
+          AnnIndex.train(s, emb, kind, nlist = nlist, iters = 1).save(dir)
+          AnnIndex.load(s, dir)
+        }
+        val ivf = saved("ivf", Quantizer.Flat, 16).search(queries, 10)
+        val ivfpq = saved("ivfpq", Quantizer.PQ, 16)
+          .search(queries, 10, nprobe = 4, corpus = Some(emb), rerank = 4)
+        val pq = AnnIndex.train(s, emb, Quantizer.PQ)
+          .search(queries, 10, corpus = Some(emb))
+        val sq8 = AnnIndex.train(s, emb, Quantizer.SQ8)
+          .search(queries, 10, corpus = Some(emb))
+        val ivfSq8 = saved("ivfsq8", Quantizer.SQ8, 16)
+          .search(queries, 10, nprobe = 4, corpus = Some(emb), rerank = 4)
         val pm = Pca.pcaTrain(emb, outDim = 16)
         val pemb = Pca.pcaProject(emb, pm)
         val pca = Similarity.bruteForceTopK(pemb,
           pemb.filter(col("vec_id") < 8), 10)
-        val om = Similarity.opqTrain(emb, m = 8, ksub = 16)
-        val opq = Similarity.opqSearchRerank(
-          Similarity.opqEncodeCorpus(emb, om), queries, emb, om, 10)
-        val ivfOpq = Similarity.ivfOpqSearchRerank(
-          Similarity.ivfOpqTrain(s, emb, nlist = 16, m = 8, ksub = 16),
-          queries, emb, 10)
+        val opq = AnnIndex.train(s, emb, Quantizer.OPQ)
+          .search(queries, 10, corpus = Some(emb))
+        val ivfOpq = AnnIndex.train(s, emb, Quantizer.OPQ, nlist = 16)
+          .search(queries, 10, corpus = Some(emb))
         recallRow("ivf", ivf)
           .union(recallRow("ivf_opq", ivfOpq))
           .union(recallRow("ivf_sq8", ivfSq8))
@@ -4306,12 +4274,12 @@ object Queries {
         Similarity.inParallel(
           TextAnalysis.bm25IndexBuild(t(s, d, "documents"), "doc_id", "text",
             buckets = 16).save(bmDir.toString),
-          Similarity.ivfTrain(s, emb, nlist = 16, iters = 1).save(ivfDir.toString))
+          AnnIndex.train(s, emb, nlist = 16, iters = 1).save(ivfDir.toString))
         val sparse = TextAnalysis.bm25SearchIndex(
             TextAnalysis.bm25IndexLoad(s, bmDir.toString), terms, 10)
           .select(col("query_id"), col("doc_id"), col("rank"))
-        val dense = Similarity.ivfSearch(Similarity.ivfLoad(s, ivfDir.toString),
-            emb.filter(col("vec_id") < 3), 10, nprobe = 16)
+        val dense = AnnIndex.load(s, ivfDir.toString)
+          .search(emb.filter(col("vec_id") < 3), 10, nprobe = 16)
           .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rnk").as("rank"))
         TextAnalysis.rrfFuse(sparse, dense, "query_id", "doc_id", "rank", 10)
           .orderBy("query_id", "rank")

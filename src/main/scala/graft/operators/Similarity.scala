@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.Functions.cosine_sim
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -9,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, StructFiel
 /** Approximate-nearest-neighbor / similarity search over an embedding column
   * (`array<float>`).
   *
-  * Two paths:
+  * Three paths:
   *  - [[bruteForceTopK]] — exact baseline: broadcast the (small) query set,
   *    score every corpus vector with the codegen'd [[graft.functions.CosineSimilarity]]
   *    kernel, then a map-side partial top-k per input partition before the
@@ -20,6 +21,8 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, StructFiel
   *    candidate join on code chunks (multi-band), exact re-scoring of
   *    candidates only. Sub-linear candidate volume; recall tunable via
   *    bits/bands.
+  *  - [[AnnIndex]] — trained indexes: one [[Quantizer]] (identity, SQ8,
+  *    PQ, OPQ), optionally behind an IVF coarse partitioner.
   *
   * Ranking is by similarity rounded to 6dp with vec_id tie-break, making the
   * result set reproducible across engines and runs.
@@ -369,7 +372,7 @@ object Similarity {
       // runs and cluster sizes (and un-oracle-able). 2^24 scaling keeps ~7
       // significant digits per component, well inside the float cast that
       // follows. A cell that wins zero training vectors KEEPS its previous
-      // centroid (same rule as pqTrain) — dropping it would silently
+      // centroid (same rule as lloydSubBooks) — dropping it would silently
       // shrink nlist below what the caller asked for.
       val refined = assignedT
         .select(posexplode(col("embedding")).as(Seq("pos", "x")), col("cid"))
@@ -468,219 +471,6 @@ object Similarity {
       .drop("cluster_n")
   }
 
-  /** Persistent IVF index: the centroid header (nlist × dim — tiny,
-    * broadcastable) plus the inverted lists. [[save]] partitions the lists
-    * by `cid`, so a probe's scan prunes to the probed `lists/cid=K/`
-    * directories at the parquet level — a 100 TB corpus search reads only
-    * nprobe/nlist of the index, like a real IVF reads only probed posting
-    * lists.
-    */
-  final case class IvfIndex(centroids: DataFrame, assigned: DataFrame) {
-    def save(dir: String): Unit =
-      saveCentroidsAndLists(centroids, assigned, dir, "lists")
-  }
-
-  /** Shared on-disk layout for IVF-family indexes: a centroid header plus
-    * a cid-partitioned payload directory (the pruning structure both
-    * loaders rely on — change it here and in both loads together).
-    */
-  private def saveCentroidsAndLists(centroids: DataFrame, payload: DataFrame,
-                                    dir: String, listsName: String): Unit = {
-    // same-JVM loads skip the footer-inference job (SchemaCache)
-    graft.SchemaCache.noteWrite(s"$dir/centroids", centroids.schema)
-    graft.SchemaCache.noteWrite(s"$dir/$listsName", payload.schema, Seq("cid"))
-    // header and lists land in different directories — overlap the writes
-    inParallel(
-      centroids.write.mode("overwrite").parquet(s"$dir/centroids"),
-      clusterByCid(payload).write.mode("overwrite")
-        .partitionBy("cid").parquet(s"$dir/$listsName"))
-    ()
-  }
-
-  /** Cluster a cid-partitioned write by its partition key (guide-standard
-    * hash distribution before a partitioned write): without it every input
-    * partition opens a file in every cid directory — tasks × nlist tiny
-    * files whose per-file footer/open cost then dominates the probe-time
-    * pruned read. One exchange on cid bounds it to files-per-cid ≈ 1; row
-    * content is unchanged. The partition count is pinned to the session's
-    * parallelism (scale-adaptive; an unpinned repartition lets AQE coalesce
-    * the small shuffle to ONE task, serializing the upstream encode and the
-    * write).
-    */
-  private def clusterByCid(payload: DataFrame): DataFrame =
-    payload.repartition(
-      payload.sparkSession.sparkContext.defaultParallelism, col("cid"))
-
-  /** Train an IVF index: seeded centroids + `iters` Lloyd refinement steps
-    * (re-train with higher `iters` to tighten lists as the corpus drifts).
-    * `keep` carries attribute columns into the lists so
-    * [[ivfSearchWhere]] predicates can filter inside the pruned scan.
-    */
-  def ivfTrain(spark: SparkSession, corpus: DataFrame, nlist: Int = 16,
-               iters: Int = 1, keep: Seq[String] = Nil): IvfIndex = {
-    val (centroids, assigned) = ivfAssign(spark, corpus, nlist, iters,
-      keep = keep)
-    IvfIndex(centroids, assigned)
-  }
-
-  def ivfLoad(spark: SparkSession, dir: String): IvfIndex =
-    IvfIndex(graft.SchemaCache.read(spark, s"$dir/centroids"),
-      graft.SchemaCache.read(spark, s"$dir/lists"))
-
-  /** Incremental IVF ingest: assign NEW vectors to a saved index's
-    * existing centroids and APPEND them to its cid-partitioned lists on
-    * disk — no retrain, no rewrite of existing lists. This is the
-    * steady-state crawl path (the same trade as the persistent LSH
-    * ingest): each epoch appends its vectors in one shuffle-free
-    * assignment map + partitioned write, and the index retrains only when
-    * centroid drift demands it. Assignment reuses the builder's machinery
-    * (broadcast literals under the codegen cliff, broadcast-join above),
-    * so an appended index answers searches exactly as if its lists had
-    * been built from the union corpus with the same centroids
-    * (spec-pinned via exhaustive-probe == brute-force equality). A
-    * streaming crawl runs this per micro-batch inside `foreachBatch`,
-    * like the LSH ingest.
-    */
-  def ivfAppend(spark: SparkSession, dir: String, newVecs: DataFrame): Unit =
-    clusterByCid(assignToSaved(spark, dir, newVecs, "ivfAppend"))
-      .write.mode("append").partitionBy("cid").parquet(s"$dir/lists")
-
-  /** Assign a vector batch to a SAVED centroid header — the shared
-    * ingest-time machinery of [[ivfAppend]] and [[ivfSq8Append]]:
-    * broadcast literals under the codegen cliff, broadcast-join above.
-    * A batch with a different embedding width (or null embeddings) would
-    * land in the lists but score nonsense against the centroids — fail
-    * loudly, on the BATCH scan only (the index is never touched for the
-    * check). Output: (vec_id, cid, embedding).
-    */
-  private def assignToSaved(spark: SparkSession, dir: String, vecs: DataFrame,
-                            op: String, checked: Boolean = false): DataFrame =
-    assignToHeader(graft.SchemaCache.read(spark, s"$dir/centroids"), vecs, op, checked)._2
-
-  /** Assign a vector batch to an in-memory centroid header — the core
-    * [[assignToSaved]] and every drift monitor share: collect the
-    * (bounded) header, fail loudly on a mis-sized batch, then the literal
-    * kernel under the codegen cliff / broadcast join above. Returns the
-    * sorted header rows alongside the (vec_id, cid, embedding) batch.
-    * `checked = true` skips the batch hygiene scan — for callers that
-    * already validated the RAW batch and then rotated it (width is
-    * rotation-invariant, so re-checking would pay a second full pass
-    * that can never fire, plus a redundant full-batch rotation).
-    */
-  private def assignToHeader(centDf: DataFrame, vecs: DataFrame, op: String,
-                             checked: Boolean = false)
-      : (Seq[(Int, Array[Float])], DataFrame) = {
-    val cents = centDf.collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1).toSeq
-    if (!checked) failOnBadEmbeddings(vecs, cents.head._2.length, op)
-    // spread before the per-vector assignment (and the encode the ingest
-    // callers chain onto it) — the plant-spread rule; see ivfAssign
-    val vecsS = graft.Tables.spread(vecs)
-    val assigned =
-      if (cents.length <= literalAssignMaxLists)
-        vecsS.select(col("vec_id"),
-          nearestCidCol(cents, col("embedding")).as("cid"), col("embedding"))
-      else assignByJoin(vecsS, centDf)
-        .select(col("vec_id"), col("cid"), col("embedding"))
-    (cents, assigned)
-  }
-
-  /** Probe search against a (trained or loaded) index: nprobe nearest lists
-    * per query, exact re-score within probed lists only. The probed list-id
-    * set (≤ nlist ints) is collected to prune the inverted-list scan —
-    * bounded driver traffic by construction. nprobe == nlist degenerates to
-    * exact search.
-    */
-  /** Probe routing shared by the IVF and IVF-PQ searches: the nprobe
-    * nearest lists per query, plus the distinct probed-cid set (≤ nlist
-    * ints — bounded driver traffic) for directory-level list pruning.
-    */
-  private def probeRoutes(centroids: DataFrame, queries: DataFrame,
-                          nprobe: Int): (DataFrame, Seq[Int]) = {
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .select(col("query_id"), col("q_emb"), col("cid"),
-        cosine_sim(col("q_emb"), col("centroid")).as("csim"))
-    val wp = Window.partitionBy("query_id").orderBy(col("csim").desc, col("cid").asc)
-    val probed = probes.withColumn("rn", row_number().over(wp)).filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("q_emb"), col("cid"))
-    (probed, probed.select("cid").distinct().collect().map(_.getInt(0)).toSeq)
-  }
-
-  def ivfSearch(index: IvfIndex, queries: DataFrame, k: Int,
-                nprobe: Int = 4): DataFrame = {
-    val (probed, cids) = probeRoutes(index.centroids, queries, nprobe)
-    val lists = index.assigned.filter(col("cid").isin(cids: _*))
-    // every vector lives in exactly one list, so (query, neighbor) pairs are
-    // already unique — no distinct needed. The probe-route set is bounded
-    // (|queries| × nprobe rows) and BROADCASTS into the list scan — the
-    // inverted lists are read in place, never shuffled for the join.
-    val scored = lists.join(broadcast(probed), "cid")
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosine_sim(col("embedding"), col("q_emb")), 6).as("sim"))
-    topKPerQuery(scored, k)
-  }
-
-  /** Attribute-FILTERED probe search (the filtered-vector-search /
-    * Faiss IDSelector shape): the row predicate evaluates INSIDE the
-    * cid-pruned list scan, BEFORE any scoring — on a loaded index the
-    * predicate pushes all the way into the parquet lists scan
-    * (`PushedFilters`), so a selective filter cuts bytes read, not just
-    * rows scored. The composition is exact: at nprobe == nlist this
-    * equals brute force over the predicate-matching corpus (spec- and
-    * oracle-pinned). Under partial probing a harsh filter can leave a
-    * probed list empty — raise nprobe with filter selectivity, the
-    * standard filtered-search trade.
-    */
-  def ivfSearchWhere(index: IvfIndex, queries: DataFrame, k: Int,
-                     predicate: Column, nprobe: Int = 4): DataFrame = {
-    val (probed, cids) = probeRoutes(index.centroids, queries, nprobe)
-    val lists = index.assigned.filter(col("cid").isin(cids: _*))
-      .filter(predicate)
-    val scored = lists.join(broadcast(probed), "cid")
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosine_sim(col("embedding"), col("q_emb")), 6).as("sim"))
-    topKPerQuery(scored, k)
-  }
-
-  /** Distributed KNN JOIN: top-k neighbors for EVERY query of a
-    * corpus-sized query set — the shape [[ivfSearch]] cannot take
-    * (it broadcasts the probe routes, which caps the query side at
-    * broadcast size). Used for batch retrieval over millions of queries
-    * and cross-corpus SemDeDup. Identical results to [[ivfSearch]] on
-    * the same queries (same probes, same candidates, same scoring —
-    * spec-pinned); only the join strategy changes: probe routes and
-    * inverted lists join as a plain cid equi-join, both sides staying
-    * distributed, and the per-query cut is the bounded top-k aggregate.
-    *
-    * `salt > 1` splits each inverted list into `salt` deterministic
-    * sub-lists (`vec_id mod salt`) and replicates each route across
-    * them — caps any single join key at list_size/salt rows when a few
-    * centroids own most of the corpus (the skew knob next to AQE's
-    * runtime skew-join split; results are salt-invariant, spec-pinned).
-    * At 100 TB: queries shuffle once on cid (×nprobe×salt fan-out),
-    * lists shuffle once — or zero times when the index is already
-    * cid-partitioned on read.
-    */
-  def ivfKnnJoin(index: IvfIndex, queries: DataFrame, k: Int,
-                 nprobe: Int = 4, salt: Int = 1): DataFrame = {
-    require(salt >= 1 && salt <= 4096, s"salt must be in 1..4096, got $salt")
-    val (probed, cids) = probeRoutes(index.centroids, queries, nprobe)
-    val lists = index.assigned.filter(col("cid").isin(cids: _*))
-      .withColumn("_s", pmod(col("vec_id"), lit(salt.toLong)).cast("int"))
-    val routes =
-      if (salt == 1) probed.withColumn("_s", lit(0))
-      else probed.withColumn("_s",
-        explode(sequence(lit(0), lit(salt - 1))))
-    val scored = lists.join(routes, Seq("cid", "_s"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosine_sim(col("embedding"), col("q_emb")), 6).as("sim"))
-    topKPerQuery(scored, k)
-  }
-
   /** Symmetric int8 scalar quantization of an embedding column: per-vector
     * scale = 127 / max|x|, elements stored as round-half-up ints — 4× less
     * storage/bandwidth for a 100 TB embedding corpus; [[dequantize]]
@@ -712,771 +502,6 @@ object Similarity {
     val unit = transform(embedding,
       x => x.cast("double") / greatest(norm, lit(1e-30)))
     (unit, norm)
-  }
-
-  /** IVF top-k: one-shot train + probe (see [[ivfTrain]]/[[ivfSearch]] for
-    * the train-once / search-many production path).
-    */
-  def ivfTopK(spark: SparkSession, corpus: DataFrame, queries: DataFrame, k: Int,
-              nlist: Int = 16, nprobe: Int = 4): DataFrame =
-    ivfSearch(ivfTrain(spark, corpus, nlist), queries, k, nprobe)
-
-  // ── Product quantization (Jégou, Douze, Schmid 2011) ──────────────────
-  //
-  // The memory-bound ANN path: the corpus is stored as m per-subspace
-  // centroid codes (array<tinyint>: m bytes vs dim floats — 32× smaller at
-  // dim=64, m=8), so a 100 TB float corpus becomes a ~3 TB code table that
-  // scans at memory-bandwidth speed. Codebooks are trained per subspace on
-  // a BOUNDED deterministic sample (≤ ksub × pqTrainPerCent vectors —
-  // a few hundred KB however big the corpus is), Lloyd-refined driver-side
-  // exactly like a production PQ trainer, then ride every encode/search
-  // plan as broadcast literals. Encode and search are single shuffle-free
-  // map passes; search scores cosine(query, reconstruct(codes)) — the
-  // table-free form of asymmetric-distance computation with identical
-  // ranking.
-
-  private val pqTrainPerCent = 64
-
-  /** Trained PQ codebooks: `books(j)(c)` is the dsub-wide centroid c of
-    * subspace j. Bounded: m × ksub × (dim/m) floats, always driver-safe.
-    */
-  final case class PqCodebooks(dim: Int, m: Int, books: Array[Array[Array[Float]]]) {
-    def ksub: Int = books.head.length
-    def dsub: Int = dim / m
-  }
-
-  /** Train per-subspace codebooks with `iters` Lloyd steps over a
-    * deterministic strided sample. Ties (equal L2) break to the lowest
-    * code, and empty cells keep their previous centroid, so training is
-    * bit-reproducible run-to-run.
-    */
-  def pqTrain(corpus: DataFrame, m: Int = 8, ksub: Int = 16,
-              iters: Int = 3, knownCount: Option[Long] = None): PqCodebooks = {
-    // codes are stored as signed bytes; ksub=256 (classic 8-bit PQ) would
-    // need an offset encoding — not worth it at embedding dims this small
-    require(ksub >= 1 && ksub <= 128, s"pqTrain: ksub=$ksub must fit a signed byte")
-    val n = knownCount.getOrElse(corpus.count())
-    val stride = math.max(n / (ksub.toLong * pqTrainPerCent), 1L)
-    val sample = corpus.filter(col("vec_id") % stride === 0)
-      .orderBy("vec_id").select("embedding")
-      .collect().map(_.getSeq[Float](0).toArray)
-    require(sample.nonEmpty, "pqTrain: empty corpus")
-    val dim = sample.head.length
-    require(dim % m == 0, s"pqTrain: dim $dim not divisible by m=$m")
-    PqCodebooks(dim, m, lloydSubBooks(sample, m, ksub, iters))
-  }
-
-  /** Per-subspace Lloyd training over an in-driver sample — the k-means
-    * core shared by [[pqTrain]] and the per-iteration codebook refit in
-    * [[opqTrain]]. Deterministic: strided seeding, strict-< tie-breaks,
-    * empty cells keep their previous centroid.
-    */
-  private def lloydSubBooks(sample: Array[Array[Float]], m: Int, ksub: Int,
-                            iters: Int): Array[Array[Array[Float]]] = {
-    val dsub = sample.head.length / m
-    Array.tabulate(m) { j =>
-      val subs = sample.map(v => v.slice(j * dsub, (j + 1) * dsub))
-      // seed spread across the sample, like the IVF seeding stride
-      val seedStride = math.max(subs.length / ksub, 1)
-      var cents = Array.tabulate(math.min(ksub, subs.length))(c => subs(c * seedStride).clone())
-      for (_ <- 1 to iters) {
-        val sums = Array.fill(cents.length)(new Array[Double](dsub))
-        val counts = new Array[Long](cents.length)
-        subs.foreach { s =>
-          val c = nearestSub(cents, s)
-          counts(c) += 1
-          var i = 0; while (i < dsub) { sums(c)(i) += s(i); i += 1 }
-        }
-        cents = Array.tabulate(cents.length) { c =>
-          if (counts(c) == 0) cents(c)
-          else Array.tabulate(dsub)(i => (sums(c)(i) / counts(c)).toFloat)
-        }
-      }
-      cents
-    }
-  }
-
-  private def nearestSub(cents: Array[Array[Float]], s: Array[Float]): Int = {
-    var best = 0; var bestD = Double.MaxValue
-    var c = 0
-    while (c < cents.length) {
-      var d = 0.0; var i = 0
-      while (i < s.length) { val t = s(i) - cents(c)(i); d += t * t; i += 1 }
-      if (d < bestD) { bestD = d; best = c } // strict < : ties keep lowest c
-      c += 1
-    }
-    best
-  }
-
-  /** Squared-L2 between a dsub-slice of the embedding and a centroid
-    * literal, as a pure fold expression.
-    */
-  private def l2SqCol(sub: Column, cent: Array[Float]): Column =
-    aggregate(zip_with(sub, typedLit(cent), (x, y) => (x - y) * (x - y)),
-      lit(0.0d), (acc, v) => acc + v.cast("double"))
-
-  /** Encode the corpus: (vec_id, codes array<tinyint> of length m — one
-    * byte per code, the 32× compression at dim=64/m=8). A single
-    * shuffle-free projection; the codebooks are plan literals (m × ksub ×
-    * dsub floats — same order of constants as the nlist≤256 IVF assign).
-    */
-  def pqEncode(corpus: DataFrame, cb: PqCodebooks,
-               keep: Seq[String] = Nil): DataFrame =
-    corpus.select(col("vec_id") +: keep.map(col) :+
-      pqEncodeCol(col("embedding"), cb).as("codes"): _*)
-
-  /** The code-assignment expression behind [[pqEncode]], reusable inside
-    * any scan (the drift monitors fuse encode+decode into the assignment
-    * projection).
-    */
-  def pqEncodeCol(embedding: Column, cb: PqCodebooks): Column =
-    array((0 until cb.m).map { j =>
-      val sub = slice(embedding, j * cb.dsub + 1, cb.dsub)
-      val scored = cb.books(j).zipWithIndex.map { case (cent, c) =>
-        struct((-l2SqCol(sub, cent)).as("nd"), lit(-c).as("nc"))
-      }
-      val best = if (scored.length == 1) scored.head else greatest(scored.toSeq: _*)
-      (-best.getField("nc")).cast("tinyint").as(s"c$j")
-    }: _*)
-
-  /** Reconstruct the quantized vector from its codes (concatenated
-    * per-subspace centroids) — the decode side of the code table.
-    */
-  def pqReconstruct(codes: Column, cb: PqCodebooks): Column =
-    flatten(transform(sequence(lit(0), lit(cb.m - 1)), j =>
-      element_at(typedLit(cb.books.map(_.map(_.toSeq).toSeq).toSeq), j + 1)
-        .getItem(element_at(codes, j + 1).cast("int"))))
-
-  /** ANN top-k over the code table: broadcast queries, score each corpus
-    * code row by cosine(query, reconstruction) — one shuffle-free map over
-    * the (32× smaller) codes, then the bounded per-query top-k merge.
-    * Exactness is traded for the code-table scan: recall is governed by
-    * (m, ksub); PqSpec measures it against brute force.
-    */
-  def pqSearch(codes: DataFrame, queries: DataFrame, cb: PqCodebooks,
-               k: Int): DataFrame = {
-    // reconstruct BEFORE the query join: once per corpus row, not once per
-    // (row, query) pair — the join only multiplies the cheap cosine
-    val recon = codes.select(col("vec_id"),
-      pqReconstruct(col("codes"), cb).as("recon"))
-    val scored = recon
-      .crossJoin(broadcast(queries.select(
-        col("vec_id").as("query_id"), col("embedding").as("q_emb"))))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosine_sim(col("recon"), col("q_emb")), 6).as("sim"))
-    topKPerQuery(scored, k)
-  }
-
-  /** PQ search with exact re-ranking (Jégou, Douze, Schmid 2011 §VI —
-    * "IVFADC+R"; Faiss IndexRefineFlat): the code-table scan proposes
-    * rerank×k candidates per query, whose TRUE embeddings are then
-    * fetched by id and re-scored exactly. Recall approaches exact search
-    * while the full-corpus pass still reads only the 32×-smaller codes —
-    * the exact pass touches rerank×k rows per query, an id-keyed join
-    * that stays negligible at any corpus size.
-    */
-  def pqSearchRerank(codes: DataFrame, queries: DataFrame, corpus: DataFrame,
-                     cb: PqCodebooks, k: Int, rerank: Int = 4): DataFrame = {
-    val cands = pqSearch(codes, queries, cb, k * rerank)
-      .select("query_id", "neighbor_id")
-    rescoreExact(cands, queries, corpus, k)
-  }
-
-  /** IVF-PQ search with the same exact re-ranking tail. */
-  def ivfPqSearchRerank(index: IvfPqIndex, queries: DataFrame,
-                        corpus: DataFrame, k: Int, nprobe: Int = 4,
-                        rerank: Int = 4): DataFrame = {
-    val cands = ivfPqSearch(index, queries, k * rerank, nprobe)
-      .select("query_id", "neighbor_id")
-    rescoreExact(cands, queries, corpus, k)
-  }
-
-  /** Exact-cosine re-score of an id-only candidate set: fetch the true
-    * embeddings by id, score against the broadcast queries, keep top-k.
-    * The candidate set is bounded by construction (|queries| × rerank × k
-    * id pairs), so it BROADCASTS into the corpus join — the 100 TB corpus
-    * is never shuffled for the re-rank; each scan task filters its rows
-    * against the broadcast ids.
-    */
-  private def rescoreExact(cands: DataFrame, queries: DataFrame,
-                           corpus: DataFrame, k: Int): DataFrame = {
-    val rescored = corpus
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb"))
-      .join(broadcast(cands), "neighbor_id")
-      .join(broadcast(queries.select(col("vec_id").as("query_id"),
-        col("embedding").as("q_emb"))), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosine_sim(col("n_emb"), col("q_emb")), 6).as("sim"))
-    topKPerQuery(rescored, k)
-  }
-
-  /** One-shot PQ top-k (train → encode → search). */
-  def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-             m: Int = 8, ksub: Int = 16): DataFrame = {
-    val cb = pqTrain(corpus, m, ksub)
-    pqSearch(pqEncode(corpus, cb), queries, cb, k)
-  }
-
-  /** Batch-hygiene guard shared by the index-maintenance operators: a
-    * null or wrong-width embedding would land in lists / score garbage /
-    * bias statistics downstream — fail loudly, on the BATCH scan only
-    * (`size(null)` is null, so a bare `=!= dim` filter would let null
-    * embeddings slip past).
-    */
-  private[operators] def failOnBadEmbeddings(vecs: DataFrame, dim: Int, op: String): Unit = {
-    val bad = vecs
-      .filter(col("embedding").isNull || size(col("embedding")) =!= dim).limit(1)
-      .select(col("vec_id"), coalesce(size(col("embedding")), lit(-1)).as("d"))
-      .collect()
-    if (bad.nonEmpty) {
-      val d = bad.head.getInt(1)
-      val what = if (d < 0) "a null embedding" else s"dimension $d"
-      throw new IllegalArgumentException(
-        s"$op: vec_id ${bad.head.getLong(0)} has $what, index expects $dim")
-    }
-  }
-
-  /** Centroid-drift monitor — the measurement behind "the index retrains
-    * only when centroid drift demands it" ([[ivfAppend]]): per-list count
-    * and mean cosine of a vector batch to its ASSIGNED centroid. Run it
-    * over each ingest epoch (or the accumulated lists) and retrain when
-    * mean cosine sinks below the train-time recording — rising distance
-    * to the nearest centroid is exactly what degrades probe recall.
-    * Shape: shuffle-free broadcast assignment (the [[ivfAppend]]
-    * machinery), then one nlist-keyed aggregation; per-vector cosines
-    * round to 6 dp and sum as DECIMAL(18,6), dividing once — the house
-    * determinism rule, so the stats are engine-reproducible.
-    */
-  def ivfDriftStats(index: IvfIndex, vecs: DataFrame): DataFrame = {
-    // batch hygiene runs inside assignToHeader: a null embedding would be
-    // counted in n while its null cosine drops from the sum, silently
-    // deflating mean_cos and triggering spurious retrains
-    driftStatsFinalize(ivfDriftSums(index, vecs))
-  }
-
-  /** Sums-level face of [[ivfDriftStats]] — the STREAMING accumulator
-    * (see [[driftStatsFinalize]]).
-    */
-  def ivfDriftSums(index: IvfIndex, vecs: DataFrame): DataFrame = {
-    val (cents, assigned) = assignToHeader(index.centroids, vecs,
-      "ivfDriftStats")
-    driftSumsFrom(cents, assigned)
-  }
-
-  /** Shared drift-aggregation tail for every IVF-family monitor, split
-    * into a SUMS stage and a FINALIZE stage so the monitors compose over
-    * a stream: cosine of each batch vector to its ASSIGNED centroid plus
-    * any index-specific per-vector `extras`, reduced per list to an
-    * exact count and DECIMAL(18,6) sums of the 6-dp per-vector signals.
-    * Decimal sums are associative — a foreachBatch crawl appends one
-    * sums frame per micro-batch and [[driftStatsFinalize]] divides ONCE
-    * over their union, so the accumulated stream stats are bit-equal to
-    * the batch monitor over the union of the batches.
-    */
-  private def driftSumsFrom(cents: Seq[(Int, Array[Float])],
-                            assigned: DataFrame,
-                            extras: Seq[(String, Column)] = Nil): DataFrame = {
-    val centLit = typedLit(cents.map(_._2.toSeq))
-    val perVec = assigned.select(
-      col("cid") +:
-      round(cosine_sim(col("embedding"),
-        element_at(centLit, col("cid") + 1)), 6).as("cos") +:
-      extras.map { case (nme, c) => round(c, 6).as(nme) }: _*)
-    val sums = sum(col("cos").cast("decimal(18,6)")).as("sum_cos") +:
-      extras.map { case (nme, _) =>
-        sum(col(nme).cast("decimal(18,6)")).as(s"sum_$nme") }
-    perVec.groupBy("cid")
-      .agg(count(lit(1)).as("n"), sums: _*)
-  }
-
-  /** Reduce drift SUMS rows (one or many micro-batches' worth, unioned)
-    * to the per-list mean stats: per cid, counts add, decimal sums add
-    * losslessly, and each mean divides+rounds ONCE at the end — the house
-    * determinism rule, so finalize(union of batch sums) is bit-equal to
-    * the one-shot batch monitor. Extra signal columns are discovered from
-    * the `sum_<name>` schema, so one finalize serves every tier.
-    */
-  def driftStatsFinalize(sums: DataFrame): DataFrame = {
-    val extraNames = sums.columns
-      .filter(c => c.startsWith("sum_") && c != "sum_cos")
-      .map(_.stripPrefix("sum_")).toSeq
-    sums.groupBy("cid")
-      .agg(sum(col("n")).as("n"),
-        sum(col("sum_cos")).as("_s") +:
-          extraNames.map(nme => sum(col(s"sum_$nme")).as(s"_$nme")): _*)
-      .select(col("cid") +: col("n") +:
-        round(col("_s").cast("double") / col("n"), 6).as("mean_cos") +:
-        extraNames.map { nme =>
-          round(col(s"_$nme").cast("double") / col("n"), 6).as(nme) }: _*)
-  }
-
-  /** [[ivfDriftStats]] for the composed IVF×SQ8 tier — the retrain
-    * decision for the index a steady-state crawl actually appends to
-    * ([[ivfSq8Append]]). Adds the quantizer-specific signal the centroid
-    * cosine cannot see: `clamp_frac`, the mean fraction of vector
-    * components falling OUTSIDE the saved per-dimension [min, max]
-    * bounds — those clamp at encode time ([[sq8Encode]]) and lose
-    * fidelity, so a rising clamp_frac means the BOUNDS need retraining
-    * even while list balance still looks healthy (the Faiss practice:
-    * re-check the scalar quantizer's ranges on every composed index, not
-    * just the coarse centroids). Same shuffle-free shape: one scan, one
-    * nlist-keyed aggregation; component counts are exact integers so the
-    * fraction is as reproducible as the cosines.
-    */
-  def ivfSq8DriftStats(index: IvfSq8Index, vecs: DataFrame): DataFrame =
-    driftStatsFinalize(ivfSq8DriftSums(index, vecs))
-
-  /** Sums-level face of [[ivfSq8DriftStats]] — the STREAMING accumulator
-    * (see [[driftStatsFinalize]]).
-    */
-  def ivfSq8DriftSums(index: IvfSq8Index, vecs: DataFrame): DataFrame = {
-    val (cents, assigned) = assignToHeader(index.centroids, vecs,
-      "ivfSq8DriftStats")
-    val minsLit = typedLit(index.p.mins.toSeq)
-    val maxsLit = typedLit(index.p.maxs.toSeq)
-    val oobFrac = size(filter(
-        transform(col("embedding"), (x, i) =>
-          x < element_at(minsLit, i + 1) || x > element_at(maxsLit, i + 1)),
-        b => b)).cast("double") / lit(index.p.dim.toDouble)
-    driftSumsFrom(cents, assigned, Seq("clamp_frac" -> oobFrac))
-  }
-
-  /** [[ivfDriftStats]] for the composed IVF×PQ tier: adds `mean_qcos`,
-    * the mean cosine of each batch vector to its OWN PQ reconstruction
-    * under the saved codebooks — sinking reconstruction fidelity on new
-    * data is the codebook-retrain trigger (list balance can stay perfect
-    * while the codebooks stop describing the vectors). Encode + decode
-    * fuse into the same shuffle-free scan as the assignment.
-    */
-  def ivfPqDriftStats(index: IvfPqIndex, vecs: DataFrame): DataFrame =
-    driftStatsFinalize(ivfPqDriftSums(index, vecs))
-
-  /** Sums-level face of [[ivfPqDriftStats]] — the STREAMING accumulator
-    * (see [[driftStatsFinalize]]).
-    */
-  def ivfPqDriftSums(index: IvfPqIndex, vecs: DataFrame): DataFrame = {
-    val (cents, assigned) = assignToHeader(index.centroids, vecs,
-      "ivfPqDriftStats")
-    val qcos = cosine_sim(col("embedding"),
-      pqReconstruct(pqEncodeCol(col("embedding"), index.cb), index.cb))
-    driftSumsFrom(cents, assigned, Seq("mean_qcos" -> qcos))
-  }
-
-  /** [[ivfPqDriftStats]] for the OPQ-rotated composition: the batch
-    * rotates under the SAVED rotation first, then assignment, centroid
-    * cosine, and reconstruction fidelity all measure in ROTATED space —
-    * where this index's centroids and codebooks actually live (drift
-    * measured in raw space would compare against headers from a
-    * different basis and read noise). Batch hygiene fails on the RAW
-    * batch before the rotation kernel ever runs.
-    */
-  def ivfOpqDriftStats(index: IvfOpqIndex, vecs: DataFrame): DataFrame =
-    driftStatsFinalize(ivfOpqDriftSums(index, vecs))
-
-  /** Sums-level face of [[ivfOpqDriftStats]] — the STREAMING accumulator
-    * (see [[driftStatsFinalize]]).
-    */
-  def ivfOpqDriftSums(index: IvfOpqIndex, vecs: DataFrame): DataFrame = {
-    failOnBadEmbeddings(vecs, index.model.dim, "ivfOpqDriftStats")
-    val (cents, assigned) = assignToHeader(index.inner.centroids,
-      opqRotate(vecs, index.model), "ivfOpqDriftStats", checked = true)
-    val qcos = cosine_sim(col("embedding"),
-      pqReconstruct(pqEncodeCol(col("embedding"), index.model.cb),
-        index.model.cb))
-    driftSumsFrom(cents, assigned, Seq("mean_qcos" -> qcos))
-  }
-
-  // ── SQ8: scalar quantization (Faiss IndexScalarQuantizer QT_8bit) ────
-  //
-  // The simplest compression tier: one byte per DIMENSION via per-dim
-  // linear [min, max] buckets — 4× smaller than float32 (vs PQ's 32× at
-  // much higher reconstruction fidelity), trained by ONE min/max
-  // aggregation instead of k-means, and decode is two FMAs per element.
-  // The standard first stop when a float corpus stops fitting the page
-  // cache but PQ recall is not acceptable.
-
-  /** Per-dimension quantization bounds. Bounded header (2 × dim floats) —
-    * broadcasts as plan literals like the IVF centroids.
-    */
-  final case class Sq8Params(mins: Array[Float], maxs: Array[Float]) {
-    require(mins.length == maxs.length,
-      s"sq8: ${mins.length} mins vs ${maxs.length} maxs")
-    def dim: Int = mins.length
-    /** span 0 (constant dimension) encodes to code 0 and decodes to min. */
-    def spans: Array[Float] = Array.tabulate(dim)(i => maxs(i) - mins(i))
-  }
-
-  /** Train = exact per-dimension min/max over the corpus scan (no
-    * sampling, no iterations — the quantizer is as deterministic as the
-    * data), computed as a posexplode + dimension-keyed aggregation: the
-    * shuffle carries at most partitions × dim partial rows and the output
-    * is the dim-bounded header. The obvious alternative — one agg with
-    * 2×dim min/max columns — is fine at fixture widths but bloats codegen
-    * and planning quadratically at production embedding widths
-    * (1024-4096 → a 2048-8192-column aggregate); min/max are exact and
-    * order-independent, so both forms produce identical bounds.
-    */
-  def sq8Train(corpus: DataFrame): Sq8Params = {
-    val vecs = corpus.filter(col("embedding").isNotNull)
-    val probe = vecs.select(size(col("embedding"))).limit(1).collect()
-    require(probe.nonEmpty, "sq8Train: empty corpus (no non-null embeddings)")
-    val dim = probe.head.getInt(0)
-    // a shorter vector would leave null min/max holes in some dimension —
-    // fail loudly like the other index builders. The hygiene scan and the
-    // min/max aggregation are independent full passes: overlap their jobs
-    // (the bounds are discarded unexhausted when the guard throws)
-    val (_, rows) = inParallel(
-      failOnBadEmbeddings(vecs, dim, "sq8Train"),
-      vecs
-        .select(posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy("pos")
-        .agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
-        .collect())
-    val mins = new Array[Float](dim); val maxs = new Array[Float](dim)
-    rows.foreach { r =>
-      mins(r.getInt(0)) = r.getFloat(1); maxs(r.getInt(0)) = r.getFloat(2)
-    }
-    Sq8Params(mins, maxs)
-  }
-
-  /** Quantize: code_i = round((x_i − min_i) / span_i × 255), stored with a
-    * −128 offset so the full 0..255 range fits a signed byte (PQ caps at
-    * ksub ≤ 128 instead — SQ needs all 8 bits). The arithmetic runs in
-    * DOUBLE with an explicit floor(… + 0.5), so the codes are
-    * bit-reproducible and the Verify replica can reproduce them exactly.
-    * Out-of-range values at encode time (vectors unseen at train) clamp.
-    */
-  def sq8Encode(embedding: Column, p: Sq8Params): Column =
-    transform(embedding, (x, i) => {
-      val mn = element_at(typedLit(p.mins.toSeq), i + 1).cast("double")
-      val span = element_at(typedLit(p.spans.toSeq), i + 1).cast("double")
-      (least(lit(255.0d), greatest(lit(0.0d),
-        floor(when(span > 0.0d, (x.cast("double") - mn) / span * 255.0d)
-          .otherwise(0.0d) + 0.5d))) - 128.0d).cast("tinyint")
-    })
-
-  /** Decode: min_i + (code_i + 128) / 255 × span_i, in double, cast float
-    * — two FMAs per element, shuffle-free.
-    */
-  def sq8Reconstruct(codes: Column, p: Sq8Params): Column =
-    transform(codes, (c, i) => {
-      val mn = element_at(typedLit(p.mins.toSeq), i + 1).cast("double")
-      val span = element_at(typedLit(p.spans.toSeq), i + 1).cast("double")
-      (mn + (c.cast("double") + 128.0d) / 255.0d * span).cast("float")
-    })
-
-  /** Corpus → (vec_id, codes array<tinyint>) — the 4×-smaller scan table. */
-  def sq8EncodeCorpus(corpus: DataFrame, p: Sq8Params,
-                      keep: Seq[String] = Nil): DataFrame =
-    corpus.select(col("vec_id") +: keep.map(col) :+
-      sq8Encode(col("embedding"), p).as("codes"): _*)
-
-  /** ANN top-k over the SQ8 code table: reconstruct once per corpus row,
-    * cosine against the broadcast queries, bounded per-query top-k —
-    * [[pqSearch]]'s shape over the higher-fidelity codes.
-    */
-  def sq8Search(codes: DataFrame, queries: DataFrame, p: Sq8Params,
-                k: Int): DataFrame = {
-    val recon = codes.select(col("vec_id"),
-      sq8Reconstruct(col("codes"), p).as("recon"))
-    val scored = recon
-      .crossJoin(broadcast(queries.select(
-        col("vec_id").as("query_id"), col("embedding").as("q_emb"))))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosine_sim(col("recon"), col("q_emb")), 6).as("sim"))
-    topKPerQuery(scored, k)
-  }
-
-  /** SQ8 search with the exact re-ranking tail (Faiss IndexRefineFlat
-    * composition, like [[pqSearchRerank]]): the 4×-smaller code scan
-    * proposes rerank×k candidates, true embeddings re-score them.
-    */
-  def sq8SearchRerank(codes: DataFrame, queries: DataFrame, corpus: DataFrame,
-                      p: Sq8Params, k: Int, rerank: Int = 4): DataFrame = {
-    val cands = sq8Search(codes, queries, p, k * rerank)
-      .select("query_id", "neighbor_id")
-    rescoreExact(cands, queries, corpus, k)
-  }
-
-  /** One-shot SQ8 top-k (train → encode → search). */
-  def sq8TopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val p = sq8Train(corpus)
-    sq8Search(sq8EncodeCorpus(corpus, p), queries, p, k)
-  }
-
-  /** Persist an SQ8 index: the 2×dim bounds header plus the code table —
-    * the steady-state artifact ([[sq8Append]] ingests into it without
-    * retraining, like the IVF/BM25/LSH indexes).
-    */
-  /** On-disk bounds header shared by the flat SQ8 and IVF-SQ8 indexes
-    * (change it here and in [[sq8LoadParams]] together).
-    */
-  private def sq8SaveParams(spark: SparkSession, p: Sq8Params, dir: String): Unit = {
-    import spark.implicits._
-    val df = (0 until p.dim).map(i => (i, p.mins(i), p.maxs(i)))
-      .toDF("i", "mn", "mx")
-    graft.SchemaCache.noteWrite(s"$dir/params", df.schema)
-    df.coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
-  }
-
-  private def sq8LoadParams(spark: SparkSession, dir: String): Sq8Params = {
-    val rows = graft.SchemaCache.read(spark, s"$dir/params")
-      .select("i", "mn", "mx").collect()
-    val dim = rows.length
-    val mins = new Array[Float](dim); val maxs = new Array[Float](dim)
-    rows.foreach { r => mins(r.getInt(0)) = r.getFloat(1); maxs(r.getInt(0)) = r.getFloat(2) }
-    Sq8Params(mins, maxs)
-  }
-
-  def sq8Save(spark: SparkSession, p: Sq8Params, codes: DataFrame,
-              dir: String): Unit = {
-    graft.SchemaCache.noteWrite(s"$dir/codes", codes.schema)
-    // the 1-row params header and the code table are independent writes
-    inParallel(
-      sq8SaveParams(spark, p, dir),
-      codes.write.mode("overwrite").parquet(s"$dir/codes"))
-    ()
-  }
-
-  def sq8Load(spark: SparkSession, dir: String): (Sq8Params, DataFrame) =
-    (sq8LoadParams(spark, dir), graft.SchemaCache.read(spark, s"$dir/codes"))
-
-  /** Incremental SQ8 ingest: encode NEW vectors under the SAVED bounds and
-    * append their codes — no retrain, no rewrite (vectors outside the
-    * trained range clamp to the boundary bucket, the quantizer's standard
-    * out-of-range behavior; re-train when [[ivfDriftStats]]-style
-    * monitoring says the distribution moved). Appended codes are
-    * bit-identical to what a from-scratch encode of the union under the
-    * same bounds produces, so searches answer exactly alike (spec-pinned).
-    */
-  def sq8Append(spark: SparkSession, dir: String, newVecs: DataFrame): Unit = {
-    val (p, _) = sq8Load(spark, dir)
-    failOnBadEmbeddings(newVecs, p.dim, "sq8Append")
-    sq8EncodeCorpus(newVecs, p)
-      .write.mode("append").parquet(s"$dir/codes")
-  }
-
-  // ── IVF-PQ: pruning AND compression ───────────────────────────────────
-  //
-  // The classic composition (Faiss IndexIVFPQ): the inverted lists store
-  // PQ codes instead of raw vectors, so a probe reads nprobe/nlist of a
-  // code table that is itself 32× smaller than the float corpus — the
-  // two savings multiply. Lists are cid-partitioned parquet exactly like
-  // [[IvfIndex.save]] (directory-level pruning); the codebooks and
-  // centroid header are both bounded and broadcast.
-
-  final case class IvfPqIndex(centroids: DataFrame, codes: DataFrame, cb: PqCodebooks) {
-    def save(dir: String): Unit = {
-      // the codebook table derives from driver-side state — independent of
-      // the header/lists writes, so all three jobs overlap
-      inParallel(
-        saveCentroidsAndLists(centroids, codes, dir, "codes"),
-        saveCodebooks(codes.sparkSession, cb, s"$dir/codebooks"))
-      ()
-    }
-  }
-
-  /** Codebook persistence shared by the IVF-PQ and OPQ artifacts: one
-    * row per (subspace, code) centroid slice.
-    */
-  private def saveCodebooks(spark: SparkSession, cb: PqCodebooks,
-                            dir: String): Unit = {
-    val rows = for {
-      (book, j) <- cb.books.zipWithIndex
-      (cent, c) <- book.zipWithIndex
-    } yield Row(j, c, cent.toSeq)
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 1),
-      StructType(Seq(StructField("j", IntegerType, nullable = false),
-        StructField("c", IntegerType, nullable = false),
-        StructField("centroid", ArrayType(FloatType), nullable = true))))
-    graft.SchemaCache.noteWrite(dir, df.schema)
-    df.write.mode("overwrite").parquet(dir)
-  }
-
-  private def loadCodebooks(spark: SparkSession, dir: String): PqCodebooks = {
-    val bookRows = graft.SchemaCache.read(spark, dir)
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
-    require(bookRows.nonEmpty, s"loadCodebooks: no codebook rows under $dir")
-    val m = bookRows.map(_._1).max + 1
-    val books = Array.tabulate(m)(j =>
-      bookRows.filter(_._1 == j).sortBy(_._2).map(_._3))
-    PqCodebooks(books.head.head.length * m, m, books)
-  }
-
-  /** Train IVF lists and PQ codebooks, then store each list as codes. */
-  def ivfPqTrain(spark: SparkSession, corpus: DataFrame, nlist: Int = 16,
-                 m: Int = 8, ksub: Int = 16, iters: Int = 1): IvfPqIndex = {
-    // one corpus count shared by both trainers (each would otherwise scan)
-    val n = corpus.count()
-    // the two trainers are independent given the shared count — overlap them
-    val ((centroids, assigned), cb) = inParallel(
-      ivfAssign(spark, corpus, nlist, iters, Some(n)),
-      pqTrain(corpus, m, ksub, knownCount = Some(n)))
-    // encode carries cid through — one projection, no re-join
-    IvfPqIndex(centroids, pqEncode(assigned, cb, keep = Seq("cid")), cb)
-  }
-
-  def ivfPqLoad(spark: SparkSession, dir: String): IvfPqIndex =
-    IvfPqIndex(graft.SchemaCache.read(spark, s"$dir/centroids"),
-      graft.SchemaCache.read(spark, s"$dir/codes"),
-      loadCodebooks(spark, s"$dir/codebooks"))
-
-  /** Probe search: nprobe nearest lists per query (same routing as
-    * [[ivfSearch]] — the probed cid set prunes the codes scan at the
-    * directory level), scored on the PQ reconstruction.
-    */
-  def ivfPqSearch(index: IvfPqIndex, queries: DataFrame, k: Int,
-                  nprobe: Int = 4): DataFrame = {
-    val (probed, cids) = probeRoutes(index.centroids, queries, nprobe)
-    val lists = index.codes.filter(col("cid").isin(cids: _*))
-      .select(col("cid"), col("vec_id"),
-        pqReconstruct(col("codes"), index.cb).as("recon"))
-    // bounded probe-route set broadcasts into the code-table scan (same
-    // rationale as ivfSearch — the lists are never shuffled for the join)
-    val scored = lists.join(broadcast(probed), "cid")
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosine_sim(col("recon"), col("q_emb")), 6).as("sim"))
-    topKPerQuery(scored, k)
-  }
-
-  // ── IVF-SQ8: pruning + the higher-fidelity compression tier ──────────
-  //
-  // Faiss IndexIVFScalarQuantizer: the inverted lists store SQ8 codes —
-  // a probe reads nprobe/nlist of a table that is itself 4× smaller than
-  // the float corpus, at much higher reconstruction fidelity than PQ's
-  // 32×. This closes the flat-SQ8 gap at 100 TB (a flat code scan still
-  // reads everything; the cid-partitioned lists prune at the parquet
-  // directory level exactly like IvfIndex / IvfPqIndex). Bounds header
-  // (2×dim) and centroid header (nlist×dim) are both driver-bounded and
-  // broadcast; append-time ingest shares [[assignToSaved]] and encodes
-  // under the SAVED bounds like [[sq8Append]] — no retrain, no rewrite.
-
-  final case class IvfSq8Index(centroids: DataFrame, codes: DataFrame, p: Sq8Params) {
-    def save(dir: String): Unit = {
-      // the 1-row bounds header derives from driver-side state —
-      // independent of the header/lists writes, so all three jobs overlap
-      inParallel(
-        saveCentroidsAndLists(centroids, codes, dir, "codes"),
-        sq8SaveParams(codes.sparkSession, p, dir))
-      ()
-    }
-  }
-
-  /** Train IVF lists and SQ8 bounds, then store each list as codes. The
-    * two training passes are independent single aggregations (assignment
-    * map + per-dim min/max); the encode carries cid through in one
-    * projection, no re-join.
-    */
-  def ivfSq8Train(spark: SparkSession, corpus: DataFrame, nlist: Int = 16,
-                  iters: Int = 1): IvfSq8Index = {
-    // the two training passes are independent — overlap their jobs
-    val ((centroids, assigned), p) =
-      inParallel(ivfAssign(spark, corpus, nlist, iters), sq8Train(corpus))
-    IvfSq8Index(centroids, sq8EncodeCorpus(assigned, p, keep = Seq("cid")), p)
-  }
-
-  def ivfSq8Load(spark: SparkSession, dir: String): IvfSq8Index =
-    IvfSq8Index(graft.SchemaCache.read(spark, s"$dir/centroids"),
-      graft.SchemaCache.read(spark, s"$dir/codes"), sq8LoadParams(spark, dir))
-
-  /** Incremental IVF-SQ8 ingest: assign NEW vectors to the saved
-    * centroids, encode under the SAVED bounds (out-of-range clamps, the
-    * quantizer's standard behavior), append to the cid-partitioned code
-    * lists — the steady-state crawl path, per micro-batch inside
-    * `foreachBatch` like the IVF/SQ8/LSH/BM25 ingests. Appended codes
-    * are bit-identical to a from-scratch encode of the union under the
-    * same header (spec-pinned), so searches answer exactly alike.
-    */
-  def ivfSq8Append(spark: SparkSession, dir: String, newVecs: DataFrame): Unit = {
-    // batch hygiene runs inside assignToSaved (centroid width == bounds
-    // width by construction of save); the bounds-header read is
-    // independent of it — overlap the two
-    val (p, assigned) = inParallel(
-      sq8LoadParams(spark, dir),
-      assignToSaved(spark, dir, newVecs, "ivfSq8Append"))
-    clusterByCid(sq8EncodeCorpus(assigned, p, keep = Seq("cid")))
-      .write.mode("append").partitionBy("cid").parquet(s"$dir/codes")
-  }
-
-  /** Probe search: nprobe nearest lists per query (same routing as
-    * [[ivfSearch]] — the probed cid set prunes the codes scan at the
-    * directory level), scored on the SQ8 reconstruction.
-    */
-  def ivfSq8Search(index: IvfSq8Index, queries: DataFrame, k: Int,
-                   nprobe: Int = 4): DataFrame = {
-    val (probed, cids) = probeRoutes(index.centroids, queries, nprobe)
-    val lists = index.codes.filter(col("cid").isin(cids: _*))
-      .select(col("cid"), col("vec_id"),
-        sq8Reconstruct(col("codes"), index.p).as("recon"))
-    // bounded probe-route set broadcasts into the code-table scan (same
-    // rationale as ivfSearch — the lists are never shuffled for the join)
-    val scored = lists.join(broadcast(probed), "cid")
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosine_sim(col("recon"), col("q_emb")), 6).as("sim"))
-    topKPerQuery(scored, k)
-  }
-
-  /** IVF-SQ8 search with the exact re-ranking tail (IndexRefineFlat
-    * composition, like [[ivfPqSearchRerank]]).
-    */
-  def ivfSq8SearchRerank(index: IvfSq8Index, queries: DataFrame,
-                         corpus: DataFrame, k: Int, nprobe: Int = 4,
-                         rerank: Int = 4): DataFrame = {
-    val cands = ivfSq8Search(index, queries, k * rerank, nprobe)
-      .select("query_id", "neighbor_id")
-    rescoreExact(cands, queries, corpus, k)
-  }
-
-  /** [[ivfKnnJoin]] over the 4×-compressed SQ8 code lists: the
-    * corpus-sized-query join shape reading a quarter of the bytes —
-    * probe routes equi-join the cid-partitioned codes (scan pruned to
-    * probed cids, salt knob for skewed centroids), scoring on the SQ8
-    * reconstruction. Row-identical to [[ivfSq8Search]] on the same
-    * queries (spec-pinned), which carries the oracle.
-    */
-  def ivfSq8KnnJoin(index: IvfSq8Index, queries: DataFrame, k: Int,
-                    nprobe: Int = 4, salt: Int = 1): DataFrame = {
-    require(salt >= 1 && salt <= 4096, s"salt must be in 1..4096, got $salt")
-    val (probed, cids) = probeRoutes(index.centroids, queries, nprobe)
-    val lists = index.codes.filter(col("cid").isin(cids: _*))
-      .select(col("cid"), col("vec_id"),
-        sq8Reconstruct(col("codes"), index.p).as("recon"))
-      .withColumn("_s", pmod(col("vec_id"), lit(salt.toLong)).cast("int"))
-    val routes =
-      if (salt == 1) probed.withColumn("_s", lit(0))
-      else probed.withColumn("_s", explode(sequence(lit(0), lit(salt - 1))))
-    val scored = lists.join(routes, Seq("cid", "_s"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosine_sim(col("recon"), col("q_emb")), 6).as("sim"))
-    topKPerQuery(scored, k)
-  }
-
-  /** [[ivfSq8SearchRerank]] for corpus-sized query sets: SQ8 KNN-join
-    * candidates, then a fully DISTRIBUTED exact rescore — the candidate
-    * ids equi-join the corpus and the query set without broadcast hints
-    * (both sides may be corpus-sized; AQE still broadcasts when one fits).
-    * Row-identical to the broadcast rerank on the same inputs
-    * (spec-pinned).
-    */
-  def ivfSq8KnnJoinRerank(index: IvfSq8Index, queries: DataFrame,
-                          corpus: DataFrame, k: Int, nprobe: Int = 4,
-                          salt: Int = 1, rerank: Int = 4): DataFrame = {
-    val cands = ivfSq8KnnJoin(index, queries, k * rerank, nprobe, salt)
-      .select("query_id", "neighbor_id")
-    val rescored = corpus
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb"))
-      .join(cands, "neighbor_id")
-      .join(queries.select(col("vec_id").as("query_id"),
-        col("embedding").as("q_emb")), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosine_sim(col("n_emb"), col("q_emb")), 6).as("sim"))
-    topKPerQuery(rescored, k)
   }
 
   /** Per-label centroid table — the class-geometry diagnostic for a
@@ -1544,41 +569,763 @@ object Similarity {
     rescoreExact(cands, queries, corpus, k)
   }
 
-  // ── OPQ: rotation-optimized product quantization ─────────────────────
+  // ── ANN indexes: one quantizer, optionally behind an IVF partitioner ──
   //
-  // Faiss OPQMatrix / Ge et al., "Optimized Product Quantization"
-  // (CVPR'13), the non-parametric alternation: learn an ORTHOGONAL
-  // rotation R that re-axes the embedding space so the PQ subspace split
-  // cuts across the data's correlated directions, alternating
+  // The index-factory composition of Johnson et al. (FAISS): a
+  // [[Quantizer]] (identity, SQ8, PQ, or OPQ = rotation then PQ), an
+  // optional IVF centroid header (nlist × dim — tiny, broadcastable), and
+  // a code table, cid-partitioned on disk under the header so a probe's
+  // scan prunes to the probed `codes/cid=K/` directories — a 100 TB corpus
+  // search reads only nprobe/nlist of the index. "IVF16,SQ8" is
+  // (SQ8, nlist 16); "OPQ8,IVF16,PQ8" is (OPQ, nlist 16, m 8). Train,
+  // save/load, append, search, KNN join and drift each have ONE path; the
+  // quantizer supplies the only per-variant parts.
+
+  /** Which quantizer [[AnnIndex.train]] fits (the factory token). */
+  sealed trait QuantizerKind
+
+  /** A trained quantizer: how the code table stores a vector. Every
+    * header is driver-bounded and rides the encode/search plans as
+    * broadcast literals.
+    */
+  sealed trait Quantizer {
+    /** (Rotated) `embedding` → the stored code column. */
+    private[graft] def encode(emb: Column): Column
+    /** Stored codes → the reconstructed (rotated-space) vector. */
+    private[graft] def decode(codes: Column): Column
+    /** Width of the vectors it encodes; None when it has no header. */
+    private[graft] def dim: Option[Int]
+    /** The index-specific drift signal over a batch `embedding`. */
+    private[graft] def driftSignal: Option[(String, Column)]
+    /** OPQ's orthogonal pre-rotation; every other quantizer is axis-aligned. */
+    private[graft] def rotation: Option[Array[Array[Double]]] = None
+    private[operators] def saveHeader(spark: SparkSession, dir: String): Unit
+
+    /** Replace `embedding` with its rotation (all other columns kept) —
+      * the codegen'd `pca_project` kernel with a ZERO mean (a rotation is
+      * a PCA transform without the centering): fully distributed,
+      * shuffle-free, the dim² weight table shipping once per task.
+      */
+    private[graft] final def rotate(df: DataFrame): DataFrame = rotation.fold(df) { r =>
+      df.withColumn("embedding", call_function("pca_project", col("embedding"),
+        lit(Array.fill(r.length)(0.0)), lit(r.flatten), lit(r.length)))
+    }
+  }
+
+  object Quantizer {
+    case object Flat extends QuantizerKind
+    case object SQ8 extends QuantizerKind
+    case object PQ extends QuantizerKind
+    case object OPQ extends QuantizerKind
+
+    /** Raw float vectors: codes ARE the embedding. */
+    case object Identity extends Quantizer {
+      private[graft] def encode(emb: Column): Column = emb
+      private[graft] def decode(codes: Column): Column = codes
+      private[graft] def dim: Option[Int] = None
+      private[graft] def driftSignal: Option[(String, Column)] = None
+      private[operators] def saveHeader(spark: SparkSession, dir: String): Unit = ()
+    }
+
+    /** SQ8 (Faiss IndexScalarQuantizer QT_8bit): one byte per DIMENSION
+      * via per-dim linear [min, max] buckets — 4× smaller than float32
+      * (vs PQ's 32× at much higher reconstruction fidelity), trained by
+      * ONE min/max aggregation ([[sq8Train]]) instead of k-means, decode
+      * two FMAs per element. The standard first stop when a float corpus
+      * stops fitting the page cache but PQ recall is not acceptable.
+      * Bounded header (2 × dim floats).
+      */
+    final case class Scalar(mins: Array[Float], maxs: Array[Float]) extends Quantizer {
+      require(mins.length == maxs.length,
+        s"sq8: ${mins.length} mins vs ${maxs.length} maxs")
+      /** span 0 (constant dimension) encodes to code 0 and decodes to min. */
+      private[graft] def spans: Array[Float] = Array.tabulate(mins.length)(i => maxs(i) - mins(i))
+      private[graft] def dim: Option[Int] = Some(mins.length)
+
+      /** code_i = round((x_i − min_i) / span_i × 255), stored with a −128
+        * offset so the full 0..255 range fits a signed byte (PQ caps at
+        * ksub ≤ 128 instead — SQ needs all 8 bits). The arithmetic runs in
+        * DOUBLE with an explicit floor(… + 0.5), so the codes are
+        * bit-reproducible and the Verify replica can reproduce them
+        * exactly. Out-of-range values (vectors unseen at train) clamp.
+        */
+      private[graft] def encode(emb: Column): Column =
+        transform(emb, (x, i) => {
+          val mn = element_at(typedLit(mins.toSeq), i + 1).cast("double")
+          val span = element_at(typedLit(spans.toSeq), i + 1).cast("double")
+          (least(lit(255.0d), greatest(lit(0.0d),
+            floor(when(span > 0.0d, (x.cast("double") - mn) / span * 255.0d)
+              .otherwise(0.0d) + 0.5d))) - 128.0d).cast("tinyint")
+        })
+
+      /** min_i + (code_i + 128) / 255 × span_i, in double, cast float. */
+      private[graft] def decode(codes: Column): Column =
+        transform(codes, (c, i) => {
+          val mn = element_at(typedLit(mins.toSeq), i + 1).cast("double")
+          val span = element_at(typedLit(spans.toSeq), i + 1).cast("double")
+          (mn + (c.cast("double") + 128.0d) / 255.0d * span).cast("float")
+        })
+
+      /** `clamp_frac`: the fraction of a vector's components OUTSIDE the
+        * saved per-dimension [min, max] bounds — those clamp at encode and
+        * lose fidelity, so a rising clamp_frac means the BOUNDS need
+        * retraining even while list balance still looks healthy (the Faiss
+        * practice: re-check the scalar quantizer's ranges on every composed
+        * index, not just the coarse centroids). Component counts are exact
+        * integers, so the fraction is as reproducible as the cosines.
+        */
+      private[graft] def driftSignal: Option[(String, Column)] = {
+        val minsLit = typedLit(mins.toSeq)
+        val maxsLit = typedLit(maxs.toSeq)
+        Some("clamp_frac" -> size(filter(
+            transform(col("embedding"), (x, i) =>
+              x < element_at(minsLit, i + 1) || x > element_at(maxsLit, i + 1)),
+            b => b)).cast("double") / lit(mins.length.toDouble))
+      }
+
+      private[operators] def saveHeader(spark: SparkSession, dir: String): Unit = {
+        import spark.implicits._
+        val df = mins.indices.map(i => (i, mins(i), maxs(i))).toDF("i", "mn", "mx")
+        graft.SchemaCache.noteWrite(s"$dir/params", df.schema)
+        df.coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
+      }
+    }
+
+    /** Product quantization (Jégou, Douze, Schmid 2011), optionally behind
+      * OPQ's learned rotation (Ge et al. 2013). `books(j)(c)` is the
+      * dsub-wide centroid c of subspace j; codes are m bytes per vector
+      * (32× smaller than the floats at dim=64, m=8). Search scores
+      * cosine(query, reconstruction): asymmetric-distance ranking without
+      * the lookup table. `rotation` (dim×dim, row-major, 6-dp-rounded) is
+      * None for plain PQ; with it, lists and codebooks live in rotated space.
+      */
+    final case class Product(books: Array[Array[Array[Float]]],
+                             override val rotation: Option[Array[Array[Double]]] = None)
+        extends Quantizer {
+      private def m: Int = books.length
+      private def dsub: Int = books.head.head.length
+      private[graft] def dim: Option[Int] = Some(m * dsub)
+      rotation.foreach(r => require(r.length == m * dsub && r.forall(_.length == r.length),
+        s"opq rotation must be ${m * dsub}×${m * dsub}, got ${r.map(_.length).toSeq}"))
+
+      /** Per subspace, the nearest codebook centroid as a pure expression
+        * (squared L2 folds; ties break to the lowest code) — a single
+        * shuffle-free projection with the codebooks as plan literals.
+        */
+      private[graft] def encode(emb: Column): Column =
+        array((0 until m).map { j =>
+          val sub = slice(emb, j * dsub + 1, dsub)
+          val scored = books(j).zipWithIndex.map { case (cent, c) =>
+            struct((-l2SqCol(sub, cent)).as("nd"), lit(-c).as("nc"))
+          }
+          val best = if (scored.length == 1) scored.head else greatest(scored.toSeq: _*)
+          (-best.getField("nc")).cast("tinyint").as(s"c$j")
+        }: _*)
+
+      /** Concatenated per-subspace centroids — the decode side of the codes. */
+      private[graft] def decode(codes: Column): Column =
+        flatten(transform(sequence(lit(0), lit(m - 1)), j =>
+          element_at(typedLit(books.map(_.map(_.toSeq).toSeq).toSeq), j + 1)
+            .getItem(element_at(codes, j + 1).cast("int"))))
+
+      /** `mean_qcos`: a vector's cosine to its OWN reconstruction under the
+        * saved codebooks — sinking fidelity on new data is the
+        * codebook-retrain trigger (list balance can stay perfect while the
+        * codebooks stop describing the vectors). Encode + decode fuse into
+        * the assignment scan.
+        */
+      private[graft] def driftSignal: Option[(String, Column)] =
+        Some("mean_qcos" -> cosine_sim(col("embedding"), decode(encode(col("embedding")))))
+
+      /** One row per (subspace, code) centroid slice, plus the rotation
+        * weights — both derive from driver-side state, so the writes overlap.
+        */
+      private[operators] def saveHeader(spark: SparkSession, dir: String): Unit = {
+        import spark.implicits._
+        val cb = (for ((book, j) <- books.toSeq.zipWithIndex; (cent, c) <- book.toSeq.zipWithIndex)
+          yield (j, c, cent.toSeq)).toDF("j", "c", "centroid").coalesce(1)
+        graft.SchemaCache.noteWrite(s"$dir/codebooks", cb.schema)
+        inParallel(
+          cb.write.mode("overwrite").parquet(s"$dir/codebooks"),
+          rotation.foreach { r =>
+            val df = (for (k <- r.indices; i <- r.indices) yield (k, i, r(k)(i)))
+              .toDF("row_idx", "dim_idx", "weight")
+            graft.SchemaCache.noteWrite(s"$dir/rotation", df.schema)
+            df.coalesce(1).write.mode("overwrite").parquet(s"$dir/rotation")
+          })
+        ()
+      }
+    }
+
+    /** A saved index's header: `params/` is SQ8, `codebooks/` PQ (OPQ with
+      * `rotation/`), neither the identity. Parquet round-trips it bit-exactly.
+      */
+    private[operators] def load(spark: SparkSession, dir: String,
+                                has: String => Boolean): Quantizer =
+      if (has("params")) {
+        val rows = graft.SchemaCache.read(spark, s"$dir/params")
+          .select("i", "mn", "mx").collect()
+        val mins = new Array[Float](rows.length); val maxs = new Array[Float](rows.length)
+        rows.foreach { r => mins(r.getInt(0)) = r.getFloat(1); maxs(r.getInt(0)) = r.getFloat(2) }
+        Scalar(mins, maxs)
+      } else if (has("codebooks")) {
+        val (bookRows, rotRows) = inParallel(
+          graft.SchemaCache.read(spark, s"$dir/codebooks").collect()
+            .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray)),
+          if (has("rotation")) Some(graft.SchemaCache.read(spark, s"$dir/rotation")
+            .select("row_idx", "dim_idx", "weight").collect()) else None)
+        require(bookRows.nonEmpty, s"no codebook rows under $dir/codebooks")
+        val books = Array.tabulate(bookRows.map(_._1).max + 1)(j =>
+          bookRows.filter(_._1 == j).sortBy(_._2).map(_._3))
+        Product(books, rotRows.map { rows =>
+          val d = rows.map(_.getInt(0)).max + 1
+          val rot = Array.ofDim[Double](d, d)
+          rows.foreach(r => rot(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
+          rot
+        })
+      } else Identity
+  }
+
+  /** An ANN index: a quantizer, an optional IVF centroid header, and the
+    * code table (vec_id, cid when IVF, kept attribute columns, codes).
+    */
+  final case class AnnIndex(quantizer: Quantizer, centroids: Option[DataFrame],
+                            codes: DataFrame) {
+
+    /** Persist under one layout: `codes/` (partitioned by cid when there
+      * is an IVF header), `centroids/`, and the quantizer's header. Same-JVM
+      * loads skip footer inference (SchemaCache). The headers derive from
+      * driver-side state — independent of the code-table write, so every
+      * write overlaps.
+      */
+    def save(dir: String): Unit = {
+      val spark = codes.sparkSession
+      // a reused directory must not keep another index's headers: load
+      // infers the index shape from which headers exist
+      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Seq("centroids", "params", "codebooks", "rotation")
+        .foreach(h => fs.delete(new Path(dir, h), true))
+      inParallel(
+        centroids match {
+          case Some(c) => saveCentroidsAndLists(c, codes, dir)
+          case None =>
+            graft.SchemaCache.noteWrite(s"$dir/codes", codes.schema)
+            codes.write.mode("overwrite").parquet(s"$dir/codes")
+        },
+        quantizer.saveHeader(spark, dir))
+      ()
+    }
+
+    /** Top-k search for a (broadcast-sized) query set. With an IVF
+      * header: the nprobe nearest lists per query; the probed cid set
+      * (≤ nlist ints) prunes the code scan at the directory level and the
+      * bounded route set broadcasts into it, so lists are never shuffled;
+      * nprobe == nlist is the flat scan. Without: one shuffle-free map over
+      * the code table against the broadcast queries. Codes decode ONCE per
+      * row, before the query join.
+      *
+      * `corpus` adds the exact re-ranking tail (Jégou et al. 2011 §VI,
+      * "IVFADC+R"; Faiss IndexRefineFlat): rerank×k candidates per query
+      * re-score on their TRUE embeddings, fetched by id.
+      *
+      * `predicate` (Faiss IDSelector) filters INSIDE the pruned scan,
+      * before scoring; on a loaded index it pushes into the parquet read,
+      * cutting bytes. Exhaustive probing equals brute force over the
+      * matching corpus; a harsh filter under partial probing can empty a
+      * probed list — raise nprobe with selectivity.
+      */
+    def search(queries: DataFrame, k: Int, nprobe: Int = 4,
+               corpus: Option[DataFrame] = None, rerank: Int = 4,
+               predicate: Option[Column] = None): DataFrame =
+      probe(queries, k, nprobe, corpus, rerank, predicate, salt = None)
+
+    /** Distributed KNN JOIN for a corpus-sized query set, which [[search]]
+      * cannot take (it broadcasts the routes). Row-identical to [[search]]
+      * (spec-pinned): routes and lists join as a plain cid equi-join, and
+      * the rerank tail joins without broadcast hints. `salt > 1` splits
+      * each list into `salt` sub-lists (`vec_id mod salt`) and replicates
+      * each route across them — caps a skewed list's join key at
+      * list_size/salt rows; results are salt-invariant.
+      */
+    def knnJoin(queries: DataFrame, k: Int, nprobe: Int = 4, salt: Int = 1,
+                corpus: Option[DataFrame] = None, rerank: Int = 4): DataFrame =
+      probe(queries, k, nprobe, corpus, rerank, None, Some(salt))
+
+    /** The one search entry: argument checks, then everything in the
+      * quantizer's space (a rotation preserves cosine, and staying in one
+      * space keeps the code scan and the rerank bit-consistent).
+      */
+    private def probe(queries: DataFrame, k: Int, nprobe: Int,
+                      corpus: Option[DataFrame], rerank: Int,
+                      predicate: Option[Column], salt: Option[Int]): DataFrame = {
+      require(k >= 1, s"search: k must be >= 1, got $k")
+      require(nprobe >= 1, s"search: nprobe must be >= 1, got $nprobe")
+      require(rerank >= 1, s"search: rerank must be >= 1, got $rerank")
+      salt.foreach(s => require(s >= 1 && s <= 4096, s"search: salt must be in 1..4096, got $s"))
+      require(salt.isEmpty || centroids.nonEmpty,
+        "knnJoin: needs an IVF index (the join runs per list)")
+      val q = quantizer.rotate(queries)
+      def decoded(lists: DataFrame, keys: String*): DataFrame = {
+        val kept = predicate.fold(lists)(lists.filter)
+        kept.select(keys.map(col) :+ col("vec_id") :+
+          quantizer.decode(col("codes")).as("recon"): _*)
+      }
+      val pairs = centroids match {
+        case None =>
+          decoded(codes).crossJoin(broadcast(
+            q.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))))
+        case Some(header) =>
+          val (probed, cids) = probeRoutes(header, q, nprobe)
+          val lists = decoded(codes.filter(col("cid").isin(cids: _*)), "cid")
+          salt match {
+            case None => lists.join(broadcast(probed), "cid")
+            case Some(s) =>
+              val routes =
+                if (s == 1) probed.withColumn("_s", lit(0))
+                else probed.withColumn("_s", explode(sequence(lit(0), lit(s - 1))))
+              lists.withColumn("_s", pmod(col("vec_id"), lit(s.toLong)).cast("int"))
+                .join(routes, Seq("cid", "_s"))
+          }
+      }
+      val top = topKPerQuery(pairs
+        .filter(col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"),
+          round(cosine_sim(col("recon"), col("q_emb")), 6).as("sim")),
+        if (corpus.isDefined) k * rerank else k)
+      corpus.fold(top)(c => rescoreExact(top.select("query_id", "neighbor_id"),
+        q, quantizer.rotate(c), k, bcast = salt.isEmpty))
+    }
+
+    /** Centroid-drift monitor, the retrain trigger for
+      * [[AnnIndex.append]]'s steady state, in its STREAMING-accumulator
+      * form: per list, a batch's count and DECIMAL(18,6) sums of each
+      * vector's 6-dp cosine to its ASSIGNED centroid plus the quantizer's
+      * own signal (`clamp_frac` for SQ8, `mean_qcos` for PQ/OPQ), measured
+      * in the quantizer's (rotated) space. Shuffle-free assignment, one
+      * nlist-keyed aggregation; [[driftStatsFinalize]] divides once over
+      * any union of sums frames.
+      */
+    def driftSums(vecs: DataFrame): DataFrame = {
+      require(centroids.nonEmpty, "driftSums: drift is per IVF list; the index has none")
+      // batch hygiene runs inside assignBatch: a null embedding would be
+      // counted in n while its null cosine drops from the sum, silently
+      // deflating mean_cos and triggering spurious retrains
+      val (cents, assigned) = assignBatch(centroids.get, vecs, quantizer, "driftSums")
+      driftSumsFrom(cents, assigned, quantizer.driftSignal.toSeq)
+    }
+
+    /** The one-shot batch monitor: [[driftSums]] finalized to per-list means. */
+    def driftStats(vecs: DataFrame): DataFrame = driftStatsFinalize(driftSums(vecs))
+  }
+
+  object AnnIndex {
+
+    /** Train an index: the quantizer, plus — when `nlist > 0` — IVF lists
+      * (seeded centroids + `iters` Lloyd steps; re-train with higher
+      * `iters` to tighten lists as the corpus drifts), then ONE encode
+      * projection over the assigned corpus, carrying cid through with no
+      * re-join. `m`/`ksub` size PQ/OPQ codebooks and `opqIters` counts the
+      * OPQ alternations. `keep` carries attribute columns into the code
+      * table so search predicates filter inside the pruned scan.
+      */
+    def train(spark: SparkSession, corpus: DataFrame,
+              quantizer: QuantizerKind = Quantizer.Flat, nlist: Int = 0,
+              iters: Int = 1, m: Int = 8, ksub: Int = 16, opqIters: Int = 3,
+              keep: Seq[String] = Nil): AnnIndex = {
+      require(nlist >= 0, s"train: nlist must be >= 0 (0 = no IVF), got $nlist")
+      // the PQ trainers and the IVF assignment share ONE corpus count
+      // (each would otherwise scan for it)
+      val n = quantizer match {
+        case Quantizer.PQ | Quantizer.OPQ => Some(corpus.count())
+        case _ => None
+      }
+      def fit(): Quantizer = quantizer match {
+        case Quantizer.Flat => Quantizer.Identity
+        case Quantizer.SQ8 => sq8Train(corpus)
+        case Quantizer.PQ =>
+          Quantizer.Product(lloydSubBooks(pqSample(corpus, m, ksub, n), m, ksub, pqIters))
+        case Quantizer.OPQ => opqTrain(corpus, m, ksub, opqIters, n)
+      }
+      if (nlist == 0) {
+        val q = fit()
+        // spread before a rotate+encode projection (the plant-spread rule;
+        // see ivfAssign) — per-row kernels, so results are identical
+        val src = if (q.rotation.isDefined) graft.Tables.spread(corpus) else corpus
+        AnnIndex(q, None, encodeTable(q, q.rotate(src), keep))
+      } else {
+        // OPQ trains first: the IVF lists live in its rotated space. Every
+        // other quantizer trains independently of the assignment pass
+        // (k-means map vs min/max or codebook sample) — overlap their jobs
+        val ((cents, assigned), q) =
+          if (quantizer == Quantizer.OPQ) {
+            val q = fit()
+            (ivfAssign(spark, q.rotate(corpus), nlist, iters, n, keep), q)
+          } else inParallel(ivfAssign(spark, corpus, nlist, iters, n, keep), fit())
+        AnnIndex(q, Some(cents), encodeTable(q, assigned, "cid" +: keep))
+      }
+    }
+
+    def load(spark: SparkSession, dir: String): AnnIndex = {
+      val has = headers(spark, dir)
+      AnnIndex(Quantizer.load(spark, dir, has),
+        if (has("centroids")) Some(graft.SchemaCache.read(spark, s"$dir/centroids")) else None,
+        graft.SchemaCache.read(spark, s"$dir/codes"))
+    }
+
+    /** Incremental ingest into a saved index: assign NEW vectors to its
+      * SAVED centroids, encode under its SAVED quantizer (out-of-range SQ8
+      * components clamp, the quantizer's standard behavior) and APPEND to
+      * the code table — no retrain, no rewrite of existing codes. Appended
+      * codes are bit-identical to a from-scratch encode of the union under
+      * the same headers, so searches answer exactly alike (spec-pinned).
+      * This is the steady-state crawl path: a streaming crawl runs it per
+      * micro-batch inside `foreachBatch`, and the index retrains only when
+      * [[AnnIndex.driftSums]] says the distribution moved. A batch with a
+      * different embedding width (or null embeddings) would land in the
+      * table but score nonsense — it fails loudly, on the BATCH scan only,
+      * before any index state is touched.
+      */
+    def append(spark: SparkSession, dir: String, newVecs: DataFrame): Unit = {
+      val has = headers(spark, dir)
+      if (has("centroids")) {
+        val header = graft.SchemaCache.read(spark, s"$dir/centroids")
+        // the quantizer-header read and the batch assignment are
+        // independent — overlap them, unless the quantizer rotates (OPQ
+        // assigns in rotated space, so its header comes first)
+        val (q, (_, assigned)) =
+          if (has("rotation")) {
+            val q = Quantizer.load(spark, dir, has)
+            (q, assignBatch(header, newVecs, q, "append"))
+          } else inParallel(Quantizer.load(spark, dir, has),
+            assignBatch(header, newVecs, Quantizer.Identity, "append"))
+        clusterByCid(encodeTable(q, assigned, Seq("cid")))
+          .write.mode("append").partitionBy("cid").parquet(s"$dir/codes")
+      } else {
+        val q = Quantizer.load(spark, dir, has)
+        failOnBadEmbeddings(newVecs, q.dim.getOrElse(graft.SchemaCache
+          .read(spark, s"$dir/codes").select(size(col("codes"))).head().getInt(0)), "append")
+        encodeTable(q, q.rotate(newVecs), Nil)
+          .write.mode("append").parquet(s"$dir/codes")
+      }
+    }
+
+    /** Which header directories a saved index has (filesystem metadata,
+      * no Spark job).
+      */
+    private def headers(spark: SparkSession, dir: String): String => Boolean = {
+      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      h => fs.exists(new Path(dir, h))
+    }
+
+    private def encodeTable(q: Quantizer, vecs: DataFrame, keep: Seq[String]): DataFrame =
+      vecs.select(col("vec_id") +: keep.map(col) :+ q.encode(col("embedding")).as("codes"): _*)
+  }
+
+  /** Shared on-disk layout for an IVF index: the centroid header plus the
+    * cid-partitioned code table (the pruning structure the probe relies on).
+    */
+  private def saveCentroidsAndLists(centroids: DataFrame, payload: DataFrame,
+                                    dir: String): Unit = {
+    // same-JVM loads skip the footer-inference job (SchemaCache)
+    graft.SchemaCache.noteWrite(s"$dir/centroids", centroids.schema)
+    graft.SchemaCache.noteWrite(s"$dir/codes", payload.schema, Seq("cid"))
+    // header and lists land in different directories — overlap the writes
+    inParallel(
+      centroids.write.mode("overwrite").parquet(s"$dir/centroids"),
+      clusterByCid(payload).write.mode("overwrite")
+        .partitionBy("cid").parquet(s"$dir/codes"))
+    ()
+  }
+
+  /** Cluster a cid-partitioned write by its partition key (guide-standard
+    * hash distribution before a partitioned write): without it every input
+    * partition opens a file in every cid directory — tasks × nlist tiny
+    * files whose per-file footer/open cost then dominates the probe-time
+    * pruned read. One exchange on cid bounds it to files-per-cid ≈ 1; row
+    * content is unchanged. The partition count is pinned to the session's
+    * parallelism (scale-adaptive; an unpinned repartition lets AQE coalesce
+    * the small shuffle to ONE task, serializing the upstream encode and the
+    * write).
+    */
+  private def clusterByCid(payload: DataFrame): DataFrame =
+    payload.repartition(
+      payload.sparkSession.sparkContext.defaultParallelism, col("cid"))
+
+  /** Assign a RAW vector batch to a centroid header in the quantizer's
+    * space — the ingest-time machinery [[AnnIndex.append]] and the drift
+    * monitor share. A rotating quantizer checks the RAW batch first (a
+    * wrong-width vector must fail before the rotation kernel ever runs),
+    * then assigns the rotated batch without re-checking (width is
+    * rotation-invariant, so a second scan could never fire).
+    */
+  private def assignBatch(centDf: DataFrame, vecs: DataFrame, q: Quantizer,
+                          op: String): (Seq[(Int, Array[Float])], DataFrame) =
+    if (q.rotation.isEmpty) assignToHeader(centDf, vecs, op)
+    else {
+      failOnBadEmbeddings(vecs, q.dim.get, op)
+      assignToHeader(centDf, q.rotate(vecs), op, checked = true)
+    }
+
+  /** Assign a vector batch to an in-memory centroid header — the core
+    * [[assignBatch]] and every drift monitor share: collect the
+    * (bounded) header, fail loudly on a mis-sized batch, then the literal
+    * kernel under the codegen cliff / broadcast join above. Returns the
+    * sorted header rows alongside the (vec_id, cid, embedding) batch.
+    * `checked = true` skips the batch hygiene scan — for callers that
+    * already validated the RAW batch and then rotated it (width is
+    * rotation-invariant, so re-checking would pay a second full pass
+    * that can never fire, plus a redundant full-batch rotation).
+    */
+  private def assignToHeader(centDf: DataFrame, vecs: DataFrame, op: String,
+                             checked: Boolean = false)
+      : (Seq[(Int, Array[Float])], DataFrame) = {
+    val cents = centDf.collect()
+      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1).toSeq
+    if (!checked) failOnBadEmbeddings(vecs, cents.head._2.length, op)
+    // spread before the per-vector assignment (and the encode the ingest
+    // callers chain onto it) — the plant-spread rule; see ivfAssign
+    val vecsS = graft.Tables.spread(vecs)
+    val assigned =
+      if (cents.length <= literalAssignMaxLists)
+        vecsS.select(col("vec_id"),
+          nearestCidCol(cents, col("embedding")).as("cid"), col("embedding"))
+      else assignByJoin(vecsS, centDf)
+        .select(col("vec_id"), col("cid"), col("embedding"))
+    (cents, assigned)
+  }
+
+  /** Probe routing: the nprobe nearest lists per query, plus the distinct
+    * probed-cid set (≤ nlist ints — bounded driver traffic) for
+    * directory-level list pruning.
+    */
+  private def probeRoutes(centroids: DataFrame, queries: DataFrame,
+                          nprobe: Int): (DataFrame, Seq[Int]) = {
+    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    val probes = q.crossJoin(broadcast(centroids))
+      .select(col("query_id"), col("q_emb"), col("cid"),
+        cosine_sim(col("q_emb"), col("centroid")).as("csim"))
+    val wp = Window.partitionBy("query_id").orderBy(col("csim").desc, col("cid").asc)
+    val probed = probes.withColumn("rn", row_number().over(wp)).filter(col("rn") <= nprobe)
+      .select(col("query_id"), col("q_emb"), col("cid"))
+    (probed, probed.select("cid").distinct().collect().map(_.getInt(0)).toSeq)
+  }
+
+  /** Exact-cosine re-score of an id-only candidate set: fetch the true
+    * embeddings by id, score against the queries, keep top-k. The
+    * candidate set is bounded by construction (|queries| × rerank × k id
+    * pairs), so it BROADCASTS into the corpus join — the 100 TB corpus is
+    * never shuffled for the re-rank; each scan task filters its rows
+    * against the broadcast ids. `bcast = false` is the KNN-join form, where
+    * both sides may be corpus-sized: plain equi-joins, AQE decides.
+    */
+  private def rescoreExact(cands: DataFrame, queries: DataFrame,
+                           corpus: DataFrame, k: Int,
+                           bcast: Boolean = true): DataFrame = {
+    def hint(df: DataFrame) = if (bcast) broadcast(df) else df
+    val rescored = corpus
+      .select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb"))
+      .join(hint(cands), "neighbor_id")
+      .join(hint(queries.select(col("vec_id").as("query_id"),
+        col("embedding").as("q_emb"))), "query_id")
+      .select(col("query_id"), col("neighbor_id"),
+        round(cosine_sim(col("n_emb"), col("q_emb")), 6).as("sim"))
+    topKPerQuery(rescored, k)
+  }
+
+  /** Batch-hygiene guard shared by the index-maintenance operators: a
+    * null or wrong-width embedding would land in lists / score garbage /
+    * bias statistics downstream — fail loudly, on the BATCH scan only
+    * (`size(null)` is null, so a bare `=!= dim` filter would let null
+    * embeddings slip past).
+    */
+  private[operators] def failOnBadEmbeddings(vecs: DataFrame, dim: Int, op: String): Unit = {
+    val bad = vecs
+      .filter(col("embedding").isNull || size(col("embedding")) =!= dim).limit(1)
+      .select(col("vec_id"), coalesce(size(col("embedding")), lit(-1)).as("d"))
+      .collect()
+    if (bad.nonEmpty) {
+      val d = bad.head.getInt(1)
+      val what = if (d < 0) "a null embedding" else s"dimension $d"
+      throw new IllegalArgumentException(
+        s"$op: vec_id ${bad.head.getLong(0)} has $what, index expects $dim")
+    }
+  }
+
+  /** Shared drift-aggregation tail, split into a SUMS stage and a FINALIZE
+    * stage so the monitor composes over a stream: cosine of each batch
+    * vector to its ASSIGNED centroid plus the quantizer's per-vector
+    * `extras`, reduced per list to an exact count and DECIMAL(18,6) sums of
+    * the 6-dp per-vector signals. Decimal sums are associative — a
+    * foreachBatch crawl appends one sums frame per micro-batch and
+    * [[driftStatsFinalize]] divides ONCE over their union, so the
+    * accumulated stream stats are bit-equal to the batch monitor over the
+    * union of the batches.
+    */
+  private def driftSumsFrom(cents: Seq[(Int, Array[Float])],
+                            assigned: DataFrame,
+                            extras: Seq[(String, Column)] = Nil): DataFrame = {
+    val centLit = typedLit(cents.map(_._2.toSeq))
+    val perVec = assigned.select(
+      col("cid") +:
+      round(cosine_sim(col("embedding"),
+        element_at(centLit, col("cid") + 1)), 6).as("cos") +:
+      extras.map { case (nme, c) => round(c, 6).as(nme) }: _*)
+    val sums = sum(col("cos").cast("decimal(18,6)")).as("sum_cos") +:
+      extras.map { case (nme, _) =>
+        sum(col(nme).cast("decimal(18,6)")).as(s"sum_$nme") }
+    perVec.groupBy("cid")
+      .agg(count(lit(1)).as("n"), sums: _*)
+  }
+
+  /** Reduce drift SUMS rows (one or many micro-batches' worth, unioned)
+    * to the per-list mean stats: per cid, counts add, decimal sums add
+    * losslessly, and each mean divides+rounds ONCE at the end — the house
+    * determinism rule, so finalize(union of batch sums) is bit-equal to
+    * the one-shot batch monitor. Extra signal columns are discovered from
+    * the `sum_<name>` schema, so one finalize serves every quantizer.
+    */
+  def driftStatsFinalize(sums: DataFrame): DataFrame = {
+    val extraNames = sums.columns
+      .filter(c => c.startsWith("sum_") && c != "sum_cos")
+      .map(_.stripPrefix("sum_")).toSeq
+    sums.groupBy("cid")
+      .agg(sum(col("n")).as("n"),
+        sum(col("sum_cos")).as("_s") +:
+          extraNames.map(nme => sum(col(s"sum_$nme")).as(s"_$nme")): _*)
+      .select(col("cid") +: col("n") +:
+        round(col("_s").cast("double") / col("n"), 6).as("mean_cos") +:
+        extraNames.map { nme =>
+          round(col(s"_$nme").cast("double") / col("n"), 6).as(nme) }: _*)
+  }
+
+  /** Train = exact per-dimension min/max over the corpus scan (no
+    * sampling, no iterations — the quantizer is as deterministic as the
+    * data), computed as a posexplode + dimension-keyed aggregation: the
+    * shuffle carries at most partitions × dim partial rows and the output
+    * is the dim-bounded header. The obvious alternative — one agg with
+    * 2×dim min/max columns — is fine at fixture widths but bloats codegen
+    * and planning quadratically at production embedding widths
+    * (1024-4096 → a 2048-8192-column aggregate); min/max are exact and
+    * order-independent, so both forms produce identical bounds.
+    */
+  private def sq8Train(corpus: DataFrame): Quantizer.Scalar = {
+    val vecs = corpus.filter(col("embedding").isNotNull)
+    val probe = vecs.select(size(col("embedding"))).limit(1).collect()
+    require(probe.nonEmpty, "sq8Train: empty corpus (no non-null embeddings)")
+    val dim = probe.head.getInt(0)
+    // a shorter vector would leave null min/max holes in some dimension —
+    // fail loudly like the other index builders. The hygiene scan and the
+    // min/max aggregation are independent full passes: overlap their jobs
+    // (the bounds are discarded unexhausted when the guard throws)
+    val (_, rows) = inParallel(
+      failOnBadEmbeddings(vecs, dim, "sq8Train"),
+      vecs
+        .select(posexplode(col("embedding")).as(Seq("pos", "x")))
+        .groupBy("pos")
+        .agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
+        .collect())
+    val mins = new Array[Float](dim); val maxs = new Array[Float](dim)
+    rows.foreach { r =>
+      mins(r.getInt(0)) = r.getFloat(1); maxs(r.getInt(0)) = r.getFloat(2)
+    }
+    Quantizer.Scalar(mins, maxs)
+  }
+
+  // ── PQ / OPQ training ──────────────────────────────────────────────────
+  //
+  // Codebooks train per subspace on a BOUNDED deterministic sample
+  // (≤ ksub × pqTrainPerCent vectors — a few hundred KB however big the
+  // corpus is), Lloyd-refined driver-side exactly like a production PQ
+  // trainer. OPQ (Faiss OPQMatrix / Ge et al., "Optimized Product
+  // Quantization", CVPR'13, the non-parametric alternation) learns an
+  // ORTHOGONAL rotation R that re-axes the embedding space so the PQ
+  // subspace split cuts across the data's correlated directions,
+  // alternating
   //   (1) codebooks ← Lloyd on {R·x}   (the shared [[lloydSubBooks]])
   //   (2) R ← argmin_R Σ‖R·xᵢ − x̂ᵢ‖²  (orthogonal Procrustes via SVD of
   //       the cross-moment Σ x̂ᵢ·xᵢᵀ)
-  // over the same bounded strided sample pqTrain uses. Everything trains
-  // driver-side (sample ≤ ksub×64 vectors, moments are dim×dim); the
-  // rotation then rides every corpus scan as the codegen'd `pca_project`
-  // kernel with a ZERO mean (a rotation is a PCA transform without the
-  // centering), so encode and search keep the exact PQ plan shapes —
-  // shuffle-free code-table scans, broadcast queries, bounded rerank.
+  // over the same sample. Everything trains driver-side (moments are
+  // dim×dim); the rotation then rides every corpus scan as `pca_project`.
   //
   // Determinism contract (the Verify replica re-derives every step):
   // sample is the vec_id-ordered stride, rotations/reconstructions use
   // the Pca.Transform op order (double accumulate, ascending index,
-  // float emit), Lloyd ties break strict-<, the SVD rides the pinned
-  // cyclic-Jacobi spec on MᵀM, and the FINAL rotation rounds HALF_UP to
-  // 6 dp before the closing codebook refit — the rounded table IS the
-  // artifact, so a saved/loaded model encodes identically.
+  // float emit), Lloyd ties break strict-<, empty cells keep their
+  // previous centroid, the SVD rides the pinned cyclic-Jacobi spec on
+  // MᵀM, and the FINAL rotation rounds HALF_UP to 6 dp before the closing
+  // codebook refit — the rounded table IS the artifact, so a saved/loaded
+  // model encodes identically.
 
-  /** A trained OPQ model: the 6-dp-rounded orthogonal rotation (dim×dim,
-    * row-major — row k is output component k) and the codebooks trained
-    * in rotated space. Driver-bounded: dim² doubles + m×ksub×dsub floats.
-    */
-  final case class OpqModel(rotation: Array[Array[Double]], cb: PqCodebooks) {
-    def dim: Int = rotation.length
-    require(rotation.forall(_.length == dim),
-      s"opq rotation must be square, got ${rotation.map(_.length).toSeq}")
-    require(cb.dim == dim,
-      s"opq codebooks dim ${cb.dim} != rotation dim $dim")
+  private val pqTrainPerCent = 64
+
+  /** Lloyd steps per codebook fit. */
+  private val pqIters = 3
+
+  /** The deterministic strided training sample (vec_id order). */
+  private def pqSample(corpus: DataFrame, m: Int, ksub: Int,
+                       knownCount: Option[Long]): Array[Array[Float]] = {
+    // codes are stored as signed bytes; ksub=256 (classic 8-bit PQ) would
+    // need an offset encoding — not worth it at embedding dims this small
+    require(ksub >= 1 && ksub <= 128, s"PQ: ksub=$ksub must fit a signed byte")
+    val n = knownCount.getOrElse(corpus.count())
+    val stride = math.max(n / (ksub.toLong * pqTrainPerCent), 1L)
+    val sample = corpus.filter(col("vec_id") % stride === 0)
+      .orderBy("vec_id").select("embedding")
+      .collect().map(_.getSeq[Float](0).toArray)
+    require(sample.nonEmpty, "PQ: empty corpus")
+    val dim = sample.head.length
+    require(dim % m == 0, s"PQ: dim $dim not divisible by m=$m")
+    sample
   }
+
+  /** Per-subspace Lloyd training over an in-driver sample — the k-means
+    * core shared by PQ training and the per-iteration codebook refit in
+    * [[opqTrain]]. Deterministic: strided seeding, strict-< tie-breaks,
+    * empty cells keep their previous centroid.
+    */
+  private def lloydSubBooks(sample: Array[Array[Float]], m: Int, ksub: Int,
+                            iters: Int): Array[Array[Array[Float]]] = {
+    val dsub = sample.head.length / m
+    Array.tabulate(m) { j =>
+      val subs = sample.map(v => v.slice(j * dsub, (j + 1) * dsub))
+      // seed spread across the sample, like the IVF seeding stride
+      val seedStride = math.max(subs.length / ksub, 1)
+      var cents = Array.tabulate(math.min(ksub, subs.length))(c => subs(c * seedStride).clone())
+      for (_ <- 1 to iters) {
+        val sums = Array.fill(cents.length)(new Array[Double](dsub))
+        val counts = new Array[Long](cents.length)
+        subs.foreach { s =>
+          val c = nearestSub(cents, s)
+          counts(c) += 1
+          var i = 0; while (i < dsub) { sums(c)(i) += s(i); i += 1 }
+        }
+        cents = Array.tabulate(cents.length) { c =>
+          if (counts(c) == 0) cents(c)
+          else Array.tabulate(dsub)(i => (sums(c)(i) / counts(c)).toFloat)
+        }
+      }
+      cents
+    }
+  }
+
+  private def nearestSub(cents: Array[Array[Float]], s: Array[Float]): Int = {
+    var best = 0; var bestD = Double.MaxValue
+    var c = 0
+    while (c < cents.length) {
+      var d = 0.0; var i = 0
+      while (i < s.length) { val t = s(i) - cents(c)(i); d += t * t; i += 1 }
+      if (d < bestD) { bestD = d; best = c } // strict < : ties keep lowest c
+      c += 1
+    }
+    best
+  }
+
+  /** Squared-L2 between a dsub-slice of the embedding and a centroid
+    * literal, as a pure fold expression.
+    */
+  private def l2SqCol(sub: Column, cent: Array[Float]): Column =
+    aggregate(zip_with(sub, typedLit(cent), (x, y) => (x - y) * (x - y)),
+      lit(0.0d), (acc, v) => acc + v.cast("double"))
 
   /** Rotate one sample vector under R — bit-identical to what the
     * `pca_project` kernel does on the cluster with a zero mean (same
@@ -1666,30 +1413,22 @@ object Similarity {
     }
   }
 
-  /** Train an OPQ model: `opqIters` alternations of codebook refit and
-    * Procrustes rotation update over the pqTrain strided sample, then the
+  /** Train an OPQ quantizer: `opqIters` alternations of codebook refit
+    * and Procrustes rotation update over the PQ strided sample, then the
     * 6-dp rounding and a final codebook refit under the ROUNDED rotation
     * (so the persisted artifact and the training state are one thing).
     */
-  def opqTrain(corpus: DataFrame, m: Int = 8, ksub: Int = 16,
-               iters: Int = 3, opqIters: Int = 3,
-               knownCount: Option[Long] = None): OpqModel = {
-    require(ksub >= 1 && ksub <= 128, s"opqTrain: ksub=$ksub must fit a signed byte")
+  private def opqTrain(corpus: DataFrame, m: Int, ksub: Int, opqIters: Int,
+                       knownCount: Option[Long]): Quantizer.Product = {
     require(opqIters >= 1, s"opqTrain: opqIters=$opqIters must be >= 1")
-    val n = knownCount.getOrElse(corpus.count())
-    val stride = math.max(n / (ksub.toLong * pqTrainPerCent), 1L)
-    val sample = corpus.filter(col("vec_id") % stride === 0)
-      .orderBy("vec_id").select("embedding")
-      .collect().map(_.getSeq[Float](0).toArray)
-    require(sample.nonEmpty, "opqTrain: empty corpus")
+    val sample = pqSample(corpus, m, ksub, knownCount)
     val dim = sample.head.length
-    require(dim % m == 0, s"opqTrain: dim $dim not divisible by m=$m")
     var r = Array.tabulate(dim, dim)((a, b) => if (a == b) 1.0 else 0.0)
     var it = 0
     var stalled = false
     while (it < opqIters && !stalled) {
       val rot = sample.map(applyRotation(r, _))
-      val books = lloydSubBooks(rot, m, ksub, iters)
+      val books = lloydSubBooks(rot, m, ksub, pqIters)
       val recon = rot.map(reconstructSample(_, books))
       procrustesRotation(sample, recon) match {
         case Some(next) => r = next
@@ -1699,150 +1438,6 @@ object Similarity {
     }
     val rounded = r.map(_.map(Pca.round6))
     val rotFinal = sample.map(applyRotation(rounded, _))
-    OpqModel(rounded, PqCodebooks(dim, m, lloydSubBooks(rotFinal, m, ksub, iters)))
-  }
-
-  /** The rotation as a codegen'd scan column — `pca_project` with a zero
-    * mean and outDim = dim. Fully distributed, shuffle-free; the dim²
-    * weight table ships once per task as a plan reference object.
-    */
-  def opqRotateCol(embedding: Column, model: OpqModel): Column =
-    call_function("pca_project", embedding,
-      lit(Array.fill(model.dim)(0.0)), lit(model.rotation.flatten),
-      lit(model.dim))
-
-  /** Replace `embedding` with its rotation (all other columns kept). */
-  def opqRotate(df: DataFrame, model: OpqModel): DataFrame =
-    df.withColumn("embedding", opqRotateCol(col("embedding"), model))
-
-  /** Encode the corpus in rotated space: rotation fuses into the same
-    * scan as the code assignment — one shuffle-free projection, exactly
-    * the [[pqEncode]] plan with the rotation kernel ahead of it.
-    */
-  def opqEncodeCorpus(corpus: DataFrame, model: OpqModel,
-                      keep: Seq[String] = Nil): DataFrame =
-    // spread before the rotate+encode projection (the plant-spread rule;
-    // see ivfAssign) — per-row kernels, so results are identical
-    pqEncode(opqRotate(graft.Tables.spread(corpus), model), model.cb, keep)
-
-  /** OPQ search with the exact re-ranking tail, everything in rotated
-    * space (a rotation preserves cosine, so rotated-space similarities
-    * ARE the answer — and staying in one space keeps the candidate
-    * scoring and the rerank bit-consistent). Same plan as
-    * [[pqSearchRerank]]: shuffle-free code scan, broadcast queries,
-    * broadcast bounded candidate set into the corpus rerank.
-    */
-  def opqSearchRerank(codes: DataFrame, queries: DataFrame, corpus: DataFrame,
-                      model: OpqModel, k: Int, rerank: Int = 4): DataFrame =
-    pqSearchRerank(codes, opqRotate(queries, model), opqRotate(corpus, model),
-      model.cb, k, rerank)
-
-  private def saveRotation(spark: SparkSession, rotation: Array[Array[Double]],
-                           dir: String): Unit = {
-    import spark.implicits._
-    val rows = for {
-      k <- rotation.indices
-      i <- rotation.indices
-    } yield (k, i, rotation(k)(i))
-    val df = rows.toDF("row_idx", "dim_idx", "weight")
-    graft.SchemaCache.noteWrite(dir, df.schema)
-    df.coalesce(1).write.mode("overwrite").parquet(dir)
-  }
-
-  private def loadRotation(spark: SparkSession, dir: String): Array[Array[Double]] = {
-    val rows = graft.SchemaCache.read(spark, dir)
-      .select("row_idx", "dim_idx", "weight").collect()
-    require(rows.nonEmpty, s"loadRotation: no rotation rows under $dir")
-    val dim = rows.map(_.getInt(0)).max + 1
-    val rot = Array.ofDim[Double](dim, dim)
-    rows.foreach(r => rot(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
-    rot
-  }
-
-  /** One-directory OPQ artifact: rotation weights + codebooks. */
-  def opqSave(spark: SparkSession, model: OpqModel, dir: String): Unit = {
-    // both tables derive from driver-side state — overlap the two writes
-    inParallel(
-      saveRotation(spark, model.rotation, s"$dir/rotation"),
-      saveCodebooks(spark, model.cb, s"$dir/codebooks"))
-    ()
-  }
-
-  /** Load a persisted OPQ model (parquet round-trips the 6-dp doubles
-    * bit-exactly, so a loaded model rotates and encodes identically).
-    */
-  def opqLoad(spark: SparkSession, dir: String): OpqModel =
-    OpqModel(loadRotation(spark, s"$dir/rotation"),
-      loadCodebooks(spark, s"$dir/codebooks"))
-
-  // ── IVF-OPQ: pruning + rotation + PQ, the full composition ──────────
-  //
-  // Faiss `OPQ..,IVF..,PQ..` index-factory shape: the rotation re-axes
-  // the space, the IVF lists prune the scan to nprobe/nlist, and the PQ
-  // codes shrink what remains 32× — the savings multiply, which is the
-  // production geometry for billion-vector corpora. Everything trains
-  // once in rotated space (centroids, lists, codebooks all live there),
-  // so search is: rotate the queries (broadcast-sized), probe, scan the
-  // cid-pruned code partitions, exact-rerank in rotated space.
-
-  final case class IvfOpqIndex(model: OpqModel, inner: IvfPqIndex) {
-    def save(dir: String): Unit = {
-      // rotation is driver-side state — overlap it with the inner writes
-      inParallel(
-        saveRotation(inner.codes.sparkSession, model.rotation, s"$dir/rotation"),
-        inner.save(dir))
-      ()
-    }
-  }
-
-  /** Train the composed index: OPQ rotation+codebooks from the bounded
-    * sample, then IVF lists over the ROTATED corpus (one scan-fused
-    * rotation feeds both the centroid assignment and the code encode).
-    */
-  def ivfOpqTrain(spark: SparkSession, corpus: DataFrame, nlist: Int = 16,
-                  m: Int = 8, ksub: Int = 16, ivfIters: Int = 1,
-                  opqIters: Int = 3): IvfOpqIndex = {
-    val n = corpus.count()
-    val model = opqTrain(corpus, m, ksub, iters = 3, opqIters = opqIters,
-      knownCount = Some(n))
-    val rot = opqRotate(corpus, model)
-    val (centroids, assigned) = ivfAssign(spark, rot, nlist, ivfIters, Some(n))
-    IvfOpqIndex(model,
-      IvfPqIndex(centroids, pqEncode(assigned, model.cb, keep = Seq("cid")),
-        model.cb))
-  }
-
-  def ivfOpqLoad(spark: SparkSession, dir: String): IvfOpqIndex =
-    IvfOpqIndex(
-      OpqModel(loadRotation(spark, s"$dir/rotation"),
-        loadCodebooks(spark, s"$dir/codebooks")),
-      ivfPqLoad(spark, dir))
-
-  /** Probe-pruned search with the exact re-ranking tail, everything in
-    * rotated space (see [[opqSearchRerank]]) — the [[ivfPqSearchRerank]]
-    * plan with the query/corpus rotation fused into their scans.
-    */
-  def ivfOpqSearchRerank(index: IvfOpqIndex, queries: DataFrame,
-                         corpus: DataFrame, k: Int, nprobe: Int = 4,
-                         rerank: Int = 4): DataFrame =
-    ivfPqSearchRerank(index.inner, opqRotate(queries, index.model),
-      opqRotate(corpus, index.model), k, nprobe, rerank)
-
-  /** Incremental ingest for the composed index (the steady-state crawl
-    * path, like [[ivfAppend]]/[[ivfSq8Append]]): rotate the batch under
-    * the SAVED rotation, assign against the saved rotated-space
-    * centroids, encode with the saved codebooks, append to the cid
-    * partitions — no retrain, no rewrite of existing codes. Batch
-    * hygiene fails loudly on the raw batch before any index state is
-    * touched.
-    */
-  def ivfOpqAppend(spark: SparkSession, dir: String, newVecs: DataFrame): Unit = {
-    val model = OpqModel(loadRotation(spark, s"$dir/rotation"),
-      loadCodebooks(spark, s"$dir/codebooks"))
-    failOnBadEmbeddings(newVecs, model.dim, "ivfOpqAppend")
-    val assigned = assignToSaved(spark, dir, opqRotate(newVecs, model),
-      "ivfOpqAppend", checked = true)
-    clusterByCid(pqEncode(assigned, model.cb, keep = Seq("cid")))
-      .write.mode("append").partitionBy("cid").parquet(s"$dir/codes")
+    Quantizer.Product(lloydSubBooks(rotFinal, m, ksub, pqIters), Some(rounded))
   }
 }

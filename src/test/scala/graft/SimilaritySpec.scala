@@ -2,6 +2,8 @@ package graft
 
 import graft.functions.VectorMath
 import graft.operators.Similarity
+import graft.operators.Similarity.{AnnIndex, Quantizer}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -117,13 +119,14 @@ class SimilaritySpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") < 4)
     val exact = Similarity.bruteForceTopK(emb, queries, 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val exhaustive = Similarity.ivfTopK(spark, emb, queries, 10, nlist = 8, nprobe = 8)
+    def ivf(nprobe: Int, iters: Int = 1) = AnnIndex.train(spark, emb, nlist = 8, iters = iters)
+      .search(queries, 10, nprobe = nprobe)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    assert(exhaustive === exact, "nprobe == nlist must be exact search")
-    val a = Similarity.ivfTopK(spark, emb, queries, 10, nlist = 8, nprobe = 2)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val b = Similarity.ivfTopK(spark, emb, queries, 10, nlist = 8, nprobe = 2)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
+    assert(ivf(8) === exact, "nprobe == nlist must be exact search")
+    // extra Lloyd refinement keeps the exhaustive-probe exactness
+    assert(ivf(8, iters = 2) === exact)
+    val a = ivf(2)
+    val b = ivf(2)
     assert(a === b, "deterministic across runs")
     assert(a.size === exact.size)
   }
@@ -131,17 +134,17 @@ class SimilaritySpec extends SparkSpec {
   test("high-nlist IVF assigns via broadcast join, not centroid literals; still exact at nprobe==nlist") {
     val emb = Tables.embeddings(spark, sf)
     val queries = emb.filter(col("vec_id") < 2)
-    val idx = Similarity.ivfTrain(spark, emb, nlist = 512, iters = 1)
+    val idx = AnnIndex.train(spark, emb, nlist = 512, iters = 1)
     // above the literal threshold the assignment must not embed a constant
     // per centroid (Janino method/constant-pool cliff) — it joins against
     // the broadcast centroid header instead
-    val plan = idx.assigned.queryExecution.optimizedPlan.toString
+    val plan = idx.codes.queryExecution.optimizedPlan.toString
     assert(plan.contains("Join"), "expected broadcast-join assignment above the literal threshold")
     assert(!plan.toLowerCase.contains("greatest"), "no literal-per-centroid greatest() at high nlist")
     val exact = Similarity.bruteForceTopK(emb, queries, 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val nl = idx.centroids.count().toInt
-    val exhaustive = Similarity.ivfSearch(idx, queries, 10, nprobe = nl)
+    val nl = idx.centroids.get.count().toInt
+    val exhaustive = idx.search(queries, 10, nprobe = nl)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     assert(exhaustive === exact, "nprobe == nlist must be exact search")
   }
@@ -164,34 +167,209 @@ class SimilaritySpec extends SparkSpec {
     assert(bad === 0L)
   }
 
+  // ── the index table: every quantizer × {IVF, no IVF} ──────────────────
+
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private def rowsOf(df: DataFrame): Set[Seq[Any]] =
+    df.select("query_id", "neighbor_id", "sim", "rnk").collect().map(_.toSeq).toSet
+
+  AnnTable.rows.foreach { r =>
+    test(s"ANN index ${r.label}: save/load and append match the fresh build") {
+      val emb = Tables.embeddings(spark, sf)
+      val queries = emb.filter(col("vec_id") < 4)
+      val rest = emb.filter(col("vec_id") % 3 =!= 0)
+      val exhaustive = math.max(r.nlist, 1)
+      def search(i: AnnIndex, nprobe: Int = 3) =
+        rowsOf(i.search(queries, 10, nprobe = nprobe))
+      def rerank(i: AnnIndex, nprobe: Int = 3) =
+        rowsOf(i.search(queries, 5, nprobe = nprobe, corpus = Some(emb)))
+      def codesOnly(i: AnnIndex) = AnnTable.codeMap(i).map { case (id, (_, c)) => id -> c }
+
+      // save → load: headers and codes round-trip bit-exactly, one pruned
+      // codes/cid=K directory per list, and the loaded index answers
+      // exactly like the fresh one
+      val full = AnnTable.train(spark, r, emb)
+      val dir = tmp("graft-ann-rt")
+      full.save(dir)
+      val loaded = AnnIndex.load(spark, dir)
+      assert(AnnTable.sameHeader(loaded.quantizer, full.quantizer))
+      assert(loaded.centroids.isDefined === (r.nlist > 0))
+      assert(AnnTable.codeMap(loaded) === AnnTable.codeMap(full))
+      val listDirs = new java.io.File(s"$dir/codes").list().count(_.startsWith("cid="))
+      assert(listDirs === r.nlist)
+      assert(search(loaded) === search(full) && rerank(loaded) === rerank(full))
+
+      // probing every list removes the pruning: what remains is the flat
+      // scan under the same quantizer — brute force itself for Flat
+      val flat = AnnTable.flatOf(full.quantizer, emb)
+      assert(search(full, exhaustive) === search(flat))
+      assert(rerank(full, exhaustive) === rerank(flat))
+      if (r.kind == Quantizer.Flat)
+        assert(search(flat) === rowsOf(Similarity.bruteForceTopK(emb, queries, 10)))
+
+      // append == rebuild: persist a third of the fresh build, append the
+      // rest under the SAVED headers — codes AND list placement bit-equal
+      val thirdDir = tmp("graft-ann-third")
+      full.copy(codes = full.codes.filter(col("vec_id") % 3 === 0)).save(thirdDir)
+      AnnIndex.append(spark, thirdDir, rest)
+      val rebuilt = AnnIndex.load(spark, thirdDir)
+      assert(AnnTable.codeMap(rebuilt) === AnnTable.codeMap(full))
+      assert(rerank(rebuilt) === rerank(full))
+
+      // headers trained on the third only: appended vectors are unseen
+      // (SQ8 clamps them), yet codes equal a from-scratch encode of the
+      // union and the exhaustive probe equals the flat union scan
+      val base = AnnTable.train(spark, r, emb.filter(col("vec_id") % 3 === 0))
+      val appDir = tmp("graft-ann-app")
+      base.save(appDir)
+      AnnIndex.append(spark, appDir, rest)
+      val appended = AnnIndex.load(spark, appDir)
+      val union = AnnTable.flatOf(base.quantizer, emb)
+      assert(codesOnly(appended) === codesOnly(union))
+      assert(search(appended, exhaustive) === search(union))
+      assert(appended.search(rest.filter(col("vec_id") < 8), 10, nprobe = 2).count() > 0)
+
+      // batch hygiene: bad batches fail by name, before touching the index
+      val nullBatch = Seq((99999L, null.asInstanceOf[Array[Float]])).toDF("vec_id", "embedding")
+      val e1 = intercept[IllegalArgumentException](AnnIndex.append(spark, appDir, nullBatch))
+      assert(e1.getMessage.contains("null embedding"))
+      val shortBatch = Seq((9999L, Seq(1.0f, 2.0f, 3.0f))).toDF("vec_id", "embedding")
+      val e2 = intercept[IllegalArgumentException](AnnIndex.append(spark, appDir, shortBatch))
+      assert(e2.getMessage.contains("dimension"))
+      assert(AnnIndex.load(spark, appDir).codes.count() === emb.count())
+
+      // drift sums over a split batch finalize to the one-shot stats
+      if (r.nlist > 0) {
+        def sorted(df: DataFrame) = df.orderBy("cid").collect().map(_.toSeq).toSeq
+        val sums = Seq(0, 1).map(m => full.driftSums(emb.filter(col("vec_id") % 2 === m)))
+          .reduce(_ unionByName _)
+        assert(sorted(Similarity.driftStatsFinalize(sums)) === sorted(full.driftStats(emb)))
+      }
+    }
+  }
+
+  // ── the per-variant persistence and append cases ───────────────────────
+
   test("IVF index persists: save/load search == fresh search; lists pruned by cid") {
     val emb = Tables.embeddings(spark, sf)
     val queries = emb.filter(col("vec_id") < 4)
-    val idx = Similarity.ivfTrain(spark, emb, nlist = 8, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val idx = AnnIndex.train(spark, emb, nlist = 8, iters = 2)
+    val dir = tmp("graft-ivf")
     idx.save(dir)
     // the inverted lists are laid out one directory per list id, so a probe
     // scan prunes to the probed lists at the parquet level
-    val listDirs = new java.io.File(s"$dir/lists").list().filter(_.startsWith("cid="))
+    val listDirs = new java.io.File(s"$dir/codes").list().filter(_.startsWith("cid="))
     assert(listDirs.length === 8)
-    val fresh = Similarity.ivfSearch(idx, queries, 10, nprobe = 3)
-      .select("query_id", "neighbor_id", "sim").collect().map(_.toSeq).toSet
-    val loaded = Similarity.ivfSearch(Similarity.ivfLoad(spark, dir), queries, 10, nprobe = 3)
-      .select("query_id", "neighbor_id", "sim").collect().map(_.toSeq).toSet
+    val fresh = rowsOf(idx.search(queries, 10, nprobe = 3))
+    val loaded = rowsOf(AnnIndex.load(spark, dir).search(queries, 10, nprobe = 3))
     assert(loaded === fresh, "a reloaded index answers identically")
     // extra Lloyd refinement keeps the exhaustive-probe exactness
     val exact = Similarity.bruteForceTopK(emb, queries, 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val exhaustive = Similarity.ivfSearch(idx, queries, 10, nprobe = 8)
+    val exhaustive = idx.search(queries, 10, nprobe = 8)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     assert(exhaustive === exact)
   }
 
+  test("ivfAppend: incrementally appended index answers exactly like one " +
+    "covering the union corpus (exhaustive probe == brute force over all)") {
+    val emb = Tables.embeddings(spark, sf)
+    val base = emb.filter(col("vec_id") < 400)
+    val extra = emb.filter(col("vec_id") >= 400)
+    assert(extra.count() > 0, "fixture must cover the append slice")
+    val dir = tmp("graft-ivf-append")
+    AnnIndex.train(spark, base, nlist = 8).save(dir)
+    AnnIndex.append(spark, dir, extra)
+    val idx = AnnIndex.load(spark, dir)
+    val queries = emb.filter(col("vec_id") < 4)
+    // exhaustive probing over the appended index must equal brute force
+    // over the UNION — proves appended vectors landed in real lists and
+    // score identically to built-in-one-shot members
+    val got = rowsOf(idx.search(queries, 10, nprobe = 8))
+    val want = rowsOf(Similarity.bruteForceTopK(emb, queries, 10))
+    assert(got === want)
+    // appended vectors are themselves findable under partial probing
+    val fromAppended = idx.search(extra.filter(col("vec_id") < 405), 10, nprobe = 4)
+    assert(fromAppended.count() > 0)
+    // a wrong-width batch fails loudly before touching the lists
+    val badBatch = Seq((9999L, Seq(1.0f, 2.0f, 3.0f))).toDF("vec_id", "embedding")
+    val ex = intercept[IllegalArgumentException](AnnIndex.append(spark, dir, badBatch))
+    assert(ex.getMessage.contains("dimension"))
+  }
+
+  test("IVF-OPQ: save/load answers identically; exhaustive probing equals " +
+    "the flat OPQ search on the same model") {
+    val emb = Tables.embeddings(spark, sf)
+    val queries = emb.filter(col("vec_id") < 4)
+    val idx = AnnIndex.train(spark, emb, Quantizer.OPQ, nlist = 8, m = 8, ksub = 16)
+    def rows(i: AnnIndex, nprobe: Int) =
+      rowsOf(i.search(queries, 5, nprobe = nprobe, corpus = Some(emb), rerank = 4))
+    val fresh = rows(idx, 3)
+    val dir = tmp("graft-ivfopq-spec")
+    idx.save(dir)
+    assert(rows(AnnIndex.load(spark, dir), 3) === fresh && fresh.nonEmpty)
+    // probing every list removes the pruning; what remains is exactly the
+    // flat OPQ rerank pipeline on the same rotation + codebooks
+    assert(rows(idx, 8) === rows(AnnTable.flatOf(idx.quantizer, emb), 8))
+  }
+
+  test("IVF-OPQ append: appended index answers identically to the " +
+    "from-scratch build; codes stay cid-partitioned; bad batches fail " +
+    "before touching the index") {
+    val emb = Tables.embeddings(spark, sf)
+    val queries = emb.filter(col("vec_id") < 4)
+    val full = AnnIndex.train(spark, emb, Quantizer.OPQ, nlist = 8, m = 8, ksub = 16)
+    val dir = tmp("graft-ivfopq-app")
+    // persist only a third, append the rest under the SAVED artifact
+    full.copy(codes = full.codes.filter(col("vec_id") % 3 === 0)).save(dir)
+    AnnIndex.append(spark, dir, emb.filter(col("vec_id") % 3 =!= 0))
+    val idx = AnnIndex.load(spark, dir)
+    val listDirs = new java.io.File(s"$dir/codes").list().filter(_.startsWith("cid="))
+    assert(listDirs.nonEmpty && listDirs.length <= 8)
+    def rows(i: AnnIndex) = rowsOf(i.search(queries, 5, nprobe = 3, corpus = Some(emb), rerank = 4))
+    assert(rows(idx) === rows(full) && rows(full).nonEmpty)
+    val ex = intercept[IllegalArgumentException](
+      AnnIndex.append(spark, dir,
+        Seq((9999L, Seq(1.0f, 2.0f, 3.0f))).toDF("vec_id", "embedding")))
+    assert(ex.getMessage.contains("dimension"))
+  }
+
+  // ── search arguments are checked once, at the search entry ────────────
+
+  private lazy val argIndex = AnnIndex.train(spark, Tables.embeddings(spark, sf), nlist = 4)
+  private def argQueries = Tables.embeddings(spark, sf).filter(col("vec_id") < 2)
+
+  test("search rejects k below 1 by name") {
+    val e = intercept[IllegalArgumentException](argIndex.search(argQueries, 0))
+    assert(e.getMessage.contains("k must be >= 1"), e.getMessage)
+  }
+
+  test("search rejects nprobe below 1 by name, not an empty result") {
+    val e = intercept[IllegalArgumentException](argIndex.search(argQueries, 5, nprobe = 0))
+    assert(e.getMessage.contains("nprobe must be >= 1"), e.getMessage)
+  }
+
+  test("search rejects rerank below 1 by name") {
+    val e = intercept[IllegalArgumentException](
+      argIndex.search(argQueries, 5, corpus = Some(argQueries), rerank = 0))
+    assert(e.getMessage.contains("rerank must be >= 1"), e.getMessage)
+  }
+
+  test("knnJoin rejects salt outside 1..4096 by name") {
+    Seq(0, 4097).foreach { salt =>
+      val e = intercept[IllegalArgumentException](argIndex.knnJoin(argQueries, 5, salt = salt))
+      assert(e.getMessage.contains("salt must be in 1..4096"), e.getMessage)
+    }
+  }
+
   test("PQ: codes are m small ints, reconstruction is faithful, search is deterministic") {
     val emb = Tables.embeddings(spark, sf)
-    val cb = Similarity.pqTrain(emb, m = 8, ksub = 16)
-    assert(cb.books.length === 8 && cb.ksub === 16 && cb.dsub === 8)
-    val codes = Similarity.pqEncode(emb, cb)
+    val idx = AnnIndex.train(spark, emb, Quantizer.PQ, m = 8, ksub = 16)
+    val books = idx.quantizer.asInstanceOf[Quantizer.Product].books
+    assert(books.length === 8 && books.head.length === 16 && books.head.head.length === 8)
+    val codes = idx.codes
     // one BYTE per code — the 32× compression claim rests on this type
     assert(codes.schema("codes").dataType ===
       org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.ByteType, containsNull = false))
@@ -200,13 +378,13 @@ class SimilaritySpec extends SparkSpec {
     // reconstruction correlates with the original (codebooks are useful)
     val fid = emb.join(codes, "vec_id")
       .select(avg(graft.functions.Functions.cosine_sim(
-        Similarity.pqReconstruct(col("codes"), cb), col("embedding"))))
+        idx.quantizer.decode(col("codes")), col("embedding"))))
       .as[Double].head()
     assert(fid > 0.5, s"mean reconstruction cosine $fid")
     val queries = emb.filter(col("vec_id") < 4)
-    val run1 = Similarity.pqSearch(codes, queries, cb, 10)
+    val run1 = idx.search(queries, 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val run2 = Similarity.pqSearch(codes, queries, cb, 10)
+    val run2 = idx.search(queries, 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     assert(run1 === run2, "deterministic across runs")
     assert(run1.size === 40) // 4 queries × k=10, self excluded
@@ -215,13 +393,13 @@ class SimilaritySpec extends SparkSpec {
   test("SQ8: full signed-byte range, per-dim half-step reconstruction " +
     "error, reranked search ~= brute force") {
     val emb = Tables.embeddings(spark, sf)
-    val p = Similarity.sq8Train(emb)
-    val codes = Similarity.sq8EncodeCorpus(emb, p)
+    val idx = AnnIndex.train(spark, emb, Quantizer.SQ8)
+    val p = idx.quantizer.asInstanceOf[Quantizer.Scalar]
+    val codes = idx.codes
     // 4x compression: one tinyint per dimension
-    assert(codes.select(size(col("codes"))).head().getInt(0) === p.dim)
+    assert(codes.select(size(col("codes"))).head().getInt(0) === p.mins.length)
     val spans = p.spans
-    val recon = codes.select(col("vec_id"),
-      Similarity.sq8Reconstruct(col("codes"), p).as("deq"))
+    val recon = codes.select(col("vec_id"), p.decode(col("codes")).as("deq"))
       .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
     // |x - x'| <= max span/255/2 + eps (half a quantization bucket)
     val viol = recon.select(explode(
@@ -236,45 +414,10 @@ class SimilaritySpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") < 4)
     val exact = Similarity.bruteForceTopK(emb, queries, 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.sq8SearchRerank(codes, queries, emb, p, 10)
+    val approx = idx.search(queries, 10, corpus = Some(emb))
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = exact.intersect(approx).size.toDouble / exact.size
     assert(recall >= 0.9, s"SQ8+rerank recall $recall")
-  }
-
-  test("SQ8 index persists and appends: saved-params ingest answers " +
-    "bit-identically to a from-scratch union encode") {
-    val emb = Tables.embeddings(spark, sf)
-    val base = emb.filter(col("vec_id") % 3 === 0)
-    val rest = emb.filter(col("vec_id") % 3 =!= 0)
-    // bounds train on the BASE only — the steady-state artifact
-    val p = Similarity.sq8Train(base)
-    val dir = java.nio.file.Files.createTempDirectory("graft-sq8").toString
-    Similarity.sq8Save(spark, p, Similarity.sq8EncodeCorpus(base, p), dir)
-    Similarity.sq8Append(spark, dir, rest)
-    val (p2, codes2) = Similarity.sq8Load(spark, dir)
-    assert(p2.mins.toSeq === p.mins.toSeq && p2.maxs.toSeq === p.maxs.toSeq)
-    // appended code table == union encode under the same bounds
-    val got = codes2.collect()
-      .map(r => (r.getLong(0), r.getSeq[Byte](1).toSeq)).toMap
-    val want = Similarity.sq8EncodeCorpus(emb, p).collect()
-      .map(r => (r.getLong(0), r.getSeq[Byte](1).toSeq)).toMap
-    assert(got === want && got.nonEmpty)
-    // and the loaded index searches exactly like the in-memory one
-    val queries = emb.filter(col("vec_id") < 4)
-    val a = Similarity.sq8SearchRerank(codes2, queries, emb, p2, 10)
-      .collect().map(_.toSeq).toSet
-    val b = Similarity.sq8SearchRerank(
-        Similarity.sq8EncodeCorpus(emb, p), queries, emb, p, 10)
-      .collect().map(_.toSeq).toSet
-    assert(a === b)
-    // the hygiene guard covers the append path too
-    import spark.implicits._
-    val e = intercept[IllegalArgumentException] {
-      Similarity.sq8Append(spark, dir,
-        Seq((99999L, null.asInstanceOf[Array[Float]])).toDF("vec_id", "embedding"))
-    }
-    assert(e.getMessage.contains("null embedding"))
   }
 
   test("sq8Train: posexplode-keyed bounds match a plain per-dimension fold " +
@@ -285,45 +428,11 @@ class SimilaritySpec extends SparkSpec {
     val vecs = (0L until 40L).map { id =>
       (id, Array.tabulate(dim)(j => (((id * 31 + j * 17) % 97).toFloat - 48f) / 7f))
     }
-    val p = Similarity.sq8Train(vecs.toDF("vec_id", "embedding"))
-    assert(p.dim === dim)
+    val p = AnnIndex.train(spark, vecs.toDF("vec_id", "embedding"), Quantizer.SQ8)
+      .quantizer.asInstanceOf[Quantizer.Scalar]
+    assert(p.mins.length === dim)
     assert(p.mins.toSeq === Array.tabulate(dim)(j => vecs.map(_._2(j)).min).toSeq)
     assert(p.maxs.toSeq === Array.tabulate(dim)(j => vecs.map(_._2(j)).max).toSeq)
-  }
-
-  test("IVF-SQ8: appended index answers identically to a from-scratch " +
-    "build; codes partitioned by cid; exhaustive probe == flat SQ8 scan") {
-    val emb = Tables.embeddings(spark, sf)
-    val queries = emb.filter(col("vec_id") < 4)
-    val full = Similarity.ivfSq8Train(spark, emb, nlist = 8, iters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfsq8").toString
-    // persist only a third, append the rest under the SAVED header —
-    // the steady-state crawl path
-    Similarity.IvfSq8Index(full.centroids,
-      full.codes.filter(col("vec_id") % 3 === 0), full.p).save(dir)
-    Similarity.ivfSq8Append(spark, dir, emb.filter(col("vec_id") % 3 =!= 0))
-    val idx = Similarity.ivfSq8Load(spark, dir)
-    val listDirs = new java.io.File(s"$dir/codes").list().filter(_.startsWith("cid="))
-    assert(listDirs.nonEmpty && listDirs.length <= 8)
-    val fresh = Similarity.ivfSq8Search(full, queries, 10, nprobe = 3)
-      .select("query_id", "neighbor_id", "sim").collect().map(_.toSeq).toSet
-    val loaded = Similarity.ivfSq8Search(idx, queries, 10, nprobe = 3)
-      .select("query_id", "neighbor_id", "sim").collect().map(_.toSeq).toSet
-    assert(loaded === fresh, "append+load answers exactly like from-scratch")
-    // probing every list degenerates to the flat SQ8 code scan (same
-    // bounds: both sides score identical reconstructions)
-    val flat = Similarity.sq8Search(
-        Similarity.sq8EncodeCorpus(emb, full.p), queries, full.p, 10)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val exhaustive = Similarity.ivfSq8Search(idx, queries, 10, nprobe = 8)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    assert(exhaustive === flat)
-    // batch hygiene on the append path
-    import spark.implicits._
-    val ex = intercept[IllegalArgumentException](
-      Similarity.ivfSq8Append(spark, dir,
-        Seq((9999L, Seq(1.0f, 2.0f, 3.0f))).toDF("vec_id", "embedding")))
-    assert(ex.getMessage.contains("dimension"))
   }
 
   test("PQ recall vs brute force is meaningful at m=8, ksub=16") {
@@ -331,7 +440,7 @@ class SimilaritySpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") < 4)
     val exact = Similarity.bruteForceTopK(emb, queries, 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.pqTopK(emb, queries, 10)
+    val approx = AnnIndex.train(spark, emb, Quantizer.PQ).search(queries, 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = exact.intersect(approx).size.toDouble / exact.size
     // quantized scoring on a random-ish corpus: the guard is that the code
@@ -356,21 +465,15 @@ class SimilaritySpec extends SparkSpec {
     val recalls = Seq(
       "ann_lsh" -> recallOf(Similarity.lshTopK(emb, queries, k,
         bits = 32, bands = 16)),
-      "ann_ivf" -> recallOf(Similarity.ivfTopK(spark, emb, queries, k,
-        nlist = 8, nprobe = 6)),
-      "ann_pq" -> recallOf {
-        val cb = Similarity.pqTrain(emb, m = 32, ksub = 32)
-        Similarity.pqSearchRerank(Similarity.pqEncode(emb, cb), queries, emb, cb, k,
-          rerank = 8)
-      },
-      "ann_ivfpq" -> recallOf {
-        val idx = Similarity.ivfPqTrain(spark, emb, nlist = 8, m = 32, ksub = 32)
-        Similarity.ivfPqSearchRerank(idx, queries, emb, k, nprobe = 7, rerank = 8)
-      },
-      "ann_ivf_sq8" -> recallOf {
-        val idx = Similarity.ivfSq8Train(spark, emb, nlist = 8)
-        Similarity.ivfSq8SearchRerank(idx, queries, emb, k, nprobe = 7, rerank = 8)
-      })
+      "ann_ivf" -> recallOf(AnnIndex.train(spark, emb, nlist = 8)
+        .search(queries, k, nprobe = 6)),
+      "ann_pq" -> recallOf(AnnIndex.train(spark, emb, Quantizer.PQ, m = 32, ksub = 32)
+        .search(queries, k, corpus = Some(emb), rerank = 8)),
+      "ann_ivfpq" -> recallOf(
+        AnnIndex.train(spark, emb, Quantizer.PQ, nlist = 8, m = 32, ksub = 32)
+          .search(queries, k, nprobe = 7, corpus = Some(emb), rerank = 8)),
+      "ann_ivf_sq8" -> recallOf(AnnIndex.train(spark, emb, Quantizer.SQ8, nlist = 8)
+        .search(queries, k, nprobe = 7, corpus = Some(emb), rerank = 8)))
     emb.unpersist()
     recalls.foreach { case (name, r) => info(f"$name recall $r%.3f") }
     recalls.foreach { case (name, r) =>
@@ -407,61 +510,6 @@ class SimilaritySpec extends SparkSpec {
     assert(again.sortBy(r => (r._1, r._3)).toSeq === kept.sortBy(r => (r._1, r._3)).toSeq)
   }
 
-  test("IVF-PQ: save/load answers identically; codes partitioned by cid; exhaustive probe == pure PQ") {
-    val emb = Tables.embeddings(spark, sf)
-    val queries = emb.filter(col("vec_id") < 4)
-    val idx = Similarity.ivfPqTrain(spark, emb, nlist = 8, m = 8, ksub = 16)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
-    idx.save(dir)
-    val listDirs = new java.io.File(s"$dir/codes").list().filter(_.startsWith("cid="))
-    assert(listDirs.length === 8)
-    val fresh = Similarity.ivfPqSearch(idx, queries, 10, nprobe = 3)
-      .select("query_id", "neighbor_id", "sim").collect().map(_.toSeq).toSet
-    val loaded = Similarity.ivfPqSearch(Similarity.ivfPqLoad(spark, dir), queries, 10, nprobe = 3)
-      .select("query_id", "neighbor_id", "sim").collect().map(_.toSeq).toSet
-    assert(loaded === fresh, "a reloaded index answers identically")
-    // probing every list degenerates to plain PQ over the whole code table
-    // (same codebooks: both sides score identical reconstructions)
-    val cb = idx.cb
-    val pq = Similarity.pqSearch(Similarity.pqEncode(emb, cb), queries, cb, 10)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val exhaustive = Similarity.ivfPqSearch(idx, queries, 10, nprobe = 8)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    assert(exhaustive === pq)
-  }
-
-  test("ivfAppend: incrementally appended index answers exactly like one " +
-    "covering the union corpus (exhaustive probe == brute force over all)") {
-    val emb = Tables.embeddings(spark, sf)
-    val base = emb.filter(col("vec_id") < 400)
-    val extra = emb.filter(col("vec_id") >= 400)
-    assert(extra.count() > 0, "fixture must cover the append slice")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-append").toString
-    Similarity.ivfTrain(spark, base, nlist = 8, iters = 1).save(dir)
-    Similarity.ivfAppend(spark, dir, extra)
-    val idx = Similarity.ivfLoad(spark, dir)
-    val queries = emb.filter(col("vec_id") < 4)
-    // exhaustive probing over the appended index must equal brute force
-    // over the UNION — proves appended vectors landed in real lists and
-    // score identically to built-in-one-shot members
-    val got = Similarity.ivfSearch(idx, queries, 10, nprobe = 8)
-      .select("query_id", "neighbor_id", "sim", "rnk")
-      .as[(Long, Long, Double, Int)].collect().toSet
-    val want = Similarity.bruteForceTopK(emb, queries, 10)
-      .select("query_id", "neighbor_id", "sim", "rnk")
-      .as[(Long, Long, Double, Int)].collect().toSet
-    assert(got === want)
-    // appended vectors are themselves findable under partial probing
-    val fromAppended = Similarity.ivfSearch(idx, extra.filter(col("vec_id") < 405), 10, nprobe = 4)
-    assert(fromAppended.count() > 0)
-    // a wrong-width batch fails loudly before touching the lists
-    import spark.implicits._
-    val badBatch = Seq((9999L, Seq(1.0f, 2.0f, 3.0f))).toDF("vec_id", "embedding")
-    val ex = intercept[IllegalArgumentException](
-      Similarity.ivfAppend(spark, dir, badBatch))
-    assert(ex.getMessage.contains("dimension"))
-  }
-
   test("prototypePrune drops floor(n*frac) most-prototypical rows per cluster") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sf)
@@ -491,33 +539,33 @@ class SimilaritySpec extends SparkSpec {
   test("ivfKnnJoin answers row-identically to ivfSearch on the same " +
     "queries, and the salt knob never changes the result set") {
     val emb = Tables.embeddings(spark, sf)
-    val idx = Similarity.ivfTrain(spark, emb, nlist = 8, iters = 1)
+    val idx = AnnIndex.train(spark, emb, nlist = 8, iters = 1)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id", "sim", "rnk")
         .collect().map(_.toSeq).toSet
-    val viaSearch = rows(Similarity.ivfSearch(idx, emb, k = 5, nprobe = 3))
-    val viaJoin = rows(Similarity.ivfKnnJoin(idx, emb, k = 5, nprobe = 3))
+    val viaSearch = rows(idx.search(emb, k = 5, nprobe = 3))
+    val viaJoin = rows(idx.knnJoin(emb, k = 5, nprobe = 3))
     assert(viaJoin === viaSearch && viaJoin.nonEmpty,
       "the join strategy must not change a single row")
     // salt splits lists deterministically; candidates/scores are identical
-    val salted = rows(Similarity.ivfKnnJoin(idx, emb, k = 5, nprobe = 3, salt = 5))
+    val salted = rows(idx.knnJoin(emb, k = 5, nprobe = 3, salt = 5))
     assert(salted === viaSearch)
   }
 
   test("ivfSq8KnnJoin and its distributed rerank answer row-identically " +
     "to the broadcast SQ8 probe search / rerank on the same queries") {
     val emb = Tables.embeddings(spark, sf)
-    val idx = Similarity.ivfSq8Train(spark, emb, nlist = 8, iters = 1)
+    val idx = AnnIndex.train(spark, emb, Quantizer.SQ8, nlist = 8, iters = 1)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id", "sim", "rnk")
         .collect().map(_.toSeq).toSet
-    val viaSearch = rows(Similarity.ivfSq8Search(idx, emb, k = 5, nprobe = 3))
-    val viaJoin = rows(Similarity.ivfSq8KnnJoin(idx, emb, k = 5, nprobe = 3, salt = 3))
+    val viaSearch = rows(idx.search(emb, k = 5, nprobe = 3))
+    val viaJoin = rows(idx.knnJoin(emb, k = 5, nprobe = 3, salt = 3))
     assert(viaJoin === viaSearch && viaJoin.nonEmpty)
-    val viaRerank = rows(Similarity.ivfSq8SearchRerank(idx, emb, emb,
-      k = 4, nprobe = 3, rerank = 3))
-    val viaJoinRerank = rows(Similarity.ivfSq8KnnJoinRerank(idx, emb, emb,
-      k = 4, nprobe = 3, salt = 3, rerank = 3))
+    val viaRerank = rows(idx.search(emb, k = 4, nprobe = 3,
+      corpus = Some(emb), rerank = 3))
+    val viaJoinRerank = rows(idx.knnJoin(emb, k = 4, nprobe = 3, salt = 3,
+      corpus = Some(emb), rerank = 3))
     assert(viaJoinRerank === viaRerank && viaJoinRerank.nonEmpty)
   }
 
@@ -527,11 +575,9 @@ class SimilaritySpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf)
     val queries = emb.filter(col("vec_id") < 4)
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf-filt-spec").toString
-    Similarity.ivfTrain(spark, emb, nlist = 8, iters = 1,
-      keep = Seq("label")).save(dir)
-    val idx = Similarity.ivfLoad(spark, dir)
-    val got = Similarity.ivfSearchWhere(idx, queries, 10,
-        col("label") === 1, nprobe = 8)
+    AnnIndex.train(spark, emb, nlist = 8, iters = 1, keep = Seq("label")).save(dir)
+    val got = AnnIndex.load(spark, dir)
+      .search(queries, 10, nprobe = 8, predicate = Some(col("label") === 1))
       .select("query_id", "neighbor_id", "sim", "rnk")
     val labels = emb.select("vec_id", "label").as[(Long, Int)].collect().toMap
     val rows = got.as[(Long, Long, Double, Int)].collect()
@@ -566,16 +612,17 @@ class SimilaritySpec extends SparkSpec {
 
   test("OPQ rotation is orthogonal (R·Rᵀ ≈ I) and preserves cosine") {
     val emb = Tables.embeddings(spark, sf)
-    val m = Similarity.opqTrain(emb, m = 8, ksub = 16)
-    val d = m.dim
+    val q = AnnIndex.train(spark, emb, Quantizer.OPQ, m = 8, ksub = 16).quantizer
+    val r = q.rotation.get
+    val d = r.length
     for (a <- 0 until d; b <- 0 until d) {
-      val dot = (0 until d).map(k => m.rotation(a)(k) * m.rotation(b)(k)).sum
+      val dot = (0 until d).map(k => r(a)(k) * r(b)(k)).sum
       val expect = if (a == b) 1.0 else 0.0
       // 6-dp rounding of each entry perturbs the product by ≤ d·1e-6·|R|
       assert(math.abs(dot - expect) < 1e-3, s"RRᵀ($a)($b) = $dot")
     }
     // rotated-space cosine == original cosine up to rounding
-    val rot = Similarity.opqRotate(emb, m)
+    val rot = q.rotate(emb)
     val before = emb.select("vec_id", "embedding").as[(Long, Array[Float])]
       .collect().sortBy(_._1).take(20)
     val after = rot.select("vec_id", "embedding").as[(Long, Array[Float])]
@@ -585,74 +632,6 @@ class SimilaritySpec extends SparkSpec {
       val c1 = VectorMath.cosineF(after(i)._2, after(j)._2)
       assert(math.abs(c0 - c1) < 1e-3, s"cosine drifted: $c0 vs $c1")
     }
-  }
-
-  test("OPQ model persists: loaded model rotates and encodes identically " +
-    "and the search answers match the fresh model's") {
-    val emb = Tables.embeddings(spark, sf)
-    val m = Similarity.opqTrain(emb, m = 8, ksub = 16)
-    val dir = java.nio.file.Files.createTempDirectory("graft-opq-spec").toString
-    Similarity.opqSave(spark, m, dir)
-    val loaded = Similarity.opqLoad(spark, dir)
-    assert(loaded.rotation.map(_.toSeq).toSeq === m.rotation.map(_.toSeq).toSeq)
-    assert(loaded.cb.books.map(_.map(_.toSeq).toSeq).toSeq ===
-      m.cb.books.map(_.map(_.toSeq).toSeq).toSeq)
-    def codes(model: Similarity.OpqModel) =
-      Similarity.opqEncodeCorpus(emb, model)
-        .select(col("vec_id"), col("codes").cast("array<int>"))
-        .as[(Long, Seq[Int])].collect().toSet
-    assert(codes(loaded) === codes(m) && codes(m).nonEmpty)
-  }
-
-  test("IVF-OPQ: save/load answers identically; exhaustive probing equals " +
-    "the flat OPQ search on the same model") {
-    val emb = Tables.embeddings(spark, sf)
-    val queries = emb.filter(col("vec_id") < 4)
-    val idx = Similarity.ivfOpqTrain(spark, emb, nlist = 8, m = 8, ksub = 16)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "neighbor_id", "sim", "rnk")
-        .collect().map(_.toSeq).toSet
-    val fresh = rows(Similarity.ivfOpqSearchRerank(idx, queries, emb, 5,
-      nprobe = 3, rerank = 4))
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfopq-spec").toString
-    idx.save(dir)
-    val loaded = Similarity.ivfOpqLoad(spark, dir)
-    assert(rows(Similarity.ivfOpqSearchRerank(loaded, queries, emb, 5,
-      nprobe = 3, rerank = 4)) === fresh && fresh.nonEmpty)
-    // probing every list removes the pruning; what remains is exactly the
-    // flat OPQ rerank pipeline on the same rotation + codebooks
-    val exhaustive = rows(Similarity.ivfOpqSearchRerank(idx, queries, emb, 5,
-      nprobe = 8, rerank = 4))
-    val flat = rows(Similarity.opqSearchRerank(
-      Similarity.opqEncodeCorpus(emb, idx.model), queries, emb, idx.model, 5,
-      rerank = 4))
-    assert(exhaustive === flat)
-  }
-
-  test("IVF-OPQ append: appended index answers identically to the " +
-    "from-scratch build; codes stay cid-partitioned; bad batches fail " +
-    "before touching the index") {
-    val emb = Tables.embeddings(spark, sf)
-    val queries = emb.filter(col("vec_id") < 4)
-    val full = Similarity.ivfOpqTrain(spark, emb, nlist = 8, m = 8, ksub = 16)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfopq-app").toString
-    // persist only a third, append the rest under the SAVED artifact
-    Similarity.IvfOpqIndex(full.model,
-      Similarity.IvfPqIndex(full.inner.centroids,
-        full.inner.codes.filter(col("vec_id") % 3 === 0), full.inner.cb))
-      .save(dir)
-    Similarity.ivfOpqAppend(spark, dir, emb.filter(col("vec_id") % 3 =!= 0))
-    val idx = Similarity.ivfOpqLoad(spark, dir)
-    val listDirs = new java.io.File(s"$dir/codes").list().filter(_.startsWith("cid="))
-    assert(listDirs.nonEmpty && listDirs.length <= 8)
-    def rows(i: Similarity.IvfOpqIndex) =
-      Similarity.ivfOpqSearchRerank(i, queries, emb, 5, nprobe = 3, rerank = 4)
-        .select("query_id", "neighbor_id", "sim").collect().map(_.toSeq).toSet
-    assert(rows(idx) === rows(full) && rows(full).nonEmpty)
-    val ex = intercept[IllegalArgumentException](
-      Similarity.ivfOpqAppend(spark, dir,
-        Seq((9999L, Seq(1.0f, 2.0f, 3.0f))).toDF("vec_id", "embedding")))
-    assert(ex.getMessage.contains("dimension"))
   }
 
   test("OPQ beats plain PQ where the subspace split cuts correlated " +
@@ -679,23 +658,17 @@ class SimilaritySpec extends SparkSpec {
         val r = recon(id)
         e.indices.map(k => math.pow(e(k) - r(k), 2)).sum / dim
       }.sum / n
-    val cb = Similarity.pqTrain(df, m = 4, ksub = 8)
-    val pqRecon = Similarity.pqEncode(df, cb)
-      .select(col("vec_id"), Similarity.pqReconstruct(col("codes"), cb).as("r"))
-      .as[(Long, Array[Float])].collect().toMap
-    val om = Similarity.opqTrain(df, m = 4, ksub = 8, opqIters = 5)
+    def recon(idx: AnnIndex): Map[Long, Array[Float]] =
+      idx.codes.select(col("vec_id"), idx.quantizer.decode(col("codes")).as("r"))
+        .as[(Long, Array[Float])].collect().toMap
+    val pqRecon = recon(AnnIndex.train(spark, df, Quantizer.PQ, m = 4, ksub = 8))
+    val opq = AnnIndex.train(spark, df, Quantizer.OPQ, m = 4, ksub = 8, opqIters = 5)
     // reconstruct in rotated space, rotate back via Rᵀ to compare in the
     // original space (orthogonal inverse = transpose)
-    val rt = Array.tabulate(om.dim, om.dim)((a, b) => om.rotation(b)(a))
-    val opqRecon = Similarity.opqEncodeCorpus(df, om)
-      .select(col("vec_id"),
-        Similarity.pqReconstruct(col("codes"), om.cb).as("r"))
-      .as[(Long, Array[Float])].collect().toMap
-      .map { case (id, r) =>
-        (id, Array.tabulate(om.dim) { a =>
-          (0 until om.dim).map(k => rt(a)(k) * r(k)).sum.toFloat
-        })
-      }
+    val r = opq.quantizer.rotation.get
+    val opqRecon = recon(opq).map { case (id, x) =>
+      (id, Array.tabulate(dim)(a => (0 until dim).map(k => r(k)(a) * x(k)).sum.toFloat))
+    }
     val (pqErr, opqErr) = (mse(pqRecon), mse(opqRecon))
     assert(opqErr < pqErr,
       s"OPQ mse $opqErr should beat PQ mse $pqErr on cross-subspace structure")
@@ -773,9 +746,8 @@ class SimilaritySpec extends SparkSpec {
     val n = emb.count()
 
     // IVF-SQ8: bounds trained on the same batch → nothing clamps
-    val sq8 = Similarity.ivfSq8Train(spark, emb, nlist = 4, iters = 1)
-    val dIn = Similarity.ivfSq8DriftStats(sq8, emb)
-      .as[(Int, Long, Double, Double)].collect()
+    val sq8 = AnnIndex.train(spark, emb, Quantizer.SQ8, nlist = 4, iters = 1)
+    val dIn = sq8.driftStats(emb).as[(Int, Long, Double, Double)].collect()
     assert(dIn.map(_._2).sum === n)
     dIn.foreach { case (cid, _, mc, cf) =>
       assert(cf === 0.0, s"cid $cid clamped in-distribution: $cf")
@@ -787,17 +759,15 @@ class SimilaritySpec extends SparkSpec {
     val far = emb.select(col("vec_id"),
       transform(col("embedding"), x => x * lit(10.0f) + lit(100.0f))
         .as("embedding"))
-    val dOut = Similarity.ivfSq8DriftStats(sq8, far)
-      .as[(Int, Long, Double, Double)].collect()
+    val dOut = sq8.driftStats(far).as[(Int, Long, Double, Double)].collect()
     assert(dOut.map(_._2).sum === n)
     dOut.foreach { case (cid, _, _, cf) =>
       assert(cf === 1.0, s"cid $cid expected full clamp, got $cf")
     }
 
     // IVF-PQ: mean_qcos equals the deterministic per-vector recompute
-    val pq = Similarity.ivfPqTrain(spark, emb, nlist = 4, m = 8, ksub = 8)
-    val dPq = Similarity.ivfPqDriftStats(pq, emb)
-      .as[(Int, Long, Double, Double)].collect()
+    val pq = AnnIndex.train(spark, emb, Quantizer.PQ, nlist = 4, m = 8, ksub = 8)
+    val dPq = pq.driftStats(emb).as[(Int, Long, Double, Double)].collect()
     assert(dPq.map(_._2).sum === n)
     dPq.foreach { case (cid, _, mc, qc) =>
       assert(qc > 0.0 && qc <= 1.0, s"cid $cid mean_qcos $qc")
@@ -807,12 +777,17 @@ class SimilaritySpec extends SparkSpec {
     // IVF-OPQ: rotated-space stats; a loaded index reports identically
     // to the trained one (the monitor runs off the saved artifact)
     val dir = java.nio.file.Files.createTempDirectory("graft-opq-drift-spec")
-    val opq = Similarity.ivfOpqTrain(spark, emb, nlist = 4, m = 8, ksub = 8)
+    val opq = AnnIndex.train(spark, emb, Quantizer.OPQ, nlist = 4, m = 8, ksub = 8)
     opq.save(dir.toString)
-    val loaded = Similarity.ivfOpqLoad(spark, dir.toString)
-    val a = Similarity.ivfOpqDriftStats(opq, emb).orderBy("cid").collect().toSeq
-    val b = Similarity.ivfOpqDriftStats(loaded, emb).orderBy("cid").collect().toSeq
+    val loaded = AnnIndex.load(spark, dir.toString)
+    val a = opq.driftStats(emb).orderBy("cid").collect().toSeq
+    val b = loaded.driftStats(emb).orderBy("cid").collect().toSeq
     assert(a === b)
     assert(a.map(_.getLong(1)).sum === n)
+
+    // a flat index has no lists to drift from
+    val e = intercept[IllegalArgumentException](
+      AnnIndex.train(spark, emb, Quantizer.SQ8).driftSums(emb))
+    assert(e.getMessage.contains("IVF"))
   }
 }

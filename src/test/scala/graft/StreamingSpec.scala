@@ -508,39 +508,53 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming IVF ingest: foreachBatch ivfAppend per micro-batch — the " +
-    "appended index answers exactly like a union-built one") {
-    import spark.implicits._
-    import graft.operators.Similarity
-    import org.apache.spark.sql.functions.col
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select("vec_id", "embedding")
-    val base = emb.filter(col("vec_id") % 4 === 0)
-    val crawl = emb.filter(col("vec_id") % 4 =!= 0)
-    val idxDir = java.nio.file.Files.createTempDirectory("graft-sivf").toString
-    Similarity.ivfTrain(spark, base, nlist = 8, iters = 1).save(idxDir)
-    val crawlDir = java.nio.file.Files.createTempDirectory("graft-sivfcrawl").toString
-    // several files => several micro-batches with maxFilesPerTrigger=1
-    crawl.repartition(3).write.mode("overwrite").parquet(crawlDir)
-    val q = spark.readStream.schema(crawl.schema)
-      .option("maxFilesPerTrigger", 1).parquet(crawlDir)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        // each micro-batch appends against the SAVED centroids — the
-        // graded incremental-ingest operator runs unchanged per batch
-        Similarity.ivfAppend(spark, idxDir, batch)
+  AnnTable.rows.foreach { r =>
+    test(s"streaming ANN ingest ${r.label}: micro-batch appends equal the full build") {
+      import spark.implicits._
+      import graft.operators.Similarity.AnnIndex
+      import org.apache.spark.sql.functions.col
+      val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+        .select("vec_id", "embedding")
+      // headers train once on the full corpus (the steady-state artifact);
+      // a quarter is persisted, the crawl streams in the rest
+      val full = AnnTable.train(spark, r, emb)
+      val dir = java.nio.file.Files.createTempDirectory("graft-sann").toString
+      full.copy(codes = full.codes.filter(col("vec_id") % 4 === 0)).save(dir)
+      val crawl = emb.filter(col("vec_id") % 4 =!= 0)
+      val crawlDir = java.nio.file.Files.createTempDirectory("graft-sanncrawl").toString
+      // several files => several micro-batches with maxFilesPerTrigger=1
+      crawl.repartition(3).write.mode("overwrite").parquet(crawlDir)
+      val q = spark.readStream.schema(crawl.schema)
+        .option("maxFilesPerTrigger", 1).parquet(crawlDir)
+        .writeStream.outputMode("append")
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          // the graded incremental-ingest operator runs unchanged per batch
+          AnnIndex.append(spark, dir, batch)
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      // a FRESH load (restart) sees the streamed-in code table: codes and
+      // list placement bit-equal to the full build, searches identical
+      val idx = AnnIndex.load(spark, dir)
+      assert(AnnTable.codeMap(idx) === AnnTable.codeMap(full))
+      val queries = emb.filter(col("vec_id") < 4)
+      def rows(i: AnnIndex) =
+        i.search(queries, 10, nprobe = math.max(r.nlist, 1), corpus = Some(emb))
+          .select("query_id", "neighbor_id", "sim", "rnk")
+          .as[(Long, Long, Double, Int)].collect().toSet
+      assert(rows(idx) === rows(full) && rows(full).nonEmpty,
+        "the restarted index must answer searches identically")
+      if (r.kind == graft.operators.Similarity.Quantizer.Flat && r.nlist > 0) {
+        // exhaustive probe over the streamed-in index == brute force
+        val want = graft.operators.Similarity.bruteForceTopK(emb, queries, 10)
+          .select("query_id", "neighbor_id", "sim", "rnk")
+          .as[(Long, Long, Double, Int)].collect().toSet
+        val got = idx.search(queries, 10, nprobe = r.nlist)
+          .select("query_id", "neighbor_id", "sim", "rnk")
+          .as[(Long, Long, Double, Int)].collect().toSet
+        assert(got === want)
       }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val idx = Similarity.ivfLoad(spark, idxDir)
-    val queries = emb.filter(col("vec_id") < 4)
-    val got = Similarity.ivfSearch(idx, queries, 10, nprobe = 8)
-      .select("query_id", "neighbor_id", "sim", "rnk")
-      .as[(Long, Long, Double, Int)].collect().toSet
-    val want = Similarity.bruteForceTopK(emb, queries, 10)
-      .select("query_id", "neighbor_id", "sim", "rnk")
-      .as[(Long, Long, Double, Int)].collect().toSet
-    assert(got === want, "exhaustive probe over the streamed-in index must equal brute force")
+    }
   }
 
   test("streaming BM25 ingest: foreachBatch bm25IndexAppend per micro-batch " +
@@ -578,57 +592,11 @@ class StreamingSpec extends SparkSpec {
       "streamed-in BM25 index must answer exactly like a from-scratch build")
   }
 
-  test("streaming SQ8 ingest: foreachBatch sq8Append per micro-batch — " +
-    "codes bit-equal to a from-scratch union encode, searches identical " +
-    "through a fresh load") {
-    import spark.implicits._
-    import graft.operators.Similarity
-    import org.apache.spark.sql.functions.col
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select("vec_id", "embedding")
-    // bounds train once on the full corpus (the steady-state artifact:
-    // appended batches encode under SAVED bounds, clamping out-of-range)
-    val p = Similarity.sq8Train(emb)
-    val base = emb.filter(col("vec_id") % 4 === 0)
-    val crawl = emb.filter(col("vec_id") % 4 =!= 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ssq8").toString
-    Similarity.sq8Save(spark, p, Similarity.sq8EncodeCorpus(base, p), dir)
-    val crawlDir = java.nio.file.Files.createTempDirectory("graft-ssq8crawl").toString
-    // several files => several micro-batches with maxFilesPerTrigger=1
-    crawl.repartition(3).write.mode("overwrite").parquet(crawlDir)
-    val q = spark.readStream.schema(crawl.schema)
-      .option("maxFilesPerTrigger", 1).parquet(crawlDir)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        // the graded incremental-ingest operator runs unchanged per batch
-        Similarity.sq8Append(spark, dir, batch)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // a FRESH load (restart) sees the streamed-in code table
-    val (p2, codes2) = Similarity.sq8Load(spark, dir)
-    assert(p2.mins.toSeq === p.mins.toSeq && p2.maxs.toSeq === p.maxs.toSeq)
-    val got = codes2.collect()
-      .map(r => (r.getLong(0), r.getSeq[Byte](1).toSeq)).toMap
-    val want = Similarity.sq8EncodeCorpus(emb, p).collect()
-      .map(r => (r.getLong(0), r.getSeq[Byte](1).toSeq)).toMap
-    assert(got === want && got.nonEmpty,
-      "streamed-in codes must equal a from-scratch encode of the union")
-    val queries = emb.filter(col("vec_id") < 4)
-    val a = Similarity.sq8SearchRerank(codes2, queries, emb, p2, 10)
-      .select("query_id", "neighbor_id", "sim", "rnk")
-      .as[(Long, Long, Double, Int)].collect().toSet
-    val b = Similarity.sq8SearchRerank(
-        Similarity.sq8EncodeCorpus(emb, p), queries, emb, p, 10)
-      .select("query_id", "neighbor_id", "sim", "rnk")
-      .as[(Long, Long, Double, Int)].collect().toSet
-    assert(a === b, "the restarted index must answer searches identically")
-  }
-
   test("streaming drift monitors: per-micro-batch DriftSums accumulate to " +
     "stats bit-equal to the batch monitor over the union, for every " +
     "composed tier (IVF-SQ8 clamp_frac, IVF-PQ and IVF-OPQ mean_qcos)") {
     import graft.operators.Similarity
+    import graft.operators.Similarity.{AnnIndex, Quantizer}
     import org.apache.spark.sql.functions.col
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select("vec_id", "embedding")
@@ -636,24 +604,16 @@ class StreamingSpec extends SparkSpec {
     val crawl = emb.filter(col("vec_id") % 4 =!= 0)
     // train each composed index once on the base slice (the steady-state
     // artifact a crawl appends to); drift measures the crawl against it
-    val sq8 = Similarity.ivfSq8Train(spark, base, nlist = 4)
-    val pq = Similarity.ivfPqTrain(spark, base, nlist = 4, m = 4, ksub = 8)
-    val opq = Similarity.ivfOpqTrain(spark, base, nlist = 4, m = 4, ksub = 8,
+    val sq8 = AnnIndex.train(spark, base, Quantizer.SQ8, nlist = 4)
+    val pq = AnnIndex.train(spark, base, Quantizer.PQ, nlist = 4, m = 4, ksub = 8)
+    val opq = AnnIndex.train(spark, base, Quantizer.OPQ, nlist = 4, m = 4, ksub = 8,
       opqIters = 1)
     val crawlDir = java.nio.file.Files.createTempDirectory("graft-sdrift").toString
     crawl.repartition(3).write.mode("overwrite").parquet(crawlDir)
     def key(r: org.apache.spark.sql.Row): Int = r.getInt(0)
     def sorted(df: org.apache.spark.sql.DataFrame) =
       df.collect().sortBy(key).map(_.toSeq).toSeq
-    for ((label, sums, stats) <- Seq[(String,
-        org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
-      ("ivf-sq8", b => Similarity.ivfSq8DriftSums(sq8, b),
-        b => Similarity.ivfSq8DriftStats(sq8, b)),
-      ("ivf-pq", b => Similarity.ivfPqDriftSums(pq, b),
-        b => Similarity.ivfPqDriftStats(pq, b)),
-      ("ivf-opq", b => Similarity.ivfOpqDriftSums(opq, b),
-        b => Similarity.ivfOpqDriftStats(opq, b)))) {
+    for ((label, idx) <- Seq("ivf-sq8" -> sq8, "ivf-pq" -> pq, "ivf-opq" -> opq)) {
       val sumsDir = java.nio.file.Files.createTempDirectory(s"graft-dsums").toString
       var batches = 0
       val q = spark.readStream.schema(crawl.schema)
@@ -662,7 +622,7 @@ class StreamingSpec extends SparkSpec {
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
           // the accumulator a steady-state crawl would keep: one bounded
           // (≤ nlist rows) sums frame appended per micro-batch
-          sums(batch).write.mode("append").parquet(sumsDir)
+          idx.driftSums(batch).write.mode("append").parquet(sumsDir)
           batches += 1
         }
         .start()
@@ -670,7 +630,7 @@ class StreamingSpec extends SparkSpec {
       assert(batches >= 2, s"$label: want multiple micro-batches, got $batches")
       val streamed = sorted(
         Similarity.driftStatsFinalize(spark.read.parquet(sumsDir)))
-      val oneShot = sorted(stats(crawl))
+      val oneShot = sorted(idx.driftStats(crawl))
       assert(streamed === oneShot,
         s"$label: accumulated stream drift stats must equal the batch call")
     }
@@ -728,43 +688,6 @@ class StreamingSpec extends SparkSpec {
     val oneShot = pairSet(Multimodal.phashPairs(
       Multimodal.imagePHash(spark, corpus), maxHamming = 3))
     assert(streamed.toSet === oneShot.toSet && oneShot.nonEmpty)
-  }
-
-  test("streaming IVF-OPQ ingest: foreachBatch ivfOpqAppend per " +
-    "micro-batch — the appended composed index answers identically to " +
-    "the from-scratch build through a fresh load") {
-    import spark.implicits._
-    import graft.operators.Similarity
-    import org.apache.spark.sql.functions.col
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select("vec_id", "embedding")
-    // rotation/centroids/codebooks train once on the full corpus (the
-    // steady-state artifact); batches then rotate+assign+encode under it
-    val full = Similarity.ivfOpqTrain(spark, emb, nlist = 8, m = 8, ksub = 16)
-    val dir = java.nio.file.Files.createTempDirectory("graft-sivfopq").toString
-    Similarity.IvfOpqIndex(full.model,
-      Similarity.IvfPqIndex(full.inner.centroids,
-        full.inner.codes.filter(col("vec_id") % 4 === 0), full.inner.cb))
-      .save(dir)
-    val crawl = emb.filter(col("vec_id") % 4 =!= 0)
-    val crawlDir = java.nio.file.Files.createTempDirectory("graft-sivfopqc").toString
-    crawl.repartition(3).write.mode("overwrite").parquet(crawlDir)
-    val q = spark.readStream.schema(crawl.schema)
-      .option("maxFilesPerTrigger", 1).parquet(crawlDir)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        Similarity.ivfOpqAppend(spark, dir, batch)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val idx = Similarity.ivfOpqLoad(spark, dir)
-    val queries = emb.filter(col("vec_id") < 4)
-    def rows(i: Similarity.IvfOpqIndex) =
-      Similarity.ivfOpqSearchRerank(i, queries, emb, 5, nprobe = 3, rerank = 4)
-        .select("query_id", "neighbor_id", "sim", "rnk")
-        .as[(Long, Long, Double, Int)].collect().toSet
-    assert(rows(idx) === rows(full) && rows(full).nonEmpty,
-      "the restarted composed index must answer searches identically")
   }
 
   test("classifier-gated curation DAG recovers from its checkpoint: the " +
