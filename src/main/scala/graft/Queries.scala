@@ -699,7 +699,7 @@ object Queries {
         victims.foreach(v => e.execute(s"DELETE FROM cql_pg WHERE o_custkey = $v"))
         e.nowMicros = 1000000000000L // past every mutation ts; grace is 0
         e.compact("cql_pg")
-        val pdel = s.read.parquet(s"$dir/cql_pg/checkpoint/pdel")
+        val pdel = s.read.parquet(graft.cql.Storage.checkpointPart(dir, "cql_pg", "pdel"))
         require(pdel.count() == 0,
           "gc_grace-expired partition tombstones must purge physically at compact")
         e.execute("SELECT o_custkey, o_orderkey FROM cql_pg")

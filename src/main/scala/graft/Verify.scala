@@ -135,7 +135,7 @@ object Verify {
     }
   }
 
-  /** PQ codebook training — `Similarity.pqTrain`'s exact sequential
+  /** PQ codebook training — `Similarity.pqSample` + `lloydSubBooks`' exact sequential
     * arithmetic re-derived independently: vec_id-ordered sample, float
     * subtract/square accumulated in double, strict-< ties.
     */
@@ -453,7 +453,7 @@ object Verify {
     // OPQ: rotated-space corpus/reconstructions with q_ann_opq's
     // parameters (m=8, ksub=16, iters=3, opqIters=3, k=10, rerank=4) —
     // candidate scoring AND the exact rerank both run in rotated space,
-    // mirroring Similarity.opqSearchRerank
+    // mirroring Similarity.AnnIndex.search with an OPQ quantizer and rerank
     lazy val annOpqModel = opqTrainRef(annVecs, m = 8, ksub = 16, iters = 3, opqIters = 3)
     lazy val annOpqRot = annVecs.map { case (id, e) =>
       (id, rotateZeroMeanRef(annOpqModel._1)(e)) }

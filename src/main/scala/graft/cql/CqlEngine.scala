@@ -106,8 +106,7 @@ class CqlEngine(val spark: SparkSession) {
     * counts raw values (JSON surrogate so non-orderable types count too).
     */
   private def computeIndexStat(d: IndexDef): Double = {
-    val hasData = logs.get(d.table).exists(_.nonEmpty) ||
-      storageDir.exists(dir => new java.io.File(dir, d.table).isDirectory)
+    val hasData = logs.get(d.table).exists(_.nonEmpty) || storage.exists(_.holdsData(d.table))
     if (!hasData) return 0.0
     val c = d.targets.head._1
     val cd = table(d.table).column(c).get
@@ -348,43 +347,42 @@ class CqlEngine(val spark: SparkSession) {
   /** "now" for TTL expiry — settable for tests. */
   var nowMicros: Long = 0L
 
-  /** Optional durable storage root: parquet mutation-log segments +
-    * JSON schema catalog (see [[Storage]]).
+  /** Optional durable storage: checkpoint + parquet mutation-log segments
+    * under one manifest per table (see [[Storage]]).
     */
-  private var storageDir: Option[String] = None
-  private var segmentSeq: Long = 0L
+  private var storage: Option[Storage] = None
+
+  /** Called after every durable storage step with its name: a crash-injection point. */
+  private[cql] var storageStep: String => Unit = _ => ()
 
   /** Attach a storage root; loads any tables previously persisted there. */
   def attachStorage(dir: String): Unit = {
-    storageDir = Some(dir)
-    val root = new java.io.File(dir)
-    if (root.isDirectory) {
-      root.listFiles().filter(_.isDirectory).foreach { tdir =>
-        val schemaFile = new java.io.File(tdir, "schema.json")
-        if (schemaFile.isFile) {
-          val td = Storage.tableFromJson(
-            new String(java.nio.file.Files.readAllBytes(schemaFile.toPath), "UTF-8"))
-          tables(td.name) = td
-          logs.getOrElseUpdate(td.name, scala.collection.mutable.ArrayBuffer.empty[Row])
-          noteDataChange(td.name) // durable segments may have moved while detached
-          val segs = new java.io.File(tdir, "segments")
-          segmentSeq = math.max(segmentSeq, Option(segs.list()).map(_.length.toLong).getOrElse(0L))
-          // client timestamps must stay monotonic across engine restarts
-          if (segs.isDirectory && segs.list().exists(_.endsWith(".parquet"))) {
-            val maxTs = spark.read.schema(logSchema(td)).parquet(segs.getPath)
-              .agg(max(col("_ts"))).head().getLong(0)
-            tsCounter = math.max(tsCounter, maxTs)
-          }
-          val meta = new java.io.File(tdir, "meta.json")
-          if (meta.isFile) {
-            val js = new String(java.nio.file.Files.readAllBytes(meta.toPath), "UTF-8")
-            "\"max_ts\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(js)
-              .foreach(m => tsCounter = math.max(tsCounter, m.group(1).toLong))
-          }
-        }
-      }
+    val st = new Storage(dir, s => storageStep(s))
+    storage = Some(st)
+    st.attach().foreach { m =>
+      tables(m.schema.name) = m.schema
+      logs.getOrElseUpdate(m.schema.name, scala.collection.mutable.ArrayBuffer.empty[Row])
+      noteDataChange(m.schema.name) // durable segments may have moved while detached
+      // client timestamps must stay monotonic across engine restarts
+      tsCounter = math.max(tsCounter, m.maxTs)
     }
   }
+
+  private def attached: Storage = storage.getOrElse(
+    throw InvalidRequest("no storage attached — call attachStorage first"))
+
+  /** The clock a commit persists: the session clock or the tail's largest `_ts`. */
+  private def commitTs(name: String): Long = {
+    val i = logSchema(table(name)).fieldIndex("_ts")
+    logs(name).foldLeft(tsCounter)((m, r) => math.max(m, r.getLong(i)))
+  }
+
+  private def tailDf(name: String): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(logs(name).toSeq: _*), logSchema(table(name)))
+
+  /** Write the in-memory tail as one segment file into `dir`. */
+  private def writeTail(name: String)(dir: String): Unit =
+    tailDf(name).coalesce(1).write.mode("append").parquet(dir)
 
   /** Flush a table's in-memory mutation tail to an immutable parquet
     * segment (commit-log-segment analog); the buffer is cleared and reads
@@ -392,22 +390,11 @@ class CqlEngine(val spark: SparkSession) {
     */
   def flush(name0: String): Unit = {
     val name = canon(name0)
-    val dir = storageDir.getOrElse(
-      throw InvalidRequest("no storage attached — call attachStorage first"))
+    val store = attached
     val td = mutableTable(name)
-    val tdir = new java.io.File(dir, name)
-    tdir.mkdirs()
-    java.nio.file.Files.write(new java.io.File(tdir, "schema.json").toPath,
-      Storage.tableToJson(td).getBytes("UTF-8"))
-    if (logs(name).nonEmpty) {
-      segmentSeq += 1
-      spark.createDataFrame(
-          java.util.Arrays.asList(logs(name).toSeq: _*), logSchema(td))
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(new java.io.File(tdir, "segments").getPath)
-      logs(name).clear()
-    }
+    val added = if (logs(name).isEmpty) Nil else store.writeSegments(name)(writeTail(name))
+    store.append(td, added, commitTs(name))
+    logs(name).clear()
   }
 
   /** Bulk-load a DataFrame as INSERT mutations — the scale-path mutation
@@ -470,16 +457,9 @@ class CqlEngine(val spark: SparkSession) {
     // is non-deterministic) instead of a second full aggregation action
     val obs = timestampCol.map(_ => org.apache.spark.sql.Observation())
     val mdf = obs.map(o => mdf0.observe(o, max(col("_ts")).as("max_ts"))).getOrElse(mdf0)
-    storageDir match {
-      case Some(dir) =>
-        val tdir = new java.io.File(dir, name)
-        tdir.mkdirs()
-        java.nio.file.Files.write(new java.io.File(tdir, "schema.json").toPath,
-          Storage.tableToJson(td).getBytes("UTF-8"))
-        segmentSeq += 1
-        mdf.write.mode("append").parquet(new java.io.File(tdir, "segments").getPath)
-      case None =>
-        logs(name) ++= mdf.collect()
+    val added = storage match {
+      case Some(st) => st.writeSegments(name)(mdf.write.mode("append").parquet(_))
+      case None => logs(name) ++= mdf.collect(); Nil
     }
     noteDataChange(name)
     // keep the session clock ahead of event-time bulk generations: a later
@@ -490,6 +470,7 @@ class CqlEngine(val spark: SparkSession) {
       case None => Some(ts)
     }
     maxWritten.foreach(m => tsCounter = math.max(tsCounter, m))
+    storage.foreach(_.append(td, added, tsCounter))
   }
 
   def sparkType(t: CqlType): DataType = t match {
@@ -981,7 +962,7 @@ class CqlEngine(val spark: SparkSession) {
         // analog is each storage-attached table's progress toward its next
         // auto-flush compaction (tail rows vs the flush threshold)
         Some(mk(virtualDefs(name),
-          if (storageDir.isEmpty) Seq.empty
+          if (storage.isEmpty) Seq.empty
           else logs.toSeq.sortBy(_._1).collect {
             case (tbl, tail) if !virtualDefs.contains(tbl) =>
               val (ks, tn) = splitName(tbl)
@@ -1178,7 +1159,7 @@ class CqlEngine(val spark: SparkSession) {
         keyspaces -= n
         val doomed = tables.keys.filter(splitName(_)._1 == n).toList
         doomed.foreach { t =>
-          tables.remove(t); logs.remove(t); dropDataGen(t); dropStorage(t)
+          tables.remove(t); logs.remove(t); dropDataGen(t); storage.foreach(_.drop(t))
           indexDefs.filterInPlace { (nm, d) =>
             if (d.table == t) indexStats.remove(nm)
             d.table != t
@@ -1407,13 +1388,9 @@ class CqlEngine(val spark: SparkSession) {
         }
         if (views.values.exists(_.baseTable == n))
           throw InvalidRequest("Cannot rename columns of a table with materialized views")
-        storageDir.foreach { dir =>
-          val tdir = new java.io.File(dir, n)
-          if (new java.io.File(tdir, "segments").isDirectory ||
-              new java.io.File(tdir, "checkpoint").isDirectory)
-            throw InvalidRequest(
-              s"Cannot rename columns of $n: durable log segments address columns by name")
-        }
+        if (storage.exists(_.holdsData(n)))
+          throw InvalidRequest(
+            s"Cannot rename columns of $n: durable log segments address columns by name")
         val rmap = renames.toMap
         tables(n) = td.copy(columns = td.columns.map(c =>
           c.copy(name = rmap.getOrElse(c.name, c.name))))
@@ -1469,19 +1446,14 @@ class CqlEngine(val spark: SparkSession) {
         if (d.table == n) indexStats.remove(nm)
         d.table != n
       }
-      dropStorage(n)
+      storage.foreach(_.drop(n))
       emptyResult
     case Truncate(n) =>
-      mutableTable(n); logs(n).clear(); noteDataChange(n)
+      val td = mutableTable(n)
       // durable segments and checkpoints are data too (TruncateStatement
       // discards sstables); the schema survives
-      storageDir.foreach { dir =>
-        val tdir = new java.io.File(dir, n)
-        Seq("segments", "checkpoint", "cdc").foreach { part =>
-          val f = new java.io.File(tdir, part)
-          if (f.isDirectory) deleteRec(f)
-        }
-      }
+      storage.foreach(_.truncate(td, commitTs(n)))
+      logs(n).clear(); noteDataChange(n)
       emptyResult
     case InsertJson(tbl, js, defaultUnset, ttl, ts) =>
       val td = table(tbl)
@@ -2005,7 +1977,7 @@ class CqlEngine(val spark: SparkSession) {
   private def appendMutation(name: String, row: Row): Unit = {
     logs(name) += row
     noteDataChange(name)
-    if (storageDir.isDefined && logs(name).size >= autoFlushRows) flush(name)
+    if (storage.isDefined && logs(name).size >= autoFlushRows) flush(name)
   }
 
   private def mutationRow(td: TableDef, keyVals: Map[String, Any],
@@ -2266,12 +2238,9 @@ class CqlEngine(val spark: SparkSession) {
   // commit log).
 
   def logDf(name: String): DataFrame = {
-    val td = table(name)
-    val tail = spark.createDataFrame(
-      java.util.Arrays.asList(logs(name).toSeq: _*), logSchema(td))
-    val segments = storageDir.map(d => new java.io.File(new java.io.File(d, name), "segments"))
-      .filter(f => f.isDirectory && f.list().exists(_.endsWith(".parquet")))
-      .map(f => spark.read.schema(logSchema(td)).parquet(f.getPath))
+    val tail = tailDf(name)
+    val segments = storage.map(_.segmentFiles(name)).filter(_.nonEmpty)
+      .map(fs => spark.read.schema(tail.schema).parquet(fs.map(_.getPath): _*))
     segments.map(_.unionByName(tail)).getOrElse(tail)
   }
 
@@ -2685,15 +2654,10 @@ class CqlEngine(val spark: SparkSession) {
     g.select((keys.map(col) ++ valueCols ++ wtCols ++ ttlCols ++ metaCols ++ liveCol): _*)
   }
 
-  private def checkpointDir(name: String): Option[java.io.File] =
-    storageDir.map(d => new java.io.File(new java.io.File(d, name), "checkpoint"))
-
   private def readCkptPart(dir: java.io.File, part: String,
                            schema: StructType): Option[DataFrame] = {
     val f = new java.io.File(dir, part)
-    if (f.isDirectory && f.list().exists(_.endsWith(".parquet")))
-      Some(spark.read.schema(schema).parquet(f.getPath))
-    else None
+    if (f.isDirectory) Some(spark.read.schema(schema).parquet(f.getPath)) else None
   }
 
   /** pk + per-ck lo/hi bounds + inclusivity + ts — the persisted shape of
@@ -2717,7 +2681,7 @@ class CqlEngine(val spark: SparkSession) {
     val rawTail = logDf(name)
     val pdelSchema = StructType(td.partitionKey.map(c =>
       StructField(c.name, sparkType(c.tpe))) :+ StructField("_pdel", LongType))
-    val ckdir = checkpointDir(name).filter(_.isDirectory)
+    val ckdir = storage.flatMap(_.checkpoint(name))
     val ckptPdel = ckdir.flatMap(readCkptPart(_, "pdel", pdelSchema))
     val ckptRows = ckdir.flatMap(readCkptPart(_, "rows",
       stateSchema(td, td.primaryKey, td.regulars, withLiveness = true)))
@@ -2836,8 +2800,7 @@ class CqlEngine(val spark: SparkSession) {
     */
   def compact(name0: String): Unit = {
     val name = canon(name0)
-    val dir = storageDir.getOrElse(
-      throw InvalidRequest("no storage attached — call attachStorage first"))
+    val store = attached
     val td = mutableTable(name)
     val (rowState0, staticState, pdel, rangeTombs) = fullState(name)
     // prune collection op-lists: everything before the last set/clear is
@@ -2926,53 +2889,28 @@ class CqlEngine(val spark: SparkSession) {
       purgeState(pruneColls(st, td.statics), pkNames, td.statics, withLiveness = false))
     val pdelPurged = pdel.filter(col("_pdel") > lit(tombCutoff))
     val rangesPurged = rangeTombs.map(_.filter(col("_ts") > lit(tombCutoff)))
-    val tdir = new java.io.File(dir, name)
-    tdir.mkdirs()
-    java.nio.file.Files.write(new java.io.File(tdir, "schema.json").toPath,
-      Storage.tableToJson(td).getBytes("UTF-8"))
-    val tmp = new java.io.File(tdir, "checkpoint_tmp")
-    if (tmp.isDirectory) deleteRec(tmp)
-    rowState.write.parquet(new java.io.File(tmp, "rows").getPath)
-    staticsPurged.foreach(_.write.parquet(new java.io.File(tmp, "statics").getPath))
-    pdelPurged.write.parquet(new java.io.File(tmp, "pdel").getPath)
-    // range tombstones persist like the pdel watermark: out-of-order
-    // writes below an absorbed range must stay dead after compaction
-    // (both purge past gc_grace like any other tombstone)
-    rangesPurged.foreach(_.write.parquet(new java.io.File(tmp, "ranges").getPath))
-    // swap in, then drop consumed inputs
-    val ck = new java.io.File(tdir, "checkpoint")
-    val segsDir = new java.io.File(tdir, "segments")
     // history inputs measured before the consumed artifacts disappear
-    val histBytesIn = dirBytes(ck) + dirBytes(segsDir)
-    val histInputs = (if (ck.isDirectory) 1 else 0) +
-      Option(segsDir.listFiles()).map(_.count(_.getName.endsWith(".parquet"))).getOrElse(0) +
-      (if (logs(name).nonEmpty) 1 else 0)
-    if (ck.isDirectory) deleteRec(ck)
-    if (!tmp.renameTo(ck))
-      throw new java.io.IOException(s"could not activate checkpoint for $name")
-    // before dropping the tail, flush it so CDC consumers see every record
-    if (cdcEnabled && logs(name).nonEmpty) flush(name)
-    val segs = new java.io.File(tdir, "segments")
-    if (segs.isDirectory) {
-      if (cdcEnabled) {
-        // archive consumed segments for CDC draining (cdc_raw contract)
-        val cdc = new java.io.File(tdir, "cdc")
-        cdc.mkdirs()
-        Option(segs.listFiles()).foreach(_.filter(_.getName.endsWith(".parquet"))
-          .foreach { f =>
-            if (!f.renameTo(new java.io.File(cdc, s"seg${System.nanoTime()}_${f.getName}")))
-              throw new java.io.IOException(s"could not archive segment ${f.getName}")
-          })
-      }
-      deleteRec(segs)
+    val consumed = store.checkpoint(name).toSeq ++ store.segmentFiles(name)
+    val histBytesIn = consumed.map(dirBytes).sum
+    val histInputs = consumed.size + (if (logs(name).nonEmpty) 1 else 0)
+    // with CDC on, the tail lands as a segment too, so consumers see every record
+    val cdcTail =
+      if (cdcEnabled && logs(name).nonEmpty) store.writeSegments(name)(writeTail(name)) else Nil
+    val rowsOut = org.apache.spark.sql.Observation()
+    store.compact(td, commitTs(name), archive = cdcEnabled, cdcTail) { ck =>
+      rowState.observe(rowsOut, count(lit(1)).as("n"))
+        .write.parquet(new java.io.File(ck, "rows").getPath)
+      staticsPurged.foreach(_.write.parquet(new java.io.File(ck, "statics").getPath))
+      pdelPurged.write.parquet(new java.io.File(ck, "pdel").getPath)
+      // range tombstones persist like the pdel watermark: out-of-order
+      // writes below an absorbed range must stay dead after compaction
+      // (both purge past gc_grace like any other tombstone)
+      rangesPurged.foreach(_.write.parquet(new java.io.File(ck, "ranges").getPath))
     }
     logs(name).clear()
     // compaction purges gc_grace-expired tombstones, so counts can change
     noteDataChange(name)
-    // segments carried the ts high-water mark for restarts; the checkpoint
-    // must carry it now
-    java.nio.file.Files.write(new java.io.File(tdir, "meta.json").toPath,
-      s"""{"max_ts": $tsCounter}""".getBytes("UTF-8"))
+    val ck = store.checkpoint(name).get
     // system.compaction_history record (SystemKeyspace.java
     // CompactionHistory): every output row went through one
     // histInputs-way merge, so rows_merged carries {inputs -> output
@@ -2987,7 +2925,7 @@ class CqlEngine(val spark: SparkSession) {
       java.util.UUID.randomUUID().toString,
       histBytesIn, dirBytes(ck), tnH,
       new java.sql.Timestamp(System.currentTimeMillis()), ksH,
-      Map(histInputs -> ckRowCount(ck)))
+      Map(histInputs -> rowsOut.get("n").asInstanceOf[Long]))
   }
 
   /** Expire compaction-history records past the reference table's 7-day
@@ -3003,20 +2941,6 @@ class CqlEngine(val spark: SparkSession) {
   private def dirBytes(f: java.io.File): Long =
     if (f.isFile) f.length()
     else Option(f.listFiles()).map(_.map(dirBytes).sum).getOrElse(0L)
-
-  /** Output row count of a checkpoint's rows table, read from parquet
-    * footers — local metadata IO, no Spark job.
-    */
-  private def ckRowCount(ck: java.io.File): Long = {
-    val rows = new java.io.File(ck, "rows")
-    Option(rows.listFiles()).map(_.filter(_.getName.endsWith(".parquet")).map { f =>
-      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.getAbsolutePath),
-          spark.sparkContext.hadoopConfiguration))
-      try rd.getRecordCount finally rd.close()
-    }.sum).getOrElse(0L)
-  }
 
   private val compactionHistory = scala.collection.mutable.ArrayBuffer.empty[Row]
 
@@ -3050,20 +2974,6 @@ class CqlEngine(val spark: SparkSession) {
       (e, i) => when(substring_index(e("op"), ":", 1).isin("set", "clear"), i))
     val from = coalesce(array_max(overwriteAt), lit(0))
     when(m.isNull || n === 0, m).otherwise(slice(sorted, from + 1, n))
-  }
-
-  /** Remove a dropped table's durable data — otherwise it would resurrect
-    * on the next attachStorage (the reference removes sstables on DROP).
-    */
-  private def dropStorage(name: String): Unit =
-    storageDir.foreach { dir =>
-      val tdir = new java.io.File(dir, name)
-      if (tdir.isDirectory) deleteRec(tdir)
-    }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
   }
 
   // ── SELECT lowering + restriction validation ──────────────────────────
@@ -3166,14 +3076,9 @@ class CqlEngine(val spark: SparkSession) {
     }
     val users = tables.keys.filter(t => !virtualDefs.contains(t) &&
       tables(t).columns.exists(c => referencesUdt(c.tpe, tn))).toList
-    if (at.renames.nonEmpty) storageDir.foreach { dir =>
-      users.foreach { t =>
-        val tdir = new java.io.File(dir, t)
-        if (new java.io.File(tdir, "segments").isDirectory ||
-            new java.io.File(tdir, "checkpoint").isDirectory)
-          throw InvalidRequest(
-            s"Cannot rename fields of type $tn: durable log segments of $t address fields by name")
-      }
+    if (at.renames.nonEmpty) users.find(t => storage.exists(_.holdsData(t))).foreach { t =>
+      throw InvalidRequest(
+        s"Cannot rename fields of type $tn: durable log segments of $t address fields by name")
     }
     udts(tn) = nu
     // other registered UDTs embedding this one carry structural copies

@@ -432,7 +432,7 @@ object CqlParser {
     else throw ParseException(
       s"unsupported statement: ${p.peek.map(_.text).getOrElse("<eof>")}")
 
-  private val types: Map[String, CqlType] = Map(
+  private[cql] val types: Map[String, CqlType] = Map(
     "int" -> CqlInt, "bigint" -> CqlBigint, "counter" -> CqlCounter,
     "smallint" -> CqlSmallint, "tinyint" -> CqlTinyint,
     "text" -> CqlText, "varchar" -> CqlText, "ascii" -> CqlAscii,

@@ -987,6 +987,11 @@ object Similarity {
       */
     def append(spark: SparkSession, dir: String, newVecs: DataFrame): Unit = {
       val has = headers(spark, dir)
+      val codes = graft.SchemaCache.read(spark, s"$dir/codes")
+      // the attribute columns the index was trained to keep ride along
+      val keep = codes.columns.toSeq.filterNot(Set("vec_id", "cid", "codes"))
+      val missing = keep.filterNot(newVecs.columns.contains)
+      require(missing.isEmpty, s"append: the batch lacks kept column(s) ${missing.mkString(", ")}")
       if (has("centroids")) {
         val header = graft.SchemaCache.read(spark, s"$dir/centroids")
         // the quantizer-header read and the batch assignment are
@@ -995,16 +1000,16 @@ object Similarity {
         val (q, (_, assigned)) =
           if (has("rotation")) {
             val q = Quantizer.load(spark, dir, has)
-            (q, assignBatch(header, newVecs, q, "append"))
+            (q, assignBatch(header, newVecs, q, "append", keep))
           } else inParallel(Quantizer.load(spark, dir, has),
-            assignBatch(header, newVecs, Quantizer.Identity, "append"))
-        clusterByCid(encodeTable(q, assigned, Seq("cid")))
+            assignBatch(header, newVecs, Quantizer.Identity, "append", keep))
+        clusterByCid(encodeTable(q, assigned, "cid" +: keep))
           .write.mode("append").partitionBy("cid").parquet(s"$dir/codes")
       } else {
         val q = Quantizer.load(spark, dir, has)
-        failOnBadEmbeddings(newVecs, q.dim.getOrElse(graft.SchemaCache
-          .read(spark, s"$dir/codes").select(size(col("codes"))).head().getInt(0)), "append")
-        encodeTable(q, q.rotate(newVecs), Nil)
+        failOnBadEmbeddings(newVecs,
+          q.dim.getOrElse(codes.select(size(col("codes"))).head().getInt(0)), "append")
+        encodeTable(q, q.rotate(newVecs), keep)
           .write.mode("append").parquet(s"$dir/codes")
       }
     }
@@ -1058,26 +1063,26 @@ object Similarity {
     * then assigns the rotated batch without re-checking (width is
     * rotation-invariant, so a second scan could never fire).
     */
-  private def assignBatch(centDf: DataFrame, vecs: DataFrame, q: Quantizer,
-                          op: String): (Seq[(Int, Array[Float])], DataFrame) =
-    if (q.rotation.isEmpty) assignToHeader(centDf, vecs, op)
+  private def assignBatch(centDf: DataFrame, vecs: DataFrame, q: Quantizer, op: String,
+                          keep: Seq[String] = Nil): (Seq[(Int, Array[Float])], DataFrame) =
+    if (q.rotation.isEmpty) assignToHeader(centDf, vecs, op, keep = keep)
     else {
       failOnBadEmbeddings(vecs, q.dim.get, op)
-      assignToHeader(centDf, q.rotate(vecs), op, checked = true)
+      assignToHeader(centDf, q.rotate(vecs), op, checked = true, keep)
     }
 
   /** Assign a vector batch to an in-memory centroid header — the core
     * [[assignBatch]] and every drift monitor share: collect the
     * (bounded) header, fail loudly on a mis-sized batch, then the literal
     * kernel under the codegen cliff / broadcast join above. Returns the
-    * sorted header rows alongside the (vec_id, cid, embedding) batch.
+    * sorted header rows alongside the (vec_id, cid, embedding, kept columns) batch.
     * `checked = true` skips the batch hygiene scan — for callers that
     * already validated the RAW batch and then rotated it (width is
     * rotation-invariant, so re-checking would pay a second full pass
     * that can never fire, plus a redundant full-batch rotation).
     */
   private def assignToHeader(centDf: DataFrame, vecs: DataFrame, op: String,
-                             checked: Boolean = false)
+                             checked: Boolean = false, keep: Seq[String] = Nil)
       : (Seq[(Int, Array[Float])], DataFrame) = {
     val cents = centDf.collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1).toSeq
@@ -1087,10 +1092,9 @@ object Similarity {
     val vecsS = graft.Tables.spread(vecs)
     val assigned =
       if (cents.length <= literalAssignMaxLists)
-        vecsS.select(col("vec_id"),
-          nearestCidCol(cents, col("embedding")).as("cid"), col("embedding"))
-      else assignByJoin(vecsS, centDf)
-        .select(col("vec_id"), col("cid"), col("embedding"))
+        vecsS.select(Seq(col("vec_id"),
+          nearestCidCol(cents, col("embedding")).as("cid"), col("embedding")) ++ keep.map(col): _*)
+      else assignByJoin(vecsS, centDf, keep)
     (cents, assigned)
   }
 

@@ -130,7 +130,7 @@ object MutationStream {
     spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "4")
       // glob over live segments and the compaction archive
-      .parquet(s"$storageDir/$table/{segments,cdc}")
+      .parquet(graft.cql.Storage.cdcPath(storageDir, table))
 
   /** [[engineCdc]] resolving the table through the engine's catalog — use
     * this form for tables outside the default keyspace (their storage
@@ -162,7 +162,7 @@ object MutationStream {
     upsert(engine.execute(s"SELECT * FROM $table").withColumn("_op", lit("insert")), -1L)
     val tail = spark.readStream.schema(engine.mutationSchema(table))
       .option("maxFilesPerTrigger", "4")
-      .parquet(s"$storageDir/${engine.canonicalName(table)}/segments")
+      .parquet(graft.cql.Storage.segmentsPath(storageDir, engine.canonicalName(table)))
     tail.writeStream
       .outputMode("update")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>

@@ -15,6 +15,10 @@ class CqlCompactSpec extends SparkSpec {
     e
   }
 
+  /** A part (rows, pdel, ...) of the table's live checkpoint generation. */
+  def livePart(dir: String, table: String, part: String): String =
+    graft.cql.Storage.checkpointPart(dir, table, part)
+
   def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("graft-compact").toString
 
@@ -91,20 +95,20 @@ class CqlCompactSpec extends SparkSpec {
     e.execute("INSERT INTO ct6 (k, v) VALUES (5, 5)") // no TTL — survives
     e.compact("ct6")
     // nothing expired yet: all five rows checkpointed
-    assert(spark.read.parquet(s"$dir/ct6/checkpoint/rows").count() === 5)
+    assert(spark.read.parquet(livePart(dir, "ct6", "rows")).count() === 5)
     e.nowMicros += 11000000L
     // reads already hide the expired rows...
     assert(rows(e.execute("SELECT k, v FROM ct6")) === Set(Seq(5, 5)))
     e.compact("ct6")
     // ...and with gc_grace elapsed (0 here) a compact physically drops them
-    assert(spark.read.parquet(s"$dir/ct6/checkpoint/rows").count() === 1)
+    assert(spark.read.parquet(livePart(dir, "ct6", "rows")).count() === 1)
     assert(rows(e.execute("SELECT k, v FROM ct6")) === Set(Seq(5, 5)))
     // an explicit DELETE's tombstone purges too once past gc_grace (0
     // here): with every older input consumed by the compaction it shadows
     // nothing still in storage (CompactionController purge evaluator)
     e.execute("DELETE FROM ct6 WHERE k = 5")
     e.compact("ct6")
-    assert(spark.read.parquet(s"$dir/ct6/checkpoint/rows").count() === 0)
+    assert(spark.read.parquet(livePart(dir, "ct6", "rows")).count() === 0)
     assert(e.execute("SELECT k, v FROM ct6").count() === 0)
   }
 
@@ -122,14 +126,14 @@ class CqlCompactSpec extends SparkSpec {
     // PRE-grace: both tombstones checkpointed; the row-deleted row kept
     // only for its _del_ts (shadowed cells are already dropped), and a
     // late old-timestamp write stays dead
-    assert(spark.read.parquet(s"$dir/tp1/checkpoint/rows").count() === 2)
+    assert(spark.read.parquet(livePart(dir, "tp1", "rows")).count() === 2)
     e.execute("INSERT INTO tp1 (k, c, v) VALUES (1, 1, 9) USING TIMESTAMP 1")
     assert(!rows(e.execute("SELECT k, c, v FROM tp1")).contains(Seq(1, 1, 9)))
     // POST-grace: both tombstones physically purge; the cell-tombstoned
     // row loses the cell but keeps its live primary key row
     e.nowMicros += 10000000L
     e.compact("tp1")
-    assert(spark.read.parquet(s"$dir/tp1/checkpoint/rows").count() === 1)
+    assert(spark.read.parquet(livePart(dir, "tp1", "rows")).count() === 1)
     assert(rows(e.execute("SELECT k, c, v FROM tp1")) === Set(Seq(2, 1, null)))
     // the purge is the documented Cassandra gc_grace contract: a
     // sufficiently old late write CAN now resurrect
@@ -148,14 +152,14 @@ class CqlCompactSpec extends SparkSpec {
     e.execute("DELETE FROM tp2 WHERE k = 2 AND c > 1") // range tombstone
     e.compact("tp2")
     // pre-grace: watermark + range rows persisted, shadowed data dropped
-    assert(spark.read.parquet(s"$dir/tp2/checkpoint/pdel").count() === 1)
-    assert(spark.read.parquet(s"$dir/tp2/checkpoint/ranges").count() === 1)
+    assert(spark.read.parquet(livePart(dir, "tp2", "pdel")).count() === 1)
+    assert(spark.read.parquet(livePart(dir, "tp2", "ranges")).count() === 1)
     assert(rows(e.execute("SELECT k, c, v FROM tp2")) === Set(Seq(2, 1, 1)))
     e.nowMicros += 10000000L
     e.compact("tp2")
     // post-grace: both tombstone stores physically empty, reads unchanged
-    assert(spark.read.parquet(s"$dir/tp2/checkpoint/pdel").count() === 0)
-    assert(spark.read.parquet(s"$dir/tp2/checkpoint/ranges").count() === 0)
+    assert(spark.read.parquet(livePart(dir, "tp2", "pdel")).count() === 0)
+    assert(spark.read.parquet(livePart(dir, "tp2", "ranges")).count() === 0)
     assert(rows(e.execute("SELECT k, c, v FROM tp2")) === Set(Seq(2, 1, 1)))
   }
 
@@ -170,14 +174,14 @@ class CqlCompactSpec extends SparkSpec {
     e.execute("UPDATE tp3 SET st = st - {1} WHERE k = 2") // element remove
     e.compact("tp3")
     // pre-grace: row 1 is held alive purely by its tombstones
-    assert(spark.read.parquet(s"$dir/tp3/checkpoint/rows").count() === 2)
+    assert(spark.read.parquet(livePart(dir, "tp3", "rows")).count() === 2)
     e.nowMicros += 10000000L
     e.compact("tp3")
     // post-grace: row 1's clear markers and del_ts purge → the row drops;
     // row 2's remove-op prefix... the remove follows the surviving add, so
     // only grace-old PREFIX tombstones purge — the add stays, remove stays
     // behind it only if something precedes it
-    val ck = spark.read.parquet(s"$dir/tp3/checkpoint/rows")
+    val ck = spark.read.parquet(livePart(dir, "tp3", "rows"))
     assert(ck.count() === 1)
     assert(rows(e.execute("SELECT k, st FROM tp3")) === Set(Seq(2, List(2))))
     // after another grace window with no new writes the state is stable
@@ -197,7 +201,7 @@ class CqlCompactSpec extends SparkSpec {
     e.compact("ct7")
     // hidden from reads, still physically present (it must shadow late writes)
     assert(e.execute("SELECT k FROM ct7").count() === 0)
-    assert(spark.read.parquet(s"$dir/ct7/checkpoint/rows").count() === 1)
+    assert(spark.read.parquet(livePart(dir, "ct7", "rows")).count() === 1)
     // a late write BELOW the expired cell's timestamp stays shadowed
     e.execute("INSERT INTO ct7 (k, v) VALUES (1, 9) USING TIMESTAMP 1")
     assert(e.execute("SELECT k FROM ct7").count() === 0)
@@ -205,7 +209,7 @@ class CqlCompactSpec extends SparkSpec {
     e.execute("ALTER TABLE ct7 WITH gc_grace_seconds = 5")
     e.nowMicros += 10000000L
     e.compact("ct7")
-    assert(spark.read.parquet(s"$dir/ct7/checkpoint/rows").count() === 0)
+    assert(spark.read.parquet(livePart(dir, "ct7", "rows")).count() === 0)
   }
 
   test("TRUNCATE and DROP discard durable data — nothing resurrects on restart") {

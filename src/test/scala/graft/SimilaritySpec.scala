@@ -589,6 +589,30 @@ class SimilaritySpec extends SparkSpec {
     assert(rows.toSet === brute)
   }
 
+  test("append carries the index's kept columns: a filtered exhaustive " +
+    "search over an appended index equals brute force over the filtered union") {
+    val emb = Tables.embeddings(spark, sf)
+    val queries = emb.filter(col("vec_id") < 4)
+    val cut = emb.count() / 3
+    val brute = rowsOf(Similarity.bruteForceTopK(emb.filter(col("label") === 1), queries, 10)
+      .select("query_id", "neighbor_id", "sim", "rnk"))
+    for (nlist <- Seq(8, 0)) {
+      val dir = tmp("graft-append-keep")
+      AnnIndex.train(spark, emb.filter(col("vec_id") < cut), nlist = nlist,
+        keep = Seq("label")).save(dir)
+      AnnIndex.append(spark, dir, emb.filter(col("vec_id") >= cut))
+      val idx = AnnIndex.load(spark, dir)
+      assert(idx.codes.filter(col("label").isNull).count() === 0L, s"nlist=$nlist")
+      val got = rowsOf(idx.search(queries, 10, nprobe = 8, predicate = Some(col("label") === 1))
+        .select("query_id", "neighbor_id", "sim", "rnk"))
+      assert(got === brute, s"nlist=$nlist")
+      // a batch without the kept column fails by name, before any write
+      val ex = intercept[IllegalArgumentException](
+        AnnIndex.append(spark, dir, emb.select("vec_id", "embedding")))
+      assert(ex.getMessage.contains("label"))
+    }
+  }
+
   test("MRL prefix retrieval: full-prefix degenerates to exact brute " +
     "force; the 16-dim prefix with rerank keeps recall high") {
     val emb = Tables.embeddings(spark, sf)
