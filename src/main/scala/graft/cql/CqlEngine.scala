@@ -2226,23 +2226,17 @@ class CqlEngine(val spark: SparkSession) {
   }
 
   // ── read path: per-cell reconcile as an algebraic state aggregation ───
-  // Every piece of the reconcile is a semigroup over mutation records:
+  // Every piece of the reconcile is a semigroup over state rows:
   //  - scalar cell: max over (ts, tomb, value, ttl) structs
   //  - counter: (sum of deltas, max delta ts)
   //  - collection: concat of timestamped op entries (folded at finalize)
   //  - row deletion / liveness: max ts
-  // So a compacted CHECKPOINT can persist the aggregation state and reads
-  // merge it with the state of only the post-checkpoint tail — the
-  // memtable + compacted-sstable shape of the reference (compaction:
-  // `db/compaction/CompactionTask.java`; reads never replay the full
-  // commit log).
-
-  def logDf(name: String): DataFrame = {
-    val tail = tailDf(name)
-    val segments = storage.map(_.segmentFiles(name)).filter(_.nonEmpty)
-      .map(fs => spark.read.schema(tail.schema).parquet(fs.map(_.getPath): _*))
-    segments.map(_.unionByName(tail)).getOrElse(tail)
-  }
+  // A mutation is a one-row state and a compacted CHECKPOINT persists the
+  // folded state, so a read unions the checkpoint's state rows with the
+  // states of the post-checkpoint tail, shadows them once and folds them in
+  // one groupBy — every source through the same rule, like the reference's
+  // memtable + sstable merge (`db/rows/Cells.java` reconcile; reads never
+  // replay the full commit log).
 
   private def cellStruct(c: ColumnDef): Column = {
     // tombstone if explicit null write or expired TTL at aggregation time
@@ -2277,48 +2271,63 @@ class CqlEngine(val spark: SparkSession) {
     StructType(keyFields ++ stateFields ++ tailFields)
   }
 
-  /** groupBy(keys) → one state row per key. */
-  private def aggState(td: TableDef, df: DataFrame, keys: Seq[String],
-                       cols: Seq[ColumnDef], withLiveness: Boolean,
-                       delOps: Seq[String]): DataFrame = {
-    val cellAggs = cols.flatMap { c =>
+  /** One state row per mutation record: the projections [[foldState]] folds. */
+  private def mutationState(df: DataFrame, keys: Seq[String], cols: Seq[ColumnDef],
+                            withLiveness: Boolean): DataFrame = {
+    val cells = cols.flatMap { c =>
+      val isSet = col(c.name + "__set")
       if (isCollection(c.tpe)) {
-        // multi-cell collections: collect the timestamped op log (folded in
-        // finalize). Entries keep their TTL so expiry re-evaluates at read.
-        val isSet = col(c.name + "__set")
+        // multi-cell collections: the timestamped op (folded in finalize).
+        // Entries keep their TTL so expiry re-evaluates at read.
         val expired = col("_ttl") > 0L &&
           (col("_ts") + col("_ttl") * 1000000L) <= lit(nowMicros)
         val opc = when(col("_op") === "delrow", lit("clear"))
           .otherwise(coalesce(col(c.name + "__op"), lit("set")))
         val relevant = (col("_op").isin("insert", "update") && isSet && !expired) ||
           col("_op") === "delrow"
-        Seq(collect_list(when(relevant,
-          struct(col("_ts").as("ts"),
-            when(col("_op") === "delrow", 1).otherwise(0).as("prio"),
-            opc.as("op"), col(c.name).as("v"),
-            col("_ttl").as("ttl")))).as("_muts_" + c.name))
+        Seq(when(relevant, array(struct(col("_ts").as("ts"),
+          when(col("_op") === "delrow", 1).otherwise(0).as("prio"),
+          opc.as("op"), col(c.name).as("v"),
+          col("_ttl").as("ttl")))).as("_muts_" + c.name))
       } else if (c.tpe == CqlCounter) {
         // counter read = sum of update deltas (CounterColumnType); the
         // newest delta ts doubles as the cell's writetime
-        val isSet = col(c.name + "__set")
-        Seq(sum(when(isSet && col("_op") === "update", col(c.name))).as("_csum_" + c.name),
-          max(when(isSet && col("_op") === "update", col("_ts"))).as("_cts_" + c.name))
-      } else {
+        val delta = isSet && col("_op") === "update"
+        Seq(when(delta, col(c.name)).as("_csum_" + c.name),
+          when(delta, col("_ts")).as("_cts_" + c.name))
+      } else Seq(cellStruct(c).as("_cell_" + c.name))
+    }
+    val del = when(col("_op") === "delrow", col("_ts")).as("_del_ts")
+    val live = when(col("_op") === "insert",
+      struct(col("_ts").as("ts"), col("_ttl").as("ttl"))).as("_live")
+    df.select((keys.map(col) ++ cells ++ Seq(del) ++ (if (withLiveness) Seq(live) else Nil)): _*)
+  }
+
+  /** groupBy(keys) → one state row per key: `Cells.reconcile` over state rows. */
+  private def foldState(state: DataFrame, keys: Seq[String], cols: Seq[ColumnDef],
+                        withLiveness: Boolean): DataFrame = {
+    val cellAggs = cols.flatMap { c =>
+      if (isCollection(c.tpe)) {
+        val m = "_muts_" + c.name
+        Seq(flatten(collect_list(col(m))).as(m))
+      } else if (c.tpe == CqlCounter)
+        Seq(sum(col("_csum_" + c.name)).as("_csum_" + c.name),
+          max(col("_cts_" + c.name)).as("_cts_" + c.name))
+      else {
+        val cell = col("_cell_" + c.name)
         // MapType is not orderable in Spark; order by a JSON surrogate of
         // the value for the reconcile tie-break instead (Cells.reconcile
         // compares serialized bytes — same deterministic value-tie winner)
         if (hasMapValue(c.tpe)) {
-          val ordKey = when(cellStruct(c).isNotNull,
-            struct(col("_ts"), cellStruct(c)("tomb"), to_json(col(c.name))))
-          Seq(max_by(cellStruct(c), ordKey).as("_cell_" + c.name))
-        } else Seq(max(cellStruct(c)).as("_cell_" + c.name))
+          val ordKey = when(cell.isNotNull,
+            struct(cell("ts"), cell("tomb"), to_json(cell("v")), cell("ttl")))
+          Seq(max_by(cell, ordKey).as("_cell_" + c.name))
+        } else Seq(max(cell).as("_cell_" + c.name))
       }
     }
-    val delAgg = max(when(col("_op").isin(delOps: _*), col("_ts"))).as("_del_ts")
-    val liveAgg = max(when(col("_op") === "insert",
-      struct(col("_ts").as("ts"), col("_ttl").as("ttl")))).as("_live")
-    val aggs = cellAggs ++ Seq(delAgg) ++ (if (withLiveness) Seq(liveAgg) else Nil)
-    df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    val aggs = cellAggs ++ Seq(max(col("_del_ts")).as("_del_ts")) ++
+      (if (withLiveness) Seq(max(col("_live")).as("_live")) else Nil)
+    state.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
   private def hasMapValue(t: CqlType): Boolean = t match {
@@ -2326,52 +2335,6 @@ class CqlEngine(val spark: SparkSession) {
     case CqlTuple(es) => es.exists(hasMapValue)
     case CqlUdt(_, fs) => fs.exists(f => hasMapValue(f._2))
     case _ => false
-  }
-
-  /** Merge two state relations of the same shape: per-cell max, counter
-    * partial-sum add, op-list concat — `Cells.reconcile` across a
-    * checkpoint and the tail.
-    */
-  private def mergeState(a: DataFrame, b: DataFrame, keys: Seq[String],
-                         cols: Seq[ColumnDef], withLiveness: Boolean): DataFrame = {
-    val rSuffix = "_r_"
-    val bRenamed = b.columns.foldLeft(b) { (df, c) =>
-      if (keys.contains(c)) df else df.withColumnRenamed(c, rSuffix + c)
-    }
-    val joined = a.join(bRenamed, keys, "full_outer")
-    def two(n: String): (Column, Column) = (col(n), col(rSuffix + n))
-    val merged = cols.flatMap { c =>
-      if (isCollection(c.tpe)) {
-        val (l, r) = two("_muts_" + c.name)
-        val mutsType = ArrayType(StructType(Seq(
-          StructField("ts", LongType), StructField("prio", IntegerType),
-          StructField("op", StringType), StructField("v", sparkType(c.tpe)),
-          StructField("ttl", LongType))))
-        Seq(when(l.isNull && r.isNull, lit(null).cast(mutsType))
-          .otherwise(concat(coalesce(l, array().cast(mutsType)),
-            coalesce(r, array().cast(mutsType)))).as("_muts_" + c.name))
-      } else if (c.tpe == CqlCounter) {
-        val (ls, rs) = two("_csum_" + c.name)
-        val (lt, rt) = two("_cts_" + c.name)
-        Seq(when(ls.isNull && rs.isNull, lit(null).cast("long"))
-            .otherwise(coalesce(ls, lit(0L)) + coalesce(rs, lit(0L))).as("_csum_" + c.name),
-          greatest(lt, rt).as("_cts_" + c.name))
-      } else {
-        val (l, r) = two("_cell_" + c.name)
-        if (hasMapValue(c.tpe)) {
-          // maps aren't orderable: compare via the same JSON-surrogate key
-          // the aggregation tie-break uses
-          def k(x: Column) = struct(x("ts"), x("tomb"), to_json(x("v")))
-          Seq(when(l.isNull, r).when(r.isNull, l)
-            .otherwise(when(k(l) >= k(r), l).otherwise(r)).as("_cell_" + c.name))
-        } else Seq(greatest(l, r).as("_cell_" + c.name))
-      }
-    }
-    val delMerged = { val (l, r) = two("_del_ts"); Seq(greatest(l, r).as("_del_ts")) }
-    val liveMerged = if (withLiveness) {
-      val (l, r) = two("_live"); Seq(greatest(l, r).as("_live"))
-    } else Nil
-    joined.select((keys.map(col) ++ merged ++ delMerged ++ liveMerged): _*)
   }
 
   /** Shadow a (joined) state relation by a per-row deletion watermark:
@@ -2398,13 +2361,6 @@ class CqlEngine(val spark: SparkSession) {
     else Nil
     joined.select((keys.map(col) ++ shadowed ++ delC ++ liveC): _*)
   }
-
-  /** Partition-deletion watermarks (max delete-ts per pk). */
-  private def applyPdel(state: DataFrame, pdel: DataFrame, pk: Seq[String],
-                        keys: Seq[String], cols: Seq[ColumnDef],
-                        withLiveness: Boolean): DataFrame =
-    shadowState(state.join(pdel, pk, "left"),
-      coalesce(col("_pdel"), lit(Long.MinValue)), keys, cols, withLiveness)
 
   /** timeuuid clustering values order by their embedded-time sort key. */
   private def orderValue(cd: ColumnDef, v: Column): Column =
@@ -2433,22 +2389,6 @@ class CqlEngine(val spark: SparkSession) {
     }
     side("__rlo", r("_rloi"), gt = true) && side("__rhi", r("_rhii"), gt = false)
   }
-
-  /** Max matching range-tombstone ts for the current row's clustering. */
-  private def rangeWatermark(td: TableDef): Column =
-    coalesce(
-      array_max(transform(filter(col("_rts"), r => withinRange(td, r)), r => r("_ts"))),
-      lit(Long.MinValue))
-
-  /** Range tombstones: per-pk bound list shadowing matching-clustering
-    * state at ts <= the tombstone's (RangeTombstoneMarker semantics).
-    */
-  private def applyRangeTombs(state: DataFrame, rts: DataFrame, pk: Seq[String],
-                              td: TableDef, keys: Seq[String], cols: Seq[ColumnDef],
-                              withLiveness: Boolean): DataFrame =
-    shadowState(state.join(rts, pk, "left"),
-      when(col("_rts").isNull, lit(Long.MinValue)).otherwise(rangeWatermark(td)),
-      keys, cols, withLiveness)
 
   /** State → live values + `_wt_`/`_ttlr_` shadow columns + `_row_live`. */
   private def finalizeState(g: DataFrame, keys: Seq[String], cols: Seq[ColumnDef],
@@ -2654,12 +2594,6 @@ class CqlEngine(val spark: SparkSession) {
     g.select((keys.map(col) ++ valueCols ++ wtCols ++ ttlCols ++ metaCols ++ liveCol): _*)
   }
 
-  private def readCkptPart(dir: java.io.File, part: String,
-                           schema: StructType): Option[DataFrame] = {
-    val f = new java.io.File(dir, part)
-    if (f.isDirectory) Some(spark.read.schema(schema).parquet(f.getPath)) else None
-  }
-
   /** pk + per-ck lo/hi bounds + inclusivity + ts — the persisted shape of
     * range tombstones.
     */
@@ -2672,81 +2606,66 @@ class CqlEngine(val spark: SparkSession) {
         StructField("_ts", LongType)))
 
   /** Merged (rowState, staticsState, pdel, rangeTombs) over checkpoint +
-    * tail — the single source for both read() and compact().
+    * segments + tail — the single source for both read() and compact().
     */
   private def fullState(name: String): (DataFrame, Option[DataFrame], DataFrame, Option[DataFrame]) = {
     val td = table(name)
     val pk = td.partitionKey.map(_.name)
-    val rowKeys = td.primaryKey.map(_.name)
-    val rawTail = logDf(name)
-    val pdelSchema = StructType(td.partitionKey.map(c =>
-      StructField(c.name, sparkType(c.tpe))) :+ StructField("_pdel", LongType))
+    val tail = tailDf(name)
+    val log = storage.map(_.segmentFiles(name)).filter(_.nonEmpty)
+      .map(fs => spark.read.schema(tail.schema).parquet(fs.map(_.getPath): _*).unionByName(tail))
+      .getOrElse(tail)
     val ckdir = storage.flatMap(_.checkpoint(name))
-    val ckptPdel = ckdir.flatMap(readCkptPart(_, "pdel", pdelSchema))
-    val ckptRows = ckdir.flatMap(readCkptPart(_, "rows",
-      stateSchema(td, td.primaryKey, td.regulars, withLiveness = true)))
-    val ckptStatics = ckdir.flatMap(readCkptPart(_, "statics",
-      stateSchema(td, td.partitionKey, td.statics, withLiveness = false)))
-    val ckptRanges = ckdir.flatMap(readCkptPart(_, "ranges", rangeSchema(td)))
+    def ckpt(part: String, schema: StructType): Option[DataFrame] =
+      ckdir.map(new java.io.File(_, part)).filter(_.isDirectory)
+        .map(f => spark.read.schema(schema).parquet(f.getPath))
 
     // combined partition-deletion watermark: checkpoint's + the tail's
-    val tailPdel = rawTail.filter(col("_op") === "delpart")
-      .groupBy(pk.map(col): _*).agg(max(col("_ts")).as("_pdel"))
-    val pdel = ckptPdel.map(c => tailPdel.unionByName(c)
-        .groupBy(pk.map(col): _*).agg(max(col("_pdel")).as("_pdel")))
-      .getOrElse(tailPdel)
+    val pdelSchema = StructType(td.partitionKey.map(c =>
+      StructField(c.name, sparkType(c.tpe))) :+ StructField("_pdel", LongType))
+    val tailPdel = log.filter(col("_op") === "delpart")
+      .select(pk.map(col) :+ col("_ts").as("_pdel"): _*)
+    val pdel = ckpt("pdel", pdelSchema).fold(tailPdel)(tailPdel.unionByName)
+      .groupBy(pk.map(col): _*).agg(max(col("_pdel")).as("_pdel"))
 
-    // tail mutations prefilter exactly as before (cells at <= pdel are dead)
-    val log = rawTail.join(pdel, pk, "left")
-      .filter(col("_pdel").isNull || col("_ts") > col("_pdel"))
-      .drop("_pdel")
-
-    // range tombstones (checkpoint's + the tail's, both beyond pdel) as a
-    // per-pk bound list; shadow matching-clustering tail mutations up front
-    val rangeCols = rangeSchema(td).fields.map(f => col(f.name)).toSeq
-    val rtsRaw: Option[DataFrame] =
-      if (td.clustering.isEmpty) None
+    // range tombstones, checkpoint's + the tail's, as a per-pk bound list.
+    // A tail range at or below pdel shadows nothing pdel does not, so only
+    // what compaction persists drops it.
+    val (ranges, rts) =
+      if (td.clustering.isEmpty) (None, None)
       else {
-        val tail = log.filter(col("_op") === "delrange").select(rangeCols: _*)
-        Some(ckptRanges.map(c => tail.unionByName(c)).getOrElse(tail))
+        val rangeCols = rangeSchema(td).fields.map(f => col(f.name)).toSeq
+        val tailRanges = log.filter(col("_op") === "delrange").select(rangeCols: _*)
+        def withCkpt(t: DataFrame) = ckpt("ranges", rangeSchema(td)).fold(t)(t.unionByName)
+        (Some(withCkpt(tailRanges.join(pdel, pk, "left")
+            .filter(col("_pdel").isNull || col("_ts") > col("_pdel")).drop("_pdel"))),
+          Some(withCkpt(tailRanges).groupBy(pk.map(col): _*)
+            .agg(collect_list(struct(rangeCols.drop(pk.length): _*)).as("_rts"))))
       }
-    val rts = rtsRaw.map(_.groupBy(pk.map(col): _*)
-      .agg(collect_list(struct(rangeCols.drop(pk.length): _*)).as("_rts")))
 
-    val logR = rts match {
-      case None => log
-      case Some(r) =>
-        log.join(r, pk, "left")
-          .filter(col("_rts").isNull ||
-            !col("_op").isin("insert", "update", "delrow") ||
-            rangeWatermark(td) < col("_ts"))
-          .drop("_rts")
+    // each tail mutation is a one-row state: with the checkpoint's state
+    // rows it is shadowed once, then folded by one groupBy
+    def reconcile(part: String, keyDefs: Seq[ColumnDef], cols: Seq[ColumnDef], ops: Seq[String],
+                  withLiveness: Boolean, rts: Option[DataFrame]): DataFrame = {
+      val keys = keyDefs.map(_.name)
+      val muts = mutationState(log.filter(col("_op").isin(ops: _*)), keys, cols, withLiveness)
+      val all = ckpt(part, stateSchema(td, keyDefs, cols, withLiveness)).fold(muts)(muts.unionByName)
+      // partition deletions (max delete ts per pk), then range tombstones
+      // (the max ts of those matching the row's clustering;
+      // RangeTombstoneMarker semantics)
+      val live = shadowState(all.join(pdel, pk, "left"),
+        coalesce(col("_pdel"), lit(Long.MinValue)), keys, cols, withLiveness)
+      val shadowed = rts.fold(live)(r => shadowState(live.join(r, pk, "left"),
+        coalesce(array_max(transform(filter(col("_rts"), withinRange(td, _)), _("_ts"))),
+          lit(Long.MinValue)), keys, cols, withLiveness))
+      foldState(shadowed, keys, cols, withLiveness)
     }
-
-    val rowMuts = logR.filter(col("_op").isin("insert", "update", "delrow"))
-    var rowState = aggState(td, rowMuts, rowKeys, td.regulars,
-      withLiveness = true, delOps = Seq("delrow"))
-    ckptRows.foreach { ck =>
-      var shadowed = applyPdel(ck, pdel, pk, rowKeys, td.regulars, withLiveness = true)
-      rts.foreach { r =>
-        shadowed = applyRangeTombs(shadowed, r, pk, td, rowKeys, td.regulars,
-          withLiveness = true)
-      }
-      rowState = mergeState(shadowed, rowState, rowKeys, td.regulars, withLiveness = true)
-    }
-
-    val staticState =
-      if (td.statics.isEmpty) None
-      else {
-        var st = aggState(td, log.filter(col("_op").isin("insert", "update")),
-          pk, td.statics, withLiveness = false, delOps = Seq.empty)
-        ckptStatics.foreach { ck =>
-          val shadowed = applyPdel(ck, pdel, pk, pk, td.statics, withLiveness = false)
-          st = mergeState(shadowed, st, pk, td.statics, withLiveness = false)
-        }
-        Some(st)
-      }
-    (rowState, staticState, pdel, rtsRaw)
+    val rowState = reconcile("rows", td.primaryKey, td.regulars,
+      Seq("insert", "update", "delrow"), withLiveness = true, rts)
+    val staticState = if (td.statics.isEmpty) None
+      else Some(reconcile("statics", td.partitionKey, td.statics,
+        Seq("insert", "update"), withLiveness = false, None))
+    (rowState, staticState, pdel, ranges)
   }
 
   /** Reconciled live rows of a table with shadow columns `_wt_<c>` (cell

@@ -67,6 +67,7 @@ final class Storage(root: String, step: String => Unit) {
     val dir = new File(tableDir(name), SegmentsDir)
     val before = parquetNames(dir).toSet
     write(dir.getPath)
+    Seq("_SUCCESS", "._SUCCESS.crc").foreach(n => new File(dir, n).delete())
     step("segments")
     parquetNames(dir).filterNot(before).sorted
   }
@@ -124,14 +125,18 @@ final class Storage(root: String, step: String => Unit) {
     remove(m)
   }
 
-  /** Perform a manifest's owed removals; each is idempotent. */
+  /** Perform a manifest's owed removals; each is idempotent. A segment's
+    * checksum sidecar goes with it, also when the segment is archived.
+    */
   private def remove(m: Manifest): Unit = m.removals.foreach { p =>
     val f = new File(tableDir(m.schema.name), p)
-    if (m.archive && p.startsWith(SegmentsDir) && f.exists) {
+    val segment = p.startsWith(SegmentsDir + "/")
+    if (m.archive && segment && f.exists) {
       val to = new File(new File(tableDir(m.schema.name), CdcDir), s"g${m.version}_${f.getName}")
       to.getParentFile.mkdirs()
       Files.move(f.toPath, to.toPath, StandardCopyOption.ATOMIC_MOVE)
     } else deleteRec(f)
+    if (segment) new File(f.getParentFile, s".${f.getName}.crc").delete()
     step("remove")
   }
 }

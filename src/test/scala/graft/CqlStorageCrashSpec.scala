@@ -109,6 +109,29 @@ class CqlStorageCrashSpec extends SparkSpec {
     }
   }
 
+  /** How the table directories differ from what their manifests allow:
+    * the manifest, its listed segments with their checksums, the live
+    * checkpoint generation and `cdc/`; stray files and missing ones.
+    */
+  private def layoutDiff(root: File): Seq[String] = reads.keys.toSeq.sorted.flatMap { t =>
+    import org.json4s._
+    implicit val formats: Formats = DefaultFormats
+    val dir = new File(root, t)
+    def names(d: File) = Option(d.listFiles()).toSeq.flatten.map(_.getName)
+    val found = names(dir).flatMap {
+      case d @ ("segments" | "checkpoint") => names(new File(dir, d)).map(n => s"$d/$n")
+      case n => Seq(n)
+    }.toSet - "cdc"
+    val listed = Option(new File(dir, "manifest.json")).filter(_.isFile).map { f =>
+      val m = org.json4s.jackson.JsonMethods.parse(new String(Files.readAllBytes(f.toPath), "UTF-8"))
+      Set("manifest.json") ++ (m \ "segments").extract[Seq[String]]
+        .flatMap(s => Seq(s"segments/$s", s"segments/.$s.crc")) ++
+        (m \ "checkpoint").extractOpt[Long].map(g => s"checkpoint/$g")
+    }.getOrElse(Set.empty)
+    ((found -- listed).toSeq.map(n => s"$t/$n") ++
+      (listed -- found).toSeq.map(n => s"$t/$n missing")).sorted
+  }
+
   /** Replay the tail on a copy of `base` and run `op`, crashing after
     * durable step `crashAt` (0 = no crash); returns the root and the
     * number of durable steps the operation took.
@@ -142,6 +165,8 @@ class CqlStorageCrashSpec extends SparkSpec {
         (base, pre)
       })
       val (postRoot, steps) = run(base, cdc, op, crashAt = 0)
+      val diff = layoutDiff(postRoot)
+      assert(diff.isEmpty, s"$name: table directories differ from their manifests: $diff")
       val (post, later) = check(postRoot)
       assert(later.isEmpty, later)
       assert(steps > 0 && reads.keys.exists(t => pre(t) != post(t)),
