@@ -55,18 +55,41 @@ class CqlEngine(val spark: SparkSession) {
     */
   private val udfs = scala.collection.mutable.LinkedHashMap.empty[String, CreateFunction]
   private val udas = scala.collection.mutable.LinkedHashMap.empty[String, CreateAggregate]
-  private val logs = scala.collection.mutable.LinkedHashMap.empty[String, scala.collection.mutable.ArrayBuffer[Row]]
-  /** Data-generation counters backing the system.size_estimates cache.
-    * The Spark/Cassandra connector reads size_estimates during input-split
-    * planning, so serving it must not scan every table per query; the
-    * reference refreshes estimates out-of-band (db/SizeEstimatesRecorder
-    * .java runs at flush). Here each table's estimate row is recomputed
-    * lazily on read, and only when its generation moved since the last
-    * computation — cold tables answer from the cache indefinitely. */
-  private val dataGen = scala.collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
-  private val sizeEstCache = scala.collection.mutable.HashMap.empty[String, (Long, Row)]
-  private def noteDataChange(name: String): Unit = dataGen(name) = dataGen(name) + 1L
-  private def dropDataGen(name: String): Unit = { dataGen.remove(name); sizeEstCache.remove(name) }
+  /** A table's in-memory mutation tail (the memtable analog). Every change
+    * replaces its rows and draws a fresh `gen` from one engine-wide counter,
+    * so a `gen` names one content for the engine's life: a DROP and
+    * re-CREATE under the same name never repeats one.
+    */
+  private final class Tail {
+    private var current = Vector.empty[Row]
+    private var stamp = nextTailGen()
+    def rows: Vector[Row] = current
+    def gen: Long = stamp
+    def update(f: Vector[Row] => Vector[Row]): Unit = { current = f(current); stamp = nextTailGen() }
+    def clear(): Unit = update(_ => Vector.empty)
+  }
+  private var tailGens = 0L
+  private def nextTailGen(): Long = { tailGens += 1; tailGens }
+  private val logs = scala.collection.mutable.LinkedHashMap.empty[String, Tail]
+  /** What a table's reconciled read is built from: schema, the manifest's
+    * checkpoint and segments, the tail's generation and the clock. What is
+    * derived from a read is kept with these and reused while they match.
+    */
+  private type ReadInputs = (TableDef, Option[java.io.File], Seq[java.io.File], Long, Long)
+  private def readInputs(name: String): ReadInputs = (table(name), storage.flatMap(_.checkpoint(name)),
+    storage.toSeq.flatMap(_.segmentFiles(name)), logs(name).gen, nowMicros)
+  /** Reconciled, analysed base plans: a read adds only its filter, sort and limit. */
+  private val readPlans = scala.collection.mutable.HashMap.empty[String, (ReadInputs, DataFrame)]
+  /** system.size_estimates rows. The Spark/Cassandra connector reads
+    * size_estimates during input-split planning, so serving it must not
+    * scan every table per query; the reference refreshes estimates
+    * out-of-band (db/SizeEstimatesRecorder.java runs at flush). Here each
+    * table's estimate row is recomputed lazily on read, and only when its
+    * read inputs moved since the last computation — cold tables answer
+    * from the cache indefinitely.
+    */
+  private val sizeEstCache = scala.collection.mutable.HashMap.empty[String, (ReadInputs, Row)]
+  private def dropReadCaches(name: String): Unit = { sizeEstCache.remove(name); readPlans.remove(name) }
   /** One registered secondary index (statements/schema/CreateIndexStatement
     * .java; schema/IndexMetadata.java). `targets` are (column, kind) with
     * kind ∈ simple|keys|values|entries|full; `custom` + `className` model
@@ -106,7 +129,7 @@ class CqlEngine(val spark: SparkSession) {
     * counts raw values (JSON surrogate so non-orderable types count too).
     */
   private def computeIndexStat(d: IndexDef): Double = {
-    val hasData = logs.get(d.table).exists(_.nonEmpty) || storage.exists(_.holdsData(d.table))
+    val hasData = logs.get(d.table).exists(_.rows.nonEmpty) || storage.exists(_.holdsData(d.table))
     if (!hasData) return 0.0
     val c = d.targets.head._1
     val cd = table(d.table).column(c).get
@@ -359,10 +382,10 @@ class CqlEngine(val spark: SparkSession) {
   def attachStorage(dir: String): Unit = {
     val st = new Storage(dir, s => storageStep(s))
     storage = Some(st)
+    readPlans.clear()
     st.attach().foreach { m =>
       tables(m.schema.name) = m.schema
-      logs.getOrElseUpdate(m.schema.name, scala.collection.mutable.ArrayBuffer.empty[Row])
-      noteDataChange(m.schema.name) // durable segments may have moved while detached
+      logs.getOrElseUpdate(m.schema.name, new Tail)
       // client timestamps must stay monotonic across engine restarts
       tsCounter = math.max(tsCounter, m.maxTs)
     }
@@ -374,11 +397,11 @@ class CqlEngine(val spark: SparkSession) {
   /** The clock a commit persists: the session clock or the tail's largest `_ts`. */
   private def commitTs(name: String): Long = {
     val i = logSchema(table(name)).fieldIndex("_ts")
-    logs(name).foldLeft(tsCounter)((m, r) => math.max(m, r.getLong(i)))
+    logs(name).rows.foldLeft(tsCounter)((m, r) => math.max(m, r.getLong(i)))
   }
 
   private def tailDf(name: String): DataFrame =
-    spark.createDataFrame(java.util.Arrays.asList(logs(name).toSeq: _*), logSchema(table(name)))
+    spark.createDataFrame(java.util.Arrays.asList(logs(name).rows: _*), logSchema(table(name)))
 
   /** Write the in-memory tail as one segment file into `dir`. */
   private def writeTail(name: String)(dir: String): Unit =
@@ -392,7 +415,7 @@ class CqlEngine(val spark: SparkSession) {
     val name = canon(name0)
     val store = attached
     val td = mutableTable(name)
-    val added = if (logs(name).isEmpty) Nil else store.writeSegments(name)(writeTail(name))
+    val added = if (logs(name).rows.isEmpty) Nil else store.writeSegments(name)(writeTail(name))
     store.append(td, added, commitTs(name))
     logs(name).clear()
   }
@@ -459,9 +482,8 @@ class CqlEngine(val spark: SparkSession) {
     val mdf = obs.map(o => mdf0.observe(o, max(col("_ts")).as("max_ts"))).getOrElse(mdf0)
     val added = storage match {
       case Some(st) => st.writeSegments(name)(mdf.write.mode("append").parquet(_))
-      case None => logs(name) ++= mdf.collect(); Nil
+      case None => logs(name).update(_ ++ mdf.collect()); Nil
     }
-    noteDataChange(name)
     // keep the session clock ahead of event-time bulk generations: a later
     // statement write must out-timestamp what was just loaded (mirrors the
     // attachStorage max_ts recalibration), else it silently loses LWW
@@ -870,15 +892,15 @@ class CqlEngine(val spark: SparkSession) {
         // one full-token-range row per table: rows and approx-distinct
         // partition keys from the live data, partition size from the
         // schema's default column widths. Recompute only for tables whose
-        // data generation moved since the last read (split-planning clients
-        // poll this table — see dataGen scaladoc); everything else answers
-        // from the cached row.
+        // read inputs moved since the last read (split-planning clients
+        // poll this table — see sizeEstCache scaladoc); everything else
+        // answers from the cached row.
         val rows = tables.keys.toSeq.sorted
           .filterNot(t => virtualDefs.contains(t) || views.contains(t))
           .map { t =>
-            val gen = dataGen(t)
+            val inputs = readInputs(t)
             sizeEstCache.get(t) match {
-              case Some((g, row)) if g == gen => row
+              case Some((in, row)) if in == inputs => row
               case _ =>
                 val td = tables(t)
                 val (ks, tn) = splitName(t)
@@ -892,7 +914,7 @@ class CqlEngine(val spark: SparkSession) {
                 val meanSize = if (parts == 0L) 0L else rowWidth * n / parts
                 val row = Row(ks, tn, Long.MinValue.toString, Long.MaxValue.toString,
                   meanSize, parts)
-                sizeEstCache(t) = (gen, row)
+                sizeEstCache(t) = (inputs, row)
                 row
             }
           }
@@ -939,7 +961,7 @@ class CqlEngine(val spark: SparkSession) {
         val sc = spark.sparkContext
         val storage = sc.getRDDStorageInfo
         val maxMem = sc.getExecutorMemoryStatus.values.map(_._1).sum
-        val tailRows = logs.values.map(_.size.toLong).sum
+        val tailRows = logs.values.map(_.rows.size.toLong).sum
         Some(mk(virtualDefs(name), Seq(
           Row("block_manager_storage", maxMem,
             storage.map(_.numCachedPartitions).sum,
@@ -967,7 +989,7 @@ class CqlEngine(val spark: SparkSession) {
             case (tbl, tail) if !virtualDefs.contains(tbl) =>
               val (ks, tn) = splitName(tbl)
               Row(ks, tn, "pending-flush", "compaction",
-                tail.size.toLong, autoFlushRows.toLong, "rows")
+                tail.rows.size.toLong, autoFlushRows.toLong, "rows")
           }))
       case "system_virtual_schema.keyspaces" =>
         Some(mk(virtualDefs(name), virtualRegistryKs.sorted.map(Row(_))))
@@ -1159,7 +1181,7 @@ class CqlEngine(val spark: SparkSession) {
         keyspaces -= n
         val doomed = tables.keys.filter(splitName(_)._1 == n).toList
         doomed.foreach { t =>
-          tables.remove(t); logs.remove(t); dropDataGen(t); storage.foreach(_.drop(t))
+          tables.remove(t); logs.remove(t); dropReadCaches(t); storage.foreach(_.drop(t))
           indexDefs.filterInPlace { (nm, d) =>
             if (d.table == t) indexStats.remove(nm)
             d.table != t
@@ -1204,7 +1226,7 @@ class CqlEngine(val spark: SparkSession) {
         if (!ifNotExists) throw InvalidRequest(s"Table ${td.name} already exists")
       } else {
         tables(td.name) = td
-        logs(td.name) = scala.collection.mutable.ArrayBuffer.empty[Row]
+        logs(td.name) = new Tail
       }
       emptyResult
     case v: CreateView => createView(v)
@@ -1276,7 +1298,7 @@ class CqlEngine(val spark: SparkSession) {
       emptyResult
     case DropView(n) =>
       if (!views.contains(n)) throw InvalidRequest(s"Materialized view $n doesn't exist")
-      views.remove(n); tables.remove(n); viewOptions.remove(n); dropDataGen(n); emptyResult
+      views.remove(n); tables.remove(n); viewOptions.remove(n); dropReadCaches(n); emptyResult
     case AlterView(n, opts) =>
       // AlterViewStatement.java:44-75 — view must exist; gc_grace_seconds=0
       // and any default_time_to_live are rejected (view rows must expire
@@ -1422,15 +1444,13 @@ class CqlEngine(val spark: SparkSession) {
       // columns surface as null and dropped columns vanish without rewrite
       val oldIdx = logSchema(td).fieldNames.zipWithIndex.toMap
       val newFields = logSchema(newTd).fieldNames
-      val reshaped = logs(n).map { r =>
+      logs(n).update(_.map { r =>
         Row.fromSeq(newFields.map { f =>
           oldIdx.get(f).map(r.get).getOrElse(
             if (f.endsWith("__set")) false else null)
         }.toSeq)
-      }
-      logs(n) = scala.collection.mutable.ArrayBuffer(reshaped.toSeq: _*)
+      })
       tables(n) = newTd
-      noteDataChange(n) // schema width feeds the size estimate
       emptyResult
     case DropTable(n) =>
       if (views.contains(n))
@@ -1441,7 +1461,7 @@ class CqlEngine(val spark: SparkSession) {
       if (dependents.nonEmpty)
         throw InvalidRequest(
           s"Cannot drop table when materialized views still depend on it (${dependents.mkString(", ")})")
-      tables.remove(n); logs.remove(n); dropDataGen(n)
+      tables.remove(n); logs.remove(n); dropReadCaches(n)
       indexDefs.filterInPlace { (nm, d) =>
         if (d.table == n) indexStats.remove(nm)
         d.table != n
@@ -1453,7 +1473,7 @@ class CqlEngine(val spark: SparkSession) {
       // durable segments and checkpoints are data too (TruncateStatement
       // discards sstables); the schema survives
       storage.foreach(_.truncate(td, commitTs(n)))
-      logs(n).clear(); noteDataChange(n)
+      logs(n).clear()
       emptyResult
     case InsertJson(tbl, js, defaultUnset, ttl, ts) =>
       val td = table(tbl)
@@ -1975,9 +1995,8 @@ class CqlEngine(val spark: SparkSession) {
   def mutationSchema(name: String): StructType = logSchema(table(canon(name)))
 
   private def appendMutation(name: String, row: Row): Unit = {
-    logs(name) += row
-    noteDataChange(name)
-    if (storage.isDefined && logs(name).size >= autoFlushRows) flush(name)
+    logs(name).update(_ :+ row)
+    if (storage.isDefined && logs(name).rows.size >= autoFlushRows) flush(name)
   }
 
   private def mutationRow(td: TableDef, keyVals: Map[String, Any],
@@ -2658,7 +2677,22 @@ class CqlEngine(val spark: SparkSession) {
       val shadowed = rts.fold(live)(r => shadowState(live.join(r, pk, "left"),
         coalesce(array_max(transform(filter(col("_rts"), withinRange(td, _)), _("_ts"))),
           lit(Long.MinValue)), keys, cols, withLiveness))
-      foldState(shadowed, keys, cols, withLiveness)
+      // a row deletion shadows each counter state of its row before the
+      // sum, wherever the deletion and the deltas are stored: a counter
+      // update reads the current value, and the row tombstone shadows it
+      val counters = cols.filter(_.tpe == CqlCounter)
+      val byRowDel =
+        if (counters.isEmpty || !ops.contains("delrow")) shadowed
+        else {
+          val rowDel = coalesce(max(col("_del_ts")).over(Window.partitionBy(keys.map(col): _*)),
+            lit(Long.MinValue))
+          shadowed.withColumns(counters.flatMap { c =>
+            val after = col("_cts_" + c.name) > rowDel
+            Seq("_csum_" + c.name -> when(after, col("_csum_" + c.name)),
+              "_cts_" + c.name -> when(after, col("_cts_" + c.name)))
+          }.toMap)
+        }
+      foldState(byRowDel, keys, cols, withLiveness)
     }
     val rowState = reconcile("rows", td.primaryKey, td.regulars,
       Seq("insert", "update", "delrow"), withLiveness = true, rts)
@@ -2675,12 +2709,22 @@ class CqlEngine(val spark: SparkSession) {
   def read(name0: String): DataFrame = readCanonical(canon(name0))
 
   /** [[read]] on an already-canonical catalog key (internal call sites —
-    * statement names canonicalize exactly once in [[run]]).
+    * statement names canonicalize exactly once in [[run]]). A table's
+    * reconciled plan is reused while its inputs stay the same ([[readPlans]]).
     */
   private[cql] def readCanonical(name: String): DataFrame = {
     views.get(name).foreach(v => return readView(v))
     virtualDf(name).foreach(v => return v)
-    val td = table(name)
+    val inputs = readInputs(name)
+    readPlans.get(name).collect { case (in, df) if in == inputs => df }.getOrElse {
+      val df = reconciled(name, inputs._1)
+      readPlans(name) = (inputs, df)
+      df
+    }
+  }
+
+  /** The reconciled live rows of a table, built from its current inputs. */
+  private def reconciled(name: String, td: TableDef): DataFrame = {
     val pk = td.partitionKey.map(_.name)
     val rowKeys = td.primaryKey.map(_.name)
     val (rowState, staticState, _, _) = fullState(name)
@@ -2811,10 +2855,10 @@ class CqlEngine(val spark: SparkSession) {
     // history inputs measured before the consumed artifacts disappear
     val consumed = store.checkpoint(name).toSeq ++ store.segmentFiles(name)
     val histBytesIn = consumed.map(dirBytes).sum
-    val histInputs = consumed.size + (if (logs(name).nonEmpty) 1 else 0)
+    val histInputs = consumed.size + (if (logs(name).rows.nonEmpty) 1 else 0)
     // with CDC on, the tail lands as a segment too, so consumers see every record
     val cdcTail =
-      if (cdcEnabled && logs(name).nonEmpty) store.writeSegments(name)(writeTail(name)) else Nil
+      if (cdcEnabled && logs(name).rows.nonEmpty) store.writeSegments(name)(writeTail(name)) else Nil
     val rowsOut = org.apache.spark.sql.Observation()
     store.compact(td, commitTs(name), archive = cdcEnabled, cdcTail) { ck =>
       rowState.observe(rowsOut, count(lit(1)).as("n"))
@@ -2827,8 +2871,6 @@ class CqlEngine(val spark: SparkSession) {
       rangesPurged.foreach(_.write.parquet(new java.io.File(ck, "ranges").getPath))
     }
     logs(name).clear()
-    // compaction purges gc_grace-expired tombstones, so counts can change
-    noteDataChange(name)
     val ck = store.checkpoint(name).get
     // system.compaction_history record (SystemKeyspace.java
     // CompactionHistory): every output row went through one
@@ -3010,22 +3052,20 @@ class CqlEngine(val spark: SparkSession) {
         if (referencesUdt(c.tpe, tn)) c.copy(tpe = rewriteUdt(c.tpe, tn, nu)) else c))
       // reshape in-memory tail values for ADD (nested structs gain fields);
       // renames are positional, values unchanged
-      if (at.add.nonEmpty && logs.contains(t) && logs(t).nonEmpty) {
+      if (at.add.nonEmpty && logs.contains(t) && logs(t).rows.nonEmpty) {
         val colTypes = td.columns.map(c => c.name -> c.tpe).toMap
         val newColTypes = newTd.columns.map(c => c.name -> c.tpe).toMap
         val fieldNames = logSchema(td).fieldNames
-        val reshaped = logs(t).map { r =>
+        logs(t).update(_.map { r =>
           Row.fromSeq(fieldNames.zip(r.toSeq).map { case (fn, v) =>
             (colTypes.get(fn), newColTypes.get(fn)) match {
               case (Some(ot), Some(nt)) if referencesUdt(ot, tn) => widenValue(v, ot, nt)
               case _ => v
             }
           }.toSeq)
-        }
-        logs(t) = scala.collection.mutable.ArrayBuffer(reshaped.toSeq: _*)
+        })
       }
       tables(t) = newTd
-      noteDataChange(t)
     }
     emptyResult
   }

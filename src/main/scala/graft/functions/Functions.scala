@@ -234,7 +234,10 @@ object Functions {
   def java_lower(text: Column): Column = call_function("java_lower", text)
 }
 
-/** `SparkSessionExtensions` hook: functions (and, in later rounds, rules). */
+/** `SparkSessionExtensions` hook: functions and the [[BindParams]] rules. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = Functions.install(e)
+  override def apply(e: SparkSessionExtensions): Unit = {
+    Functions.install(e)
+    BindParams.install(e)
+  }
 }

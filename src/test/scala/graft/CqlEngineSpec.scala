@@ -478,6 +478,23 @@ class CqlEngineSpec extends SparkSpec {
     assert(rows(e.execute("SELECT k, c FROM t19")) === Set(Seq(2, 7L)))
   }
 
+  test("a row DELETE shadows the counter deltas before it, wherever flush and compaction fall") {
+    // no cut, then a flush or a compaction after each statement
+    val placements = Seq(None) ++ (0 until 3).flatMap(i => Seq(Some(i -> "flush"), Some(i -> "compact")))
+    placements.foreach { cut =>
+      val e = mkEngine
+      e.attachStorage(java.nio.file.Files.createTempDirectory("graft-cql-counter").toString)
+      e.execute("CREATE TABLE t19d (k int, c int, n counter, PRIMARY KEY (k, c))")
+      Seq("UPDATE t19d SET n = n + 5 WHERE k = 1 AND c = 1",
+        "DELETE FROM t19d WHERE k = 1 AND c = 1",
+        "UPDATE t19d SET n = n + 7 WHERE k = 1 AND c = 1").zipWithIndex.foreach { case (st, i) =>
+        e.execute(st)
+        cut.filter(_._1 == i).foreach(c => if (c._2 == "flush") e.flush("t19d") else e.compact("t19d"))
+      }
+      assert(rows(e.execute("SELECT k, c, n FROM t19d")) === Set(Seq(1, 1, 7L)), s"cut: $cut")
+    }
+  }
+
   test("LIKE: SASI prefix/suffix/contains semantics") {
     val e = mkEngine
     e.execute("CREATE TABLE t20 (k int PRIMARY KEY, v text)")

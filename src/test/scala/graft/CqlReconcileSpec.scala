@@ -58,6 +58,7 @@ class CqlReconcileSpec extends SparkSpec {
         1 -> s"DELETE l FROM pl $collTs $row",
         // counters take the session clock, which only rises
         4 -> s"UPDATE pc SET n = n + ${a - 4} $row",
+        1 -> s"DELETE FROM pc $row",
         1 -> s"DELETE FROM pc WHERE k = $k AND c >= $c",
         1 -> s"DELETE FROM pc WHERE k = $k")
     } yield st
