@@ -78,8 +78,10 @@ class CqlEngine(val spark: SparkSession) {
   private type ReadInputs = (TableDef, Option[java.io.File], Seq[java.io.File], Long, Long)
   private def readInputs(name: String): ReadInputs = (table(name), storage.flatMap(_.checkpoint(name)),
     storage.toSeq.flatMap(_.segmentFiles(name)), logs(name).gen, nowMicros)
-  /** Reconciled, analysed base plans: a read adds only its filter, sort and limit. */
-  private val readPlans = scala.collection.mutable.HashMap.empty[String, (ReadInputs, DataFrame)]
+  /** Reconciled, analysed base plans, keyed by table and whether the plan
+    * has the pinned one-task shape: a read adds only its filter, sort and limit.
+    */
+  private val readPlans = scala.collection.mutable.HashMap.empty[(String, Boolean), (ReadInputs, DataFrame)]
   /** system.size_estimates rows. The Spark/Cassandra connector reads
     * size_estimates during input-split planning, so serving it must not
     * scan every table per query; the reference refreshes estimates
@@ -89,7 +91,10 @@ class CqlEngine(val spark: SparkSession) {
     * from the cache indefinitely.
     */
   private val sizeEstCache = scala.collection.mutable.HashMap.empty[String, (ReadInputs, Row)]
-  private def dropReadCaches(name: String): Unit = { sizeEstCache.remove(name); readPlans.remove(name) }
+  private def dropReadCaches(name: String): Unit = {
+    sizeEstCache.remove(name)
+    Seq(false, true).foreach(pinned => readPlans.remove((name, pinned)))
+  }
   /** One registered secondary index (statements/schema/CreateIndexStatement
     * .java; schema/IndexMetadata.java). `targets` are (column, kind) with
     * kind ∈ simple|keys|values|entries|full; `custom` + `className` model
@@ -1613,7 +1618,7 @@ class CqlEngine(val spark: SparkSession) {
       if (pkVals.distinct.length != 1 || pkVals.head.exists(_.isEmpty))
         throw InvalidRequest("Batch with conditions cannot span multiple partitions")
       // one partition read; each condition evaluates on ITS clustering row
-      val partRows = readCanonical(td.name).filter(
+      val partRows = readCanonical(td.name, pinned = true).filter(
         pkNames.zip(pkVals.head.map(_.get)).map { case (c, v) => col(c) === lit(v) }
           .reduce(_ && _)).collect()
       // partition rows in clustering order (CLUSTERING ORDER aware; the
@@ -1669,7 +1674,7 @@ class CqlEngine(val spark: SparkSession) {
     val td = table(tbl)
     val (keys, _) = mutationKeys(td, where,
       requireCk = td.clustering.nonEmpty && !staticOnly)
-    val current = readCanonical(tbl).filter(
+    val current = readCanonical(tbl, pinned = true).filter(
       td.primaryKey.filter(c => keys.contains(c.name))
         .map(c => col(c.name) === lit(keys(c.name))).reduce(_ && _))
     val rows =
@@ -1799,7 +1804,7 @@ class CqlEngine(val spark: SparkSession) {
     val keyCols = if (staticOnly) td.partitionKey else td.primaryKey
     val keyFilter = keyCols.map(c => col(c.name) === lit(vals.getOrElse(c.name,
       throw InvalidRequest(s"Some primary key parts are missing: ${c.name}")))).reduce(_ && _)
-    val rows = readCanonical(i.table).filter(keyFilter).limit(1).collect()
+    val rows = readCanonical(i.table, pinned = true).filter(keyFilter).limit(1).collect()
     if (rows.isEmpty) executeInsert(i.copy(ifNotExists = false))
     mkLwtResult(td, rows.isEmpty, rows)
   }
@@ -2123,7 +2128,7 @@ class CqlEngine(val spark: SparkSession) {
     }
     if (idxOps.nonEmpty) {
       val keyFilter = td.primaryKey.map(c => col(c.name) === lit(keys(c.name))).reduce(_ && _)
-      val row = readCanonical(u.table).filter(keyFilter)
+      val row = readCanonical(u.table, pinned = true).filter(keyFilter)
         .select(idxOps.map { case (c, _) => size(col(c)).as(c) }: _*)
         .collect().headOption
       idxOps.foreach { case (c, i) =>
@@ -2290,9 +2295,13 @@ class CqlEngine(val spark: SparkSession) {
     StructType(keyFields ++ stateFields ++ tailFields)
   }
 
-  /** One state row per mutation record: the projections [[foldState]] folds. */
+  /** One state row per mutation record: the projections [[foldState]] folds.
+    * A partition deletion is a marker row with its `_pd` watermark and a
+    * range deletion one with its `rangeBounds` as `_rt`; `_mark` is set on
+    * markers only.
+    */
   private def mutationState(df: DataFrame, keys: Seq[String], cols: Seq[ColumnDef],
-                            withLiveness: Boolean): DataFrame = {
+                            withLiveness: Boolean, rangeBounds: Option[Column]): DataFrame = {
     val cells = cols.flatMap { c =>
       val isSet = col(c.name + "__set")
       if (isCollection(c.tpe)) {
@@ -2319,7 +2328,11 @@ class CqlEngine(val spark: SparkSession) {
     val del = when(col("_op") === "delrow", col("_ts")).as("_del_ts")
     val live = when(col("_op") === "insert",
       struct(col("_ts").as("ts"), col("_ttl").as("ttl"))).as("_live")
-    df.select((keys.map(col) ++ cells ++ Seq(del) ++ (if (withLiveness) Seq(live) else Nil)): _*)
+    val marks = Seq(when(col("_op") === "delpart", col("_ts")).as("_pd")) ++
+      rangeBounds.map(r => when(col("_op") === "delrange", r).as("_rt")) :+
+      when(col("_op").isin("delpart", "delrange"), true).as("_mark")
+    df.select((keys.map(col) ++ cells ++ Seq(del) ++ (if (withLiveness) Seq(live) else Nil) ++
+      marks): _*)
   }
 
   /** groupBy(keys) → one state row per key: `Cells.reconcile` over state rows. */
@@ -2356,10 +2369,10 @@ class CqlEngine(val spark: SparkSession) {
     case _ => false
   }
 
-  /** Shadow a (joined) state relation by a per-row deletion watermark:
-    * everything with ts <= the watermark is dead (DeletionTime).
+  /** Shadow a state relation by a per-row deletion watermark: everything
+    * with ts <= the watermark is dead (DeletionTime).
     */
-  private def shadowState(joined: DataFrame, p: Column, keys: Seq[String],
+  private def shadowState(states: DataFrame, p: Column, keys: Seq[String],
                           cols: Seq[ColumnDef], withLiveness: Boolean): DataFrame = {
     val shadowed = cols.flatMap { c =>
       if (isCollection(c.tpe)) {
@@ -2378,7 +2391,7 @@ class CqlEngine(val spark: SparkSession) {
     val liveC = if (withLiveness)
       Seq(when(col("_live").isNotNull && col("_live")("ts") > p, col("_live")).as("_live"))
     else Nil
-    joined.select((keys.map(col) ++ shadowed ++ delC ++ liveC): _*)
+    states.select((keys.map(col) ++ shadowed ++ delC ++ liveC): _*)
   }
 
   /** timeuuid clustering values order by their embedded-time sort key. */
@@ -2624,59 +2637,69 @@ class CqlEngine(val spark: SparkSession) {
       Seq(StructField("_rloi", BooleanType), StructField("_rhii", BooleanType),
         StructField("_ts", LongType)))
 
-  /** Merged (rowState, staticsState, pdel, rangeTombs) over checkpoint +
-    * segments + tail — the single source for both read() and compact().
-    */
-  private def fullState(name: String): (DataFrame, Option[DataFrame], DataFrame, Option[DataFrame]) = {
-    val td = table(name)
-    val pk = td.partitionKey.map(_.name)
+  /** A table's mutation log: its listed segments, then the in-memory tail. */
+  private def mutationLog(name: String): DataFrame = {
     val tail = tailDf(name)
-    val log = storage.map(_.segmentFiles(name)).filter(_.nonEmpty)
+    storage.map(_.segmentFiles(name)).filter(_.nonEmpty)
       .map(fs => spark.read.schema(tail.schema).parquet(fs.map(_.getPath): _*).unionByName(tail))
       .getOrElse(tail)
-    val ckdir = storage.flatMap(_.checkpoint(name))
-    def ckpt(part: String, schema: StructType): Option[DataFrame] =
-      ckdir.map(new java.io.File(_, part)).filter(_.isDirectory)
-        .map(f => spark.read.schema(schema).parquet(f.getPath))
+  }
 
-    // combined partition-deletion watermark: checkpoint's + the tail's
-    val pdelSchema = StructType(td.partitionKey.map(c =>
-      StructField(c.name, sparkType(c.tpe))) :+ StructField("_pdel", LongType))
-    val tailPdel = log.filter(col("_op") === "delpart")
-      .select(pk.map(col) :+ col("_ts").as("_pdel"): _*)
-    val pdel = ckpt("pdel", pdelSchema).fold(tailPdel)(tailPdel.unionByName)
-      .groupBy(pk.map(col): _*).agg(max(col("_pdel")).as("_pdel"))
+  /** `part` of the live checkpoint, if it may hold rows ([[Storage.checkpointPart]]). */
+  private def checkpointPart(name: String, part: String, schema: StructType): Option[DataFrame] =
+    storage.flatMap(_.checkpointPart(name, part)).map(f => spark.read.schema(schema).parquet(f.getPath))
 
-    // range tombstones, checkpoint's + the tail's, as a per-pk bound list.
-    // A tail range at or below pdel shadows nothing pdel does not, so only
-    // what compaction persists drops it.
-    val (ranges, rts) =
-      if (td.clustering.isEmpty) (None, None)
-      else {
-        val rangeCols = rangeSchema(td).fields.map(f => col(f.name)).toSeq
-        val tailRanges = log.filter(col("_op") === "delrange").select(rangeCols: _*)
-        def withCkpt(t: DataFrame) = ckpt("ranges", rangeSchema(td)).fold(t)(t.unionByName)
-        (Some(withCkpt(tailRanges.join(pdel, pk, "left")
-            .filter(col("_pdel").isNull || col("_ts") > col("_pdel")).drop("_pdel"))),
-          Some(withCkpt(tailRanges).groupBy(pk.map(col): _*)
-            .agg(collect_list(struct(rangeCols.drop(pk.length): _*)).as("_rts"))))
-      }
+  /** pk + the partition-deletion watermark: the persisted shape of pdel. */
+  private def pdelSchema(td: TableDef): StructType =
+    StructType(td.partitionKey.map(c => StructField(c.name, sparkType(c.tpe))) :+
+      StructField("_pdel", LongType))
 
-    // each tail mutation is a one-row state: with the checkpoint's state
-    // rows it is shadowed once, then folded by one groupBy
+  /** Reconciled (rowState, staticsState) over checkpoint + segments + tail,
+    * the single source for both read() and compact(). Partition deletions
+    * and range tombstones, stored or logged, join the state rows as marker
+    * rows (`_mark`); one window on the partition key gives each state row
+    * its partition's deletion watermark and range list. A partition-key
+    * filter passes that window into every scan, and the fold reuses its
+    * distribution. `pinned` coalesces the union to one partition first, so
+    * the reconcile of a pinned read runs in one task.
+    */
+  private def fullState(name: String, pinned: Boolean): (DataFrame, Option[DataFrame]) = {
+    val td = table(name)
+    val pk = td.partitionKey.map(_.name)
+    val log = mutationLog(name)
+    val pdelMarks = checkpointPart(name, "pdel", pdelSchema(td)).map(
+      _.select(pk.map(col) ++ Seq(col("_pdel").as("_pd"), lit(true).as("_mark")): _*))
+    val rangeMarks = if (td.clustering.isEmpty) None else checkpointPart(name, "ranges", rangeSchema(td))
+      .map(_.select(pk.map(col) ++ Seq(rangeStruct(td).as("_rt"), lit(true).as("_mark")): _*))
+
+    // each mutation is a one-row state: with the checkpoint's state rows it
+    // is shadowed once, then folded by one groupBy
     def reconcile(part: String, keyDefs: Seq[ColumnDef], cols: Seq[ColumnDef], ops: Seq[String],
-                  withLiveness: Boolean, rts: Option[DataFrame]): DataFrame = {
+                  withLiveness: Boolean, withRanges: Boolean): DataFrame = {
       val keys = keyDefs.map(_.name)
-      val muts = mutationState(log.filter(col("_op").isin(ops: _*)), keys, cols, withLiveness)
-      val all = ckpt(part, stateSchema(td, keyDefs, cols, withLiveness)).fold(muts)(muts.unionByName)
-      // partition deletions (max delete ts per pk), then range tombstones
-      // (the max ts of those matching the row's clustering;
-      // RangeTombstoneMarker semantics)
-      val live = shadowState(all.join(pdel, pk, "left"),
-        coalesce(col("_pdel"), lit(Long.MinValue)), keys, cols, withLiveness)
-      val shadowed = rts.fold(live)(r => shadowState(live.join(r, pk, "left"),
-        coalesce(array_max(transform(filter(col("_rts"), withinRange(td, _)), _("_ts"))),
-          lit(Long.MinValue)), keys, cols, withLiveness))
+      val markOps = "delpart" +: (if (withRanges) Seq("delrange") else Nil)
+      val muts = mutationState(log.filter(col("_op").isin(ops ++ markOps: _*)), keys, cols,
+        withLiveness, Option.when(withRanges)(rangeStruct(td)))
+      val stored = checkpointPart(name, part, stateSchema(td, keyDefs, cols, withLiveness)).toSeq ++
+        pdelMarks ++ rangeMarks.filter(_ => withRanges)
+      val all = stored.foldLeft(muts)(_.unionByName(_, allowMissingColumns = true))
+      // partition deletions (max delete ts per pk) and range tombstones (the
+      // max ts of those matching the row's clustering; RangeTombstoneMarker
+      // semantics) shadow through one watermark. The window sorts by the
+      // full key, the order the fold below needs.
+      val w = Window.partitionBy(pk.map(col): _*).orderBy(keys.drop(pk.length).map(col): _*)
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      val windowed = (if (pinned) all.coalesce(1) else all)
+        .select(col("*") +: (max(col("_pd")).over(w).as("_pdw") +:
+          (if (withRanges) Seq(collect_list(col("_rt")).over(w).as("_rts")) else Nil)): _*)
+        .filter(col("_mark").isNull)
+      val rangeTs =
+        if (withRanges) array_max(transform(filter(col("_rts"), withinRange(td, _)), _("_ts")))
+        else lit(null)
+      // a column, so the watermark is computed once per row, not per shadowed column
+      val shadowed = shadowState(
+        windowed.withColumn("_shadow", coalesce(greatest(col("_pdw"), rangeTs), lit(Long.MinValue))),
+        col("_shadow"), keys, cols, withLiveness)
       // a row deletion shadows each counter state of its row before the
       // sum, wherever the deletion and the deltas are stored: a counter
       // update reads the current value, and the row tombstone shadows it
@@ -2695,39 +2718,54 @@ class CqlEngine(val spark: SparkSession) {
       foldState(byRowDel, keys, cols, withLiveness)
     }
     val rowState = reconcile("rows", td.primaryKey, td.regulars,
-      Seq("insert", "update", "delrow"), withLiveness = true, rts)
+      Seq("insert", "update", "delrow"), withLiveness = true, withRanges = td.clustering.nonEmpty)
     val staticState = if (td.statics.isEmpty) None
       else Some(reconcile("statics", td.partitionKey, td.statics,
-        Seq("insert", "update"), withLiveness = false, None))
-    (rowState, staticState, pdel, ranges)
+        Seq("insert", "update"), withLiveness = false, withRanges = false))
+    (rowState, staticState)
   }
 
+  /** The range bounds of a range tombstone, the struct [[withinRange]] reads. */
+  private def rangeStruct(td: TableDef): Column =
+    struct(rangeSchema(td).fields.drop(td.partitionKey.length).map(f => col(f.name)).toSeq: _*)
+
   /** Reconciled live rows of a table with shadow columns `_wt_<c>` (cell
-    * writetime µs) and `_ttlr_<c>` (remaining ttl seconds). With a
-    * checkpoint present, only the post-checkpoint tail re-aggregates.
+    * writetime µs) and `_ttlr_<c>` (remaining ttl seconds), folded from the
+    * checkpoint's state rows and every logged mutation after it.
     */
   def read(name0: String): DataFrame = readCanonical(canon(name0))
 
   /** [[read]] on an already-canonical catalog key (internal call sites —
     * statement names canonicalize exactly once in [[run]]). A table's
     * reconciled plan is reused while its inputs stay the same ([[readPlans]]).
+    * `pinned` marks a read whose filter binds the full partition key; it
+    * gets the one-task shape where [[pinnable]].
     */
-  private[cql] def readCanonical(name: String): DataFrame = {
+  private[cql] def readCanonical(name: String, pinned: Boolean = false): DataFrame = {
     views.get(name).foreach(v => return readView(v))
     virtualDf(name).foreach(v => return v)
     val inputs = readInputs(name)
-    readPlans.get(name).collect { case (in, df) if in == inputs => df }.getOrElse {
-      val df = reconciled(name, inputs._1)
-      readPlans(name) = (inputs, df)
+    val key = (name, pinned && pinnable(name, inputs._1))
+    readPlans.get(key).collect { case (in, df) if in == inputs => df }.getOrElse {
+      val df = reconciled(name, inputs._1, key._2)
+      readPlans(key) = (inputs, df)
       df
     }
   }
 
+  /** A pinned read runs in one task only where that cannot become a serial
+    * full scan: the table has no statics (their join stops the key filter
+    * above the scans) and its listed stored inputs fit one file split.
+    */
+  private def pinnable(name: String, td: TableDef): Boolean = td.statics.isEmpty &&
+    storage.toSeq.flatMap(s => s.checkpoint(name).toSeq ++ s.segmentFiles(name)).map(dirBytes).sum <=
+      spark.sessionState.conf.filesMaxPartitionBytes
+
   /** The reconciled live rows of a table, built from its current inputs. */
-  private def reconciled(name: String, td: TableDef): DataFrame = {
+  private def reconciled(name: String, td: TableDef, pinned: Boolean): DataFrame = {
     val pk = td.partitionKey.map(_.name)
     val rowKeys = td.primaryKey.map(_.name)
-    val (rowState, staticState, _, _) = fullState(name)
+    val (rowState, staticState) = fullState(name, pinned)
     val rows = finalizeState(rowState, rowKeys, td.regulars, withLiveness = true)
       .withColumn("_any_cell",
         td.regulars.map(c => col(c.name).isNotNull).foldLeft(lit(false))(_ || _))
@@ -2765,7 +2803,8 @@ class CqlEngine(val spark: SparkSession) {
     val name = canon(name0)
     val store = attached
     val td = mutableTable(name)
-    val (rowState0, staticState, pdel, rangeTombs) = fullState(name)
+    val (rowState0, staticState) = fullState(name, pinned = false)
+    val (pdel, rangeTombs) = persistedTombstones(name, td)
     // prune collection op-lists: everything before the last set/clear is
     // overwritten by the fold anyway
     def pruneColls(df: DataFrame, cols: Seq[ColumnDef]): DataFrame =
@@ -2859,16 +2898,19 @@ class CqlEngine(val spark: SparkSession) {
     // with CDC on, the tail lands as a segment too, so consumers see every record
     val cdcTail =
       if (cdcEnabled && logs(name).rows.nonEmpty) store.writeSegments(name)(writeTail(name)) else Nil
-    val rowsOut = org.apache.spark.sql.Observation()
-    store.compact(td, commitTs(name), archive = cdcEnabled, cdcTail) { ck =>
-      rowState.observe(rowsOut, count(lit(1)).as("n"))
-        .write.parquet(new java.io.File(ck, "rows").getPath)
-      staticsPurged.foreach(_.write.parquet(new java.io.File(ck, "statics").getPath))
-      pdelPurged.write.parquet(new java.io.File(ck, "pdel").getPath)
-      // range tombstones persist like the pdel watermark: out-of-order
-      // writes below an absorbed range must stay dead after compaction
-      // (both purge past gc_grace like any other tombstone)
-      rangesPurged.foreach(_.write.parquet(new java.io.File(ck, "ranges").getPath))
+    // range tombstones persist like the pdel watermark: out-of-order
+    // writes below an absorbed range must stay dead after compaction
+    // (both purge past gc_grace like any other tombstone)
+    val parts = Seq("rows" -> rowState) ++ staticsPurged.map("statics" -> _) ++
+      Seq("pdel" -> pdelPurged) ++ rangesPurged.map("ranges" -> _)
+    // every part is written, empty or not; the manifest records its rows
+    // so that reads skip the empty ones
+    val partRows = store.compact(td, commitTs(name), archive = cdcEnabled, cdcTail) { ck =>
+      parts.map { case (part, df) =>
+        val n = org.apache.spark.sql.Observation()
+        df.observe(n, count(lit(1)).as("n")).write.parquet(new java.io.File(ck, part).getPath)
+        part -> n.get("n").asInstanceOf[Long]
+      }.toMap
     }
     logs(name).clear()
     val ck = store.checkpoint(name).get
@@ -2886,7 +2928,26 @@ class CqlEngine(val spark: SparkSession) {
       java.util.UUID.randomUUID().toString,
       histBytesIn, dirBytes(ck), tnH,
       new java.sql.Timestamp(System.currentTimeMillis()), ksH,
-      Map(histInputs -> rowsOut.get("n").asInstanceOf[Long]))
+      Map(histInputs -> partRows("rows")))
+  }
+
+  /** The tombstones a compaction persists: the partition-deletion
+    * watermark per pk, and the range tombstones above it (a range at or
+    * below pdel shadows nothing pdel does not).
+    */
+  private def persistedTombstones(name: String, td: TableDef): (DataFrame, Option[DataFrame]) = {
+    val pk = td.partitionKey.map(_.name)
+    val log = mutationLog(name)
+    val logPdel = log.filter(col("_op") === "delpart").select(pk.map(col) :+ col("_ts").as("_pdel"): _*)
+    val pdel = checkpointPart(name, "pdel", pdelSchema(td)).fold(logPdel)(logPdel.unionByName)
+      .groupBy(pk.map(col): _*).agg(max(col("_pdel")).as("_pdel"))
+    val ranges = if (td.clustering.isEmpty) None else {
+      val logRanges = log.filter(col("_op") === "delrange")
+        .select(rangeSchema(td).fields.map(f => col(f.name)).toSeq: _*)
+        .join(pdel, pk, "left").filter(col("_pdel").isNull || col("_ts") > col("_pdel")).drop("_pdel")
+      Some(checkpointPart(name, "ranges", rangeSchema(td)).fold(logRanges)(logRanges.unionByName))
+    }
+    (pdel, ranges)
   }
 
   /** Expire compaction-history records past the reference table's 7-day
@@ -3201,7 +3262,6 @@ class CqlEngine(val spark: SparkSession) {
 
   private def executeSelect(s: Select): DataFrame = {
     val td = table(s.table)
-    var df = readCanonical(s.table)
 
     // validate + apply WHERE (StatementRestrictions.java:195-271)
     val restricted = scala.collection.mutable.Map.empty[String, String] // col -> kind of restriction
@@ -3468,6 +3528,9 @@ class CqlEngine(val spark: SparkSession) {
       throw InvalidRequest(
         "Cannot execute this query as it might involve data filtering and thus may have unpredictable performance. " +
           "If you want to execute this query despite the performance unpredictability, use ALLOW FILTERING")
+    // a partition key bound by `=` or IN, not by an index, pins the read
+    var df = readCanonical(s.table,
+      pinned = pkNames.forall(c => restricted.get(c).contains("eq") && !indexServedCols(c)))
     if (filters.nonEmpty) df = df.filter(filters.reduce(_ && _))
 
     // ORDER BY validation (SelectStatement.java:1105-1109,1213-1251)

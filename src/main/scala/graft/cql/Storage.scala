@@ -60,6 +60,13 @@ final class Storage(root: String, step: String => Unit) {
   def checkpoint(name: String): Option[File] =
     manifests.get(name).flatMap(_.checkpoint).map(ckDir(name, _))
 
+  /** `part` of the live checkpoint, unless the manifest counts it empty or
+    * it was never written; a manifest without counts lists every part.
+    */
+  def checkpointPart(name: String, part: String): Option[File] =
+    manifests.get(name).filterNot(_.partRows.exists(_.get(part).contains(0L)))
+      .flatMap(_ => checkpoint(name)).map(new File(_, part)).filter(_.isDirectory)
+
   /** Run an appending parquet `write` into the segments directory; returns
     * the files it added, which are live only once a commit lists them.
     */
@@ -81,16 +88,19 @@ final class Storage(root: String, step: String => Unit) {
   /** Commit a checkpoint generation written by `write` in place of the old
     * one, the live segments and the uncommitted segments `extra`; with
     * `archive` the consumed segments move into `cdc/` instead of going.
+    * `write` returns the row count of each part it wrote, which the
+    * manifest keeps and this returns.
     */
   def compact(td: TableDef, maxTs: Long, archive: Boolean, extra: Seq[String])(
-      write: File => Unit): Unit = {
+      write: File => Map[String, Long]): Map[String, Long] = {
     val m = current(td)
     val gen = m.version + 1
     deleteRec(ckDir(td.name, gen)) // left by a failed attempt in this process
-    write(ckDir(td.name, gen))
+    val partRows = write(ckDir(td.name, gen))
     step("checkpoint")
     commit(Manifest(gen, td, Some(gen), Nil, m.checkpoint.map(g => s"$CheckpointDir/$g").toSeq ++
-      (m.segments ++ extra).map(s => s"$SegmentsDir/$s"), archive, m.maxTs max maxTs))
+      (m.segments ++ extra).map(s => s"$SegmentsDir/$s"), archive, m.maxTs max maxTs, Some(partRows)))
+    partRows
   }
 
   /** TRUNCATE: the schema survives; checkpoint, segments and CDC archive go. */
@@ -150,11 +160,12 @@ object Storage {
 
   /** One table's durable state. `version` rises with every compaction and
     * TRUNCATE and names the checkpoint generation; `removals` are paths owed
-    * a delete, or with `archive` segments owed a move into `cdc/`.
+    * a delete, or with `archive` segments owed a move into `cdc/`;
+    * `partRows` counts the rows of each checkpoint part.
     */
   final case class Manifest(version: Long, schema: TableDef, checkpoint: Option[Long],
                             segments: Seq[String], removals: Seq[String], archive: Boolean,
-                            maxTs: Long)
+                            maxTs: Long, partRows: Option[Map[String, Long]] = None)
 
   /** The CDC bootstrap's tail source: a table's segment directory. */
   def segmentsPath(root: String, table: String): String = s"$root/$table/$SegmentsDir"

@@ -14,6 +14,7 @@ import java.nio.file.Files
   * reach the stored files below the fold.
   */
 class CqlReconcileSpec extends SparkSpec {
+  import CqlReconcileSpec._
 
   private val ddl = Seq(
     "CREATE TABLE pl (k int, c int, s int static, v int, l list<int>, st set<int>, " +
@@ -22,55 +23,6 @@ class CqlReconcileSpec extends SparkSpec {
 
   // every column of `pl` (its `SELECT *`) and the write time of v
   private val reads = Seq("SELECT k, c, s, v, l, st, m, WRITETIME(v) FROM pl", "SELECT k, c, n FROM pc")
-
-  /** One statement; `i` is its place in the history. Scalar writes and
-    * deletes draw timestamps that often collide; collection writes get
-    * distinct ones that never equal a scalar one. TTLs outlive the run
-    * (the engine clock stays at 0).
-    */
-  private def statement(i: Int): Gen[String] = {
-    val x = Gen.chooseNum(0, 9)
-    for {
-      k <- Gen.chooseNum(1, 2); c <- Gen.chooseNum(1, 3); a <- x; b <- x
-      slot <- Gen.chooseNum(1, 20)
-      ttl <- Gen.oneOf("", " AND TTL 100000")
-      scalarTs = s"USING TIMESTAMP ${slot * 100}"
-      collTs = s"USING TIMESTAMP ${slot * 100 + 1 + i}"
-      scalar = scalarTs + ttl
-      coll = collTs + ttl
-      row = s"WHERE k = $k AND c = $c"
-      st <- Gen.frequency(
-        3 -> s"INSERT INTO pl (k, c, v) VALUES ($k, $c, $a) $scalar",
-        3 -> s"UPDATE pl $scalar SET v = $a $row",
-        2 -> s"UPDATE pl $scalar SET s = $a WHERE k = $k",
-        1 -> s"INSERT INTO pl (k, s) VALUES ($k, $a) $scalar",
-        1 -> s"DELETE v FROM pl $scalarTs $row",
-        1 -> s"DELETE FROM pl $scalarTs $row",
-        1 -> s"DELETE FROM pl $scalarTs WHERE k = $k AND c >= $c",
-        1 -> s"DELETE FROM pl $scalarTs WHERE k = $k",
-        2 -> s"INSERT INTO pl (k, c, v, l, st, m) VALUES ($k, $c, $a, [$a], {$a}, {$a: $b}) $coll",
-        2 -> s"UPDATE pl $coll SET l = l + [$a] $row",
-        1 -> s"UPDATE pl $coll SET l = [$a, $b] $row",
-        2 -> s"UPDATE pl $coll SET st = st + {$a} $row",
-        1 -> s"UPDATE pl $coll SET st = st - {$a} $row",
-        2 -> s"UPDATE pl $coll SET m[$a] = $b $row",
-        1 -> s"DELETE m[$a] FROM pl $collTs $row",
-        1 -> s"DELETE l FROM pl $collTs $row",
-        // counters take the session clock, which only rises
-        4 -> s"UPDATE pc SET n = n + ${a - 4} $row",
-        1 -> s"DELETE FROM pc $row",
-        1 -> s"DELETE FROM pc WHERE k = $k AND c >= $c",
-        1 -> s"DELETE FROM pc WHERE k = $k")
-    } yield st
-  }
-
-  /** A history and where it is cut: after statement `i`, flush or compact. */
-  private val historyGen: Gen[(Seq[String], Map[Int, String])] = for {
-    n <- Gen.chooseNum(20, 32)
-    stmts <- Gen.sequence[List[String], String]((0 until n).map(statement))
-    cutAt <- Gen.listOfN(3, Gen.chooseNum(0, n - 2))
-    kinds <- Gen.listOfN(3, Gen.frequency(3 -> "flush", 2 -> "compact"))
-  } yield (stmts, cutAt.zip(kinds).toMap)
 
   private def results(e: CqlEngine): Seq[Set[Seq[Any]]] =
     reads.map(q => e.execute(q).collect().map(_.toSeq).toSet)
@@ -131,4 +83,56 @@ class CqlReconcileSpec extends SparkSpec {
     assert(filteredAfter.length === 6)
     assert(df.collect().map(_.toSeq).toSet === filteredAfter.map(_.toSeq).toSet)
   }
+}
+
+/** The history generator, shared with [[CqlPinnedReadSpec]]. */
+object CqlReconcileSpec {
+  /** One statement; `i` is its place in the history. Scalar writes and
+    * deletes draw timestamps that often collide; collection writes get
+    * distinct ones that never equal a scalar one. TTLs outlive the run
+    * (the engine clock stays at 0).
+    */
+  def statement(i: Int): Gen[String] = {
+    val x = Gen.chooseNum(0, 9)
+    for {
+      k <- Gen.chooseNum(1, 2); c <- Gen.chooseNum(1, 3); a <- x; b <- x
+      slot <- Gen.chooseNum(1, 20)
+      ttl <- Gen.oneOf("", " AND TTL 100000")
+      scalarTs = s"USING TIMESTAMP ${slot * 100}"
+      collTs = s"USING TIMESTAMP ${slot * 100 + 1 + i}"
+      scalar = scalarTs + ttl
+      coll = collTs + ttl
+      row = s"WHERE k = $k AND c = $c"
+      st <- Gen.frequency(
+        3 -> s"INSERT INTO pl (k, c, v) VALUES ($k, $c, $a) $scalar",
+        3 -> s"UPDATE pl $scalar SET v = $a $row",
+        2 -> s"UPDATE pl $scalar SET s = $a WHERE k = $k",
+        1 -> s"INSERT INTO pl (k, s) VALUES ($k, $a) $scalar",
+        1 -> s"DELETE v FROM pl $scalarTs $row",
+        1 -> s"DELETE FROM pl $scalarTs $row",
+        1 -> s"DELETE FROM pl $scalarTs WHERE k = $k AND c >= $c",
+        1 -> s"DELETE FROM pl $scalarTs WHERE k = $k",
+        2 -> s"INSERT INTO pl (k, c, v, l, st, m) VALUES ($k, $c, $a, [$a], {$a}, {$a: $b}) $coll",
+        2 -> s"UPDATE pl $coll SET l = l + [$a] $row",
+        1 -> s"UPDATE pl $coll SET l = [$a, $b] $row",
+        2 -> s"UPDATE pl $coll SET st = st + {$a} $row",
+        1 -> s"UPDATE pl $coll SET st = st - {$a} $row",
+        2 -> s"UPDATE pl $coll SET m[$a] = $b $row",
+        1 -> s"DELETE m[$a] FROM pl $collTs $row",
+        1 -> s"DELETE l FROM pl $collTs $row",
+        // counters take the session clock, which only rises
+        4 -> s"UPDATE pc SET n = n + ${a - 4} $row",
+        1 -> s"DELETE FROM pc $row",
+        1 -> s"DELETE FROM pc WHERE k = $k AND c >= $c",
+        1 -> s"DELETE FROM pc WHERE k = $k")
+    } yield st
+  }
+
+  /** A history and where it is cut: after statement `i`, flush or compact. */
+  val historyGen: Gen[(Seq[String], Map[Int, String])] = for {
+    n <- Gen.chooseNum(20, 32)
+    stmts <- Gen.sequence[List[String], String]((0 until n).map(statement))
+    cutAt <- Gen.listOfN(3, Gen.chooseNum(0, n - 2))
+    kinds <- Gen.listOfN(3, Gen.frequency(3 -> "flush", 2 -> "compact"))
+  } yield (stmts, cutAt.zip(kinds).toMap)
 }
