@@ -72,14 +72,15 @@ class CqlEngine(val spark: SparkSession) {
   private def nextTailGen(): Long = { tailGens += 1; tailGens }
   private val logs = scala.collection.mutable.LinkedHashMap.empty[String, Tail]
   /** What a table's reconciled read is built from: schema, the manifest's
-    * checkpoint and segments, the tail's generation and the clock. What is
-    * derived from a read is kept with these and reused while they match.
+    * checkpoint and segments, the tail's generation, the clock and the
+    * session's smallest file split ([[pinBytes]]). What is derived from a
+    * read is kept with these and reused while they match.
     */
-  private type ReadInputs = (TableDef, Option[java.io.File], Seq[java.io.File], Long, Long)
+  private type ReadInputs = (TableDef, Option[java.io.File], Seq[java.io.File], Long, Long, Long)
   private def readInputs(name: String): ReadInputs = (table(name), storage.flatMap(_.checkpoint(name)),
-    storage.toSeq.flatMap(_.segmentFiles(name)), logs(name).gen, nowMicros)
-  /** Reconciled, analysed base plans, keyed by table and whether the plan
-    * has the pinned one-task shape: a read adds only its filter, sort and limit.
+    storage.toSeq.flatMap(_.segmentFiles(name)), logs(name).gen, nowMicros, pinBytes)
+  /** Reconciled, analysed base plans, keyed by table and whether the read
+    * asked for the pinned shape: a read adds only its filter, sort and limit.
     */
   private val readPlans = scala.collection.mutable.HashMap.empty[(String, Boolean), (ReadInputs, DataFrame)]
   /** system.size_estimates rows. The Spark/Cassandra connector reads
@@ -2745,21 +2746,32 @@ class CqlEngine(val spark: SparkSession) {
     views.get(name).foreach(v => return readView(v))
     virtualDf(name).foreach(v => return v)
     val inputs = readInputs(name)
-    val key = (name, pinned && pinnable(name, inputs._1))
-    readPlans.get(key).collect { case (in, df) if in == inputs => df }.getOrElse {
-      val df = reconciled(name, inputs._1, key._2)
-      readPlans(key) = (inputs, df)
+    readPlans.get((name, pinned)).collect { case (in, df) if in == inputs => df }.getOrElse {
+      val df = reconciled(name, inputs._1, pinned && pinnable(inputs))
+      readPlans((name, pinned)) = (inputs, df)
       df
     }
   }
 
   /** A pinned read runs in one task only where that cannot become a serial
     * full scan: the table has no statics (their join stops the key filter
-    * above the scans) and its listed stored inputs fit one file split.
+    * above the scans), and its listed stored inputs total at most
+    * [[pinBytes]], so the one task reads no more than Spark's split rule
+    * hands any task of a parallel scan.
     */
-  private def pinnable(name: String, td: TableDef): Boolean = td.statics.isEmpty &&
-    storage.toSeq.flatMap(s => s.checkpoint(name).toSeq ++ s.segmentFiles(name)).map(dirBytes).sum <=
-      spark.sessionState.conf.filesMaxPartitionBytes
+  private def pinnable(inputs: ReadInputs): Boolean = inputs._1.statics.isEmpty &&
+    (inputs._2.toSeq ++ inputs._3).map(dirBytes).sum <= inputs._6
+
+  /** The smallest split Spark's file-scan rule makes,
+    * min(maxPartitionBytes, max(openCostInBytes, bytes / cores)), at any
+    * input size and core count: min(maxPartitionBytes, openCostInBytes),
+    * 4 MB by default. On 4 cores one task measured faster than the exchange
+    * shape up to 16 MB of inputs and slower from 64 MB.
+    */
+  private def pinBytes: Long = {
+    val conf = spark.sessionState.conf
+    math.min(conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes)
+  }
 
   /** The reconciled live rows of a table, built from its current inputs. */
   private def reconciled(name: String, td: TableDef, pinned: Boolean): DataFrame = {

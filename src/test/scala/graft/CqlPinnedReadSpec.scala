@@ -16,8 +16,8 @@ import java.nio.file.Files
 /** A read whose WHERE binds the full partition key runs its reconcile in one
   * task: one Spark job, no exchange. It must return exactly the rows of the
   * general read, keep the partition key in every stored scan, and fall back
-  * to the exchange shape for tables with statics or inputs larger than one
-  * file split.
+  * to the exchange shape for tables with statics or inputs larger than
+  * Spark's smallest file split.
   */
 class CqlPinnedReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -171,7 +171,7 @@ class CqlPinnedReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("a table with a static column, or with inputs over one file split, keeps the exchange") {
+  test("a table with a static column, or with inputs over the smallest file split, keeps the exchange") {
     def sameRows(e: CqlEngine, t: String): Seq[Exchange] = {
       val df = e.execute(s"SELECT k, c, v FROM $t WHERE k = 40")
       val want = e.read(t).collect().toSeq.filter(_.getAs[Long]("k") == 40L)
@@ -182,11 +182,14 @@ class CqlPinnedReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(sameRows(layered(tmpRoot(), "ps", statics = true), "ps").nonEmpty)
     val e = layered(tmpRoot(), "pw")
     assert(sameRows(e, "pw").isEmpty)
-    val saved = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
-    try assert(sameRows(e, "pw").nonEmpty)
-    finally spark.conf.set("spark.sql.files.maxPartitionBytes", saved)
-    assert(sameRows(e, "pw").isEmpty)
+    // either bound of the smallest split Spark's file-scan rule makes
+    Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes").foreach { key =>
+      val saved = spark.conf.get(key)
+      spark.conf.set(key, "4096")
+      try assert(sameRows(e, "pw").nonEmpty, key)
+      finally spark.conf.set(key, saved)
+      assert(sameRows(e, "pw").isEmpty, key)
+    }
   }
 
   test("empty checkpoint tombstone parts are not scanned") {
