@@ -422,9 +422,23 @@ class CqlEngine(val spark: SparkSession) {
     val store = attached
     val td = mutableTable(name)
     val added = if (logs(name).rows.isEmpty) Nil else store.writeSegments(name)(writeTail(name))
-    store.append(td, added, commitTs(name))
+    store.append(td, added, commitTs(name), tailTombstones(name))
     logs(name).clear()
   }
+
+  /** Does the in-memory tail hold a partition or range tombstone? */
+  private def tailTombstones(name: String): Boolean = {
+    val op = logSchema(table(name)).fieldIndex("_op")
+    logs(name).rows.exists(r => TombstoneOps(r.getString(op)))
+  }
+  private val TombstoneOps = Set("delpart", "delrange")
+
+  /** No partition or range tombstone in the checkpoint, the segments or the
+    * tail: the reconcile needs no shadow step. Decided from the manifest and
+    * the tail, which [[ReadInputs]] key, so it runs no Spark job.
+    */
+  private def tombstoneFree(name: String): Boolean =
+    storage.forall(_.tombstoneFree(name)) && !tailTombstones(name)
 
   /** Bulk-load a DataFrame as INSERT mutations — the scale-path mutation
     * sink (the reference's sstable bulk loader shape, vs. per-row INSERT
@@ -498,7 +512,7 @@ class CqlEngine(val spark: SparkSession) {
       case None => Some(ts)
     }
     maxWritten.foreach(m => tsCounter = math.max(tsCounter, m))
-    storage.foreach(_.append(td, added, tsCounter))
+    storage.foreach(_.append(td, added, tsCounter, tombstones = false))
   }
 
   def sparkType(t: CqlType): DataType = t match {
@@ -2296,13 +2310,11 @@ class CqlEngine(val spark: SparkSession) {
     StructType(keyFields ++ stateFields ++ tailFields)
   }
 
-  /** One state row per mutation record: the projections [[foldState]] folds.
-    * A partition deletion is a marker row with its `_pd` watermark and a
-    * range deletion one with its `rangeBounds` as `_rt`; `_mark` is set on
-    * markers only.
+  /** One state row per mutation record: the projections [[foldState]] folds,
+    * then the record's `marks` ([[tombstoneMarks]]).
     */
   private def mutationState(df: DataFrame, keys: Seq[String], cols: Seq[ColumnDef],
-                            withLiveness: Boolean, rangeBounds: Option[Column]): DataFrame = {
+                            withLiveness: Boolean, marks: Seq[Column]): DataFrame = {
     val cells = cols.flatMap { c =>
       val isSet = col(c.name + "__set")
       if (isCollection(c.tpe)) {
@@ -2329,12 +2341,18 @@ class CqlEngine(val spark: SparkSession) {
     val del = when(col("_op") === "delrow", col("_ts")).as("_del_ts")
     val live = when(col("_op") === "insert",
       struct(col("_ts").as("ts"), col("_ttl").as("ttl"))).as("_live")
-    val marks = Seq(when(col("_op") === "delpart", col("_ts")).as("_pd")) ++
-      rangeBounds.map(r => when(col("_op") === "delrange", r).as("_rt")) :+
-      when(col("_op").isin("delpart", "delrange"), true).as("_mark")
     df.select((keys.map(col) ++ cells ++ Seq(del) ++ (if (withLiveness) Seq(live) else Nil) ++
       marks): _*)
   }
+
+  /** A partition deletion is a marker row with its `_pd` watermark and a
+    * range deletion one with its `rangeBounds` as `_rt`; `_mark` is set on
+    * markers only.
+    */
+  private def tombstoneMarks(rangeBounds: Option[Column]): Seq[Column] =
+    Seq(when(col("_op") === "delpart", col("_ts")).as("_pd")) ++
+      rangeBounds.map(r => when(col("_op") === "delrange", r).as("_rt")) :+
+      when(col("_op").isin(TombstoneOps.toSeq: _*), true).as("_mark")
 
   /** groupBy(keys) → one state row per key: `Cells.reconcile` over state rows. */
   private def foldState(state: DataFrame, keys: Seq[String], cols: Seq[ColumnDef],
@@ -2371,26 +2389,28 @@ class CqlEngine(val spark: SparkSession) {
   }
 
   /** Shadow a state relation by a per-row deletion watermark: everything
-    * with ts <= the watermark is dead (DeletionTime).
+    * with ts <= the watermark is dead (DeletionTime). A null watermark
+    * shadows nothing, so a row without tombstones passes unchanged.
     */
   private def shadowState(states: DataFrame, p: Column, keys: Seq[String],
                           cols: Seq[ColumnDef], withLiveness: Boolean): DataFrame = {
+    def after(ts: Column): Column = p.isNull || ts > p
     val shadowed = cols.flatMap { c =>
       if (isCollection(c.tpe)) {
         val m = col("_muts_" + c.name)
-        Seq(when(m.isNull, m).otherwise(filter(m, e => e("ts") > p)).as("_muts_" + c.name))
+        Seq(when(m.isNull || p.isNull, m).otherwise(filter(m, e => e("ts") > p)).as("_muts_" + c.name))
       } else if (c.tpe == CqlCounter) {
         val ct = col("_cts_" + c.name)
-        Seq(when(ct > p, col("_csum_" + c.name)).as("_csum_" + c.name),
-          when(ct > p, ct).as("_cts_" + c.name))
+        Seq(when(after(ct), col("_csum_" + c.name)).as("_csum_" + c.name),
+          when(after(ct), ct).as("_cts_" + c.name))
       } else {
         val cell = col("_cell_" + c.name)
-        Seq(when(cell.isNotNull && cell("ts") > p, cell).as("_cell_" + c.name))
+        Seq(when(cell.isNotNull && after(cell("ts")), cell).as("_cell_" + c.name))
       }
     }
-    val delC = Seq(when(col("_del_ts") > p, col("_del_ts")).as("_del_ts"))
+    val delC = Seq(when(after(col("_del_ts")), col("_del_ts")).as("_del_ts"))
     val liveC = if (withLiveness)
-      Seq(when(col("_live").isNotNull && col("_live")("ts") > p, col("_live")).as("_live"))
+      Seq(when(col("_live").isNotNull && after(col("_live")("ts")), col("_live")).as("_live"))
     else Nil
     states.select((keys.map(col) ++ shadowed ++ delC ++ liveC): _*)
   }
@@ -2659,48 +2679,59 @@ class CqlEngine(val spark: SparkSession) {
     * the single source for both read() and compact(). Partition deletions
     * and range tombstones, stored or logged, join the state rows as marker
     * rows (`_mark`); one window on the partition key gives each state row
-    * its partition's deletion watermark and range list. A partition-key
-    * filter passes that window into every scan, and the fold reuses its
-    * distribution. `pinned` coalesces the union to one partition first, so
-    * the reconcile of a pinned read runs in one task.
+    * its partition's deletion watermark and range list. A state with no
+    * such tombstone ([[tombstoneFree]]) has no markers and nothing to
+    * shadow: its union is only repartitioned on the partition key. A
+    * partition-key filter passes the window or repartition into every scan,
+    * and the fold reuses its distribution. `pinned` coalesces the union to
+    * one partition instead, so the reconcile of a pinned read runs in one
+    * task.
     */
   private def fullState(name: String, pinned: Boolean): (DataFrame, Option[DataFrame]) = {
     val td = table(name)
     val pk = td.partitionKey.map(_.name)
     val log = mutationLog(name)
+    val free = tombstoneFree(name)
     val pdelMarks = checkpointPart(name, "pdel", pdelSchema(td)).map(
       _.select(pk.map(col) ++ Seq(col("_pdel").as("_pd"), lit(true).as("_mark")): _*))
     val rangeMarks = if (td.clustering.isEmpty) None else checkpointPart(name, "ranges", rangeSchema(td))
       .map(_.select(pk.map(col) ++ Seq(rangeStruct(td).as("_rt"), lit(true).as("_mark")): _*))
 
     // each mutation is a one-row state: with the checkpoint's state rows it
-    // is shadowed once, then folded by one groupBy
+    // is shadowed once, if the state holds tombstones, then folded by one
+    // groupBy
     def reconcile(part: String, keyDefs: Seq[ColumnDef], cols: Seq[ColumnDef], ops: Seq[String],
                   withLiveness: Boolean, withRanges: Boolean): DataFrame = {
       val keys = keyDefs.map(_.name)
-      val markOps = "delpart" +: (if (withRanges) Seq("delrange") else Nil)
-      val muts = mutationState(log.filter(col("_op").isin(ops ++ markOps: _*)), keys, cols,
-        withLiveness, Option.when(withRanges)(rangeStruct(td)))
-      val stored = checkpointPart(name, part, stateSchema(td, keyDefs, cols, withLiveness)).toSeq ++
-        pdelMarks ++ rangeMarks.filter(_ => withRanges)
-      val all = stored.foldLeft(muts)(_.unionByName(_, allowMissingColumns = true))
-      // partition deletions (max delete ts per pk) and range tombstones (the
-      // max ts of those matching the row's clustering; RangeTombstoneMarker
-      // semantics) shadow through one watermark. The window sorts by the
-      // full key, the order the fold below needs.
-      val w = Window.partitionBy(pk.map(col): _*).orderBy(keys.drop(pk.length).map(col): _*)
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      val windowed = (if (pinned) all.coalesce(1) else all)
-        .select(col("*") +: (max(col("_pd")).over(w).as("_pdw") +:
-          (if (withRanges) Seq(collect_list(col("_rt")).over(w).as("_rts")) else Nil)): _*)
-        .filter(col("_mark").isNull)
-      val rangeTs =
-        if (withRanges) array_max(transform(filter(col("_rts"), withinRange(td, _)), _("_ts")))
-        else lit(null)
-      // a column, so the watermark is computed once per row, not per shadowed column
-      val shadowed = shadowState(
-        windowed.withColumn("_shadow", coalesce(greatest(col("_pdw"), rangeTs), lit(Long.MinValue))),
-        col("_shadow"), keys, cols, withLiveness)
+      val stored = checkpointPart(name, part, stateSchema(td, keyDefs, cols, withLiveness)).toSeq
+      def union(muts: DataFrame, marks: Seq[DataFrame]): DataFrame =
+        (stored ++ marks).foldLeft(muts)(_.unionByName(_, allowMissingColumns = true))
+      val shadowed = if (free) {
+        val all = union(mutationState(log.filter(col("_op").isin(ops: _*)), keys, cols, withLiveness,
+          marks = Nil), Nil)
+        if (pinned) all.coalesce(1) else all.repartition(pk.map(col): _*)
+      } else {
+        val markOps = "delpart" +: (if (withRanges) Seq("delrange") else Nil)
+        val all = union(mutationState(log.filter(col("_op").isin(ops ++ markOps: _*)), keys, cols,
+          withLiveness, tombstoneMarks(Option.when(withRanges)(rangeStruct(td)))),
+          pdelMarks.toSeq ++ rangeMarks.filter(_ => withRanges))
+        // partition deletions (max delete ts per pk) and range tombstones
+        // (the max ts of those matching the row's clustering;
+        // RangeTombstoneMarker semantics) shadow through one watermark. The
+        // window sorts by the full key, the order the fold below needs.
+        val w = Window.partitionBy(pk.map(col): _*).orderBy(keys.drop(pk.length).map(col): _*)
+          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        val windowed = (if (pinned) all.coalesce(1) else all)
+          .select(col("*") +: (max(col("_pd")).over(w).as("_pdw") +:
+            (if (withRanges) Seq(collect_list(col("_rt")).over(w).as("_rts")) else Nil)): _*)
+          .filter(col("_mark").isNull)
+        val rangeTs =
+          if (withRanges) array_max(transform(filter(col("_rts"), withinRange(td, _)), _("_ts")))
+          else lit(null)
+        // a column, so the watermark is computed once per row, not per shadowed column
+        shadowState(windowed.withColumn("_shadow", greatest(col("_pdw"), rangeTs)),
+          col("_shadow"), keys, cols, withLiveness)
+      }
       // a row deletion shadows each counter state of its row before the
       // sum, wherever the deletion and the deltas are stored: a counter
       // update reads the current value, and the row tombstone shadows it
@@ -2945,22 +2976,27 @@ class CqlEngine(val spark: SparkSession) {
 
   /** The tombstones a compaction persists: the partition-deletion
     * watermark per pk, and the range tombstones above it (a range at or
-    * below pdel shadows nothing pdel does not).
+    * below pdel shadows nothing pdel does not). A [[tombstoneFree]] state
+    * persists none, and reads nothing to learn that.
     */
-  private def persistedTombstones(name: String, td: TableDef): (DataFrame, Option[DataFrame]) = {
-    val pk = td.partitionKey.map(_.name)
-    val log = mutationLog(name)
-    val logPdel = log.filter(col("_op") === "delpart").select(pk.map(col) :+ col("_ts").as("_pdel"): _*)
-    val pdel = checkpointPart(name, "pdel", pdelSchema(td)).fold(logPdel)(logPdel.unionByName)
-      .groupBy(pk.map(col): _*).agg(max(col("_pdel")).as("_pdel"))
-    val ranges = if (td.clustering.isEmpty) None else {
-      val logRanges = log.filter(col("_op") === "delrange")
-        .select(rangeSchema(td).fields.map(f => col(f.name)).toSeq: _*)
-        .join(pdel, pk, "left").filter(col("_pdel").isNull || col("_ts") > col("_pdel")).drop("_pdel")
-      Some(checkpointPart(name, "ranges", rangeSchema(td)).fold(logRanges)(logRanges.unionByName))
+  private def persistedTombstones(name: String, td: TableDef): (DataFrame, Option[DataFrame]) =
+    if (tombstoneFree(name)) {
+      def none(schema: StructType) = spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      (none(pdelSchema(td)), Option.when(td.clustering.nonEmpty)(none(rangeSchema(td))))
+    } else {
+      val pk = td.partitionKey.map(_.name)
+      val log = mutationLog(name)
+      val logPdel = log.filter(col("_op") === "delpart").select(pk.map(col) :+ col("_ts").as("_pdel"): _*)
+      val pdel = checkpointPart(name, "pdel", pdelSchema(td)).fold(logPdel)(logPdel.unionByName)
+        .groupBy(pk.map(col): _*).agg(max(col("_pdel")).as("_pdel"))
+      val ranges = if (td.clustering.isEmpty) None else {
+        val logRanges = log.filter(col("_op") === "delrange")
+          .select(rangeSchema(td).fields.map(f => col(f.name)).toSeq: _*)
+          .join(pdel, pk, "left").filter(col("_pdel").isNull || col("_ts") > col("_pdel")).drop("_pdel")
+        Some(checkpointPart(name, "ranges", rangeSchema(td)).fold(logRanges)(logRanges.unionByName))
+      }
+      (pdel, ranges)
     }
-    (pdel, ranges)
-  }
 
   /** Expire compaction-history records past the reference table's 7-day
     * default TTL ("week-long compaction history").

@@ -188,6 +188,10 @@ object CqlParser {
           bindNames :+= Some(n.toLowerCase)
           m
         }
+      // the reference lexes "-<digits>" as one integer, so its smallest
+      // bigint is writable although its magnitude overflows a Long
+      case Sym("-") if peek.contains(Num((BigInt(Long.MaxValue) + 1).toString)) =>
+        next(); IntLit(Long.MinValue)
       case Sym("-") => literal() match {
         case IntLit(v) => IntLit(-v)
         case DoubleLit(v) => DoubleLit(-v)

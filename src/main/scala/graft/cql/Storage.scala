@@ -60,6 +60,16 @@ final class Storage(root: String, step: String => Unit) {
   def checkpoint(name: String): Option[File] =
     manifests.get(name).flatMap(_.checkpoint).map(ckDir(name, _))
 
+  /** Can the live state hold no partition or range tombstone? The
+    * checkpoint's `pdel` and `ranges` parts count no rows and every live
+    * segment is recorded as holding neither; a count or record the manifest
+    * lacks means it may hold some. True for a table without durable data.
+    */
+  def tombstoneFree(name: String): Boolean = manifests.get(name).forall { m =>
+    val emptyParts = m.partRows.exists(rows => TombstoneParts.forall(p => rows.get(p).forall(_ == 0L)))
+    (m.checkpoint.isEmpty || emptyParts) && m.segments.forall(s => m.segmentTombstones.get(s).contains(false))
+  }
+
   /** `part` of the live checkpoint, unless the manifest counts it empty or
     * it was never written; a manifest without counts lists every part.
     */
@@ -79,10 +89,14 @@ final class Storage(root: String, step: String => Unit) {
     parquetNames(dir).filterNot(before).sorted
   }
 
-  /** Commit the schema and `maxTs` with `added` appended to the live segments. */
-  def append(td: TableDef, added: Seq[String], maxTs: Long): Unit = {
+  /** Commit the schema and `maxTs` with `added` appended to the live
+    * segments; `tombstones` records whether they hold partition or range
+    * tombstones.
+    */
+  def append(td: TableDef, added: Seq[String], maxTs: Long, tombstones: Boolean): Unit = {
     val m = current(td)
-    commit(m.copy(schema = td, segments = m.segments ++ added, maxTs = m.maxTs max maxTs))
+    commit(m.copy(schema = td, segments = m.segments ++ added, maxTs = m.maxTs max maxTs,
+      segmentTombstones = m.segmentTombstones ++ added.map(_ -> tombstones)))
   }
 
   /** Commit a checkpoint generation written by `write` in place of the old
@@ -157,15 +171,19 @@ object Storage {
   private val SegmentsDir = "segments"
   private val CdcDir = "cdc"
   private val Dropped = ".dropped-"
+  private val TombstoneParts = Seq("pdel", "ranges")
 
   /** One table's durable state. `version` rises with every compaction and
     * TRUNCATE and names the checkpoint generation; `removals` are paths owed
     * a delete, or with `archive` segments owed a move into `cdc/`;
-    * `partRows` counts the rows of each checkpoint part.
+    * `partRows` counts the rows of each checkpoint part, and
+    * `segmentTombstones` records per live segment whether it holds
+    * partition or range tombstones.
     */
   final case class Manifest(version: Long, schema: TableDef, checkpoint: Option[Long],
                             segments: Seq[String], removals: Seq[String], archive: Boolean,
-                            maxTs: Long, partRows: Option[Map[String, Long]] = None)
+                            maxTs: Long, partRows: Option[Map[String, Long]] = None,
+                            segmentTombstones: Map[String, Boolean] = Map.empty)
 
   /** The CDC bootstrap's tail source: a table's segment directory. */
   def segmentsPath(root: String, table: String): String = s"$root/$table/$SegmentsDir"

@@ -1,10 +1,5 @@
 package graft.cql
 
-import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -19,35 +14,14 @@ import java.nio.file.Files
   * to the exchange shape for tables with statics or inputs larger than
   * Spark's smallest file split.
   */
-class CqlPinnedReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+class CqlPinnedReadSpec extends CqlReadProbes {
 
   private def tmpRoot(): String = Files.createTempDirectory("graft-pinned").toFile.getPath
-
-  /** Rows as comparable values; collections as Scala collections. */
-  private def values(r: Row, names: Seq[String]): Seq[Any] = names.map(n => r.getAs[Any](n) match {
-    case s: scala.collection.Seq[_] => s.toList
-    case m: scala.collection.Map[_, _] => m.toMap
-    case v => v
-  })
-
-  private def rowsOf(df: DataFrame): Seq[Seq[Any]] =
-    df.collect().toSeq.map(r => values(r, df.columns.toSeq))
 
   /** The unpinned `read(t)` rows with key `k` in `ks`, in clustering order. */
   private def expected(e: CqlEngine, t: String, ks: Set[Int], names: Seq[String]): Seq[Seq[Any]] =
     e.read(t).collect().toSeq.filter(r => ks(r.getAs[Int]("k")))
       .sortBy(r => (r.getAs[Int]("k"), r.getAs[Int]("c"))).map(values(_, names))
-
-  private def exchanges(df: DataFrame): Seq[Exchange] = {
-    df.collect()
-    collect(df.queryExecution.executedPlan) { case x: Exchange => x }
-  }
-
-  /** (root path, PushedFilters) of every parquet scan in the plan. */
-  private def scans(df: DataFrame): Seq[(String, String)] =
-    df.queryExecution.sparkPlan.collect { case s: FileSourceScanExec =>
-      (s.relation.location.rootPaths.map(_.toUri.getPath).mkString(","), s.metadata("PushedFilters"))
-    }
 
   test("pinned reads return the rows of the unpinned read over random histories") {
     val rowCols = Seq("k", "c", "v", "l", "st", "m")
@@ -95,51 +69,6 @@ class CqlPinnedReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
           val vs = rs.flatMap(r => Option(r(2)).map(_.asInstanceOf[Int]))
           Seq(k, rs.length.toLong, vs.maxOption.map(Int.box).orNull)
         }, ordered = true)
-    }
-  }
-
-  /** A bench-shaped table: checkpoint, segment and tail, no statics. */
-  private def layered(root: String, t: String, statics: Boolean = false): CqlEngine = {
-    import spark.implicits._
-    val e = new CqlEngine(spark)
-    e.attachStorage(root)
-    e.execute(s"CREATE TABLE $t (k bigint, c int, v text${if (statics) ", s text static" else ""}, " +
-      "PRIMARY KEY (k, c))")
-    e.bulkInsert(t, (0 until 600).map(i => (i / 6L, i % 6, s"v$i")).toDF("k", "c", "v"))
-    e.compact(t)
-    (0 until 20).foreach(i => e.execute(s"UPDATE $t SET v = 'seg$i' WHERE k = ${i * 5} AND c = 1"))
-    e.flush(t)
-    (0 until 20).foreach(i => e.execute(s"INSERT INTO $t (k, c, v) VALUES (${i * 5}, 7, 'tail$i')"))
-    e.execute(s"DELETE FROM $t WHERE k = 40 AND c = 2")
-    e
-  }
-
-  /** Spark jobs a statement's collect starts, counted through a job group. */
-  private def jobsOf(df: DataFrame): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case "pinned-read" => jobs.incrementAndGet()
-          case "pinned-marker" => marker.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("pinned-read", "read")
-      df.collect()
-      // the listener bus is ordered: once the marker job is seen, every job
-      // of the read has been seen too
-      sc.setJobGroup("pinned-marker", "marker")
-      spark.range(1).count()
-      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      jobs.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
   }
 
